@@ -1,0 +1,229 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import scala.jdk.CollectionConverters._
+
+/** Driver-loop fixpoint iteration, modelled on Spark 4.1's `UnionLoopExec`
+  * (the engine's own RepeatUnion; reference:
+  * adapter/enumerable/EnumerableRepeatUnion.java:39).
+  *
+  * Every round is its own small plan over the previous round's
+  * materialized result, and the module picks how that result is held:
+  *  - '''small''' — at most [[localRowCap]] rows: collected with a bounded
+  *    `limit(cap + 1).collect()` into a driver `LocalRelation`. The next
+  *    round's filters and projections then fold in the optimizer with no
+  *    job at all, and its joins run as one small job;
+  *  - '''large''' — anything over the cap: `localCheckpoint`ed at the
+  *    session's own parallelism, the only form that holds what the driver
+  *    cannot.
+  * A loop that has gone large stays large, so a large input pays the
+  * collect attempt once, not every round.
+  *
+  * The module releases every checkpoint a round supersedes, and on a
+  * throwing step everything the loop still holds. It sets no session conf.
+  */
+object Fixpoint {
+
+  /** One materialized round: `rows` is defined iff it lives on the driver
+    * (then `df` is a `LocalRelation` over them). */
+  final class Round private[Fixpoint] (
+      val df: DataFrame, val rows: Option[IndexedSeq[Row]]) {
+    def local: Boolean = rows.isDefined
+  }
+
+  /** Largest row count a round may hold on the driver: Spark's
+    * `spark.sql.autoBroadcastJoinThreshold` (the size Spark itself ships
+    * to every task as a broadcast) over the row's estimated size. A
+    * threshold of -1 turns the local path off. */
+  def localRowCap(df: DataFrame): Long = {
+    val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    math.min(math.max(0L, bytes / math.max(1, df.schema.defaultSize)), Int.MaxValue - 1L)
+  }
+
+  /** Materializes `df` on the driver when it has at most [[localRowCap]]
+    * rows (and `tryLocal`), else as a local checkpoint. */
+  def materialize(df: DataFrame, tryLocal: Boolean = true): Round = {
+    val rows = if (tryLocal) collectUpTo(df, localRowCap(df)) else None
+    rows match {
+      case Some(rs) => new Round(frame(df.sparkSession, df.schema, rs), Some(rs))
+      case None => new Round(checkpoint(df)._1, None)
+    }
+  }
+
+  /** Frees a round's pinned blocks (a local round holds none). */
+  def release(r: Round): Unit = if (!r.local) Checkpoints.release(r.df)
+
+  /** State fixpoint: `state = step(state)` until `measure` of the state
+    * stops changing, or after `maxIter` rounds (`maxIter < 0`: unbounded).
+    * `measure` must change whenever the state does (a row-set fingerprint,
+    * or a monotone quantity). Each superseded state is released; the
+    * returned round is the caller's to release. */
+  def iterate(init: DataFrame, maxIter: Int = -1)(step: Round => DataFrame)
+      (measure: Round => Any): Round = {
+    var state = materialize(init)
+    try {
+      var m = measure(state)
+      var i = 0
+      var done = false
+      while (!done && (maxIter < 0 || i < maxIter)) {
+        val next = materialize(step(state), tryLocal = state.local)
+        release(state)
+        state = next
+        val m2 = measure(state)
+        done = m2 == m
+        m = m2
+        i += 1
+      }
+      state
+    } catch { case e: Throwable => release(state); throw e }
+  }
+
+  /** UNION-distinct fixpoint (RepeatUnion's contract):
+    * seed ∪ step(seed) ∪ step²(seed) ∪ … — semi-naive, so each round
+    * applies `step` once to the previous round's NEW rows only. Stops when
+    * a round adds no row or after `maxIter` rounds (`maxIter < 0`:
+    * unbounded, like RepeatUnion.iterationLimit).
+    *
+    * While the accumulated set fits under [[localRowCap]], it is a
+    * driver-side set with `except`'s row equality (see [[key]]) and each
+    * delta a `LocalRelation`. Past the cap — or when a round changes the
+    * row type, which only the engine's union widening can follow — the
+    * loop continues as `localCheckpoint` + `except(acc)` rounds. */
+  def unionDistinct(seed: DataFrame, step: DataFrame => DataFrame,
+      maxIter: Int): DataFrame = {
+    val spark = seed.sparkSession
+    var schema = seed.schema
+    val cap = localRowCap(seed)
+    val acc = new java.util.LinkedHashMap[Any, Row]()
+    def absorb(rows: Array[Row]): IndexedSeq[Row] = rows.iterator.map(canonRow)
+      .filter(r => acc.putIfAbsent(key(r), r) == null).toIndexedSeq
+    def accFrame = frame(spark, schema, acc.values.asScala.toIndexedSeq)
+    var delta = collectUpTo(seed, cap) match {
+      case Some(rows) => absorb(rows)
+      case None => return large(seed.distinct(), None, step, maxIter)
+    }
+    var i = 0
+    while (delta.nonEmpty && (maxIter < 0 || i < maxIter)) {
+      val input = frame(spark, schema, delta)
+      val cand = step(input)
+      val rows =
+        if (cand.schema.map(_.dataType) == schema.map(_.dataType)) collectUpTo(cand, cap)
+        else None
+      rows.foreach { rs =>
+        schema = orNullable(schema, cand.schema)
+        delta = absorb(rs)
+        i += 1
+      }
+      if (rows.isEmpty || acc.size > cap)
+        // candidates that did not fit: this round again, on the large path
+        return large(accFrame, Some(if (rows.isEmpty) input else frame(spark, schema, delta)),
+          step, if (maxIter < 0) maxIter else maxIter - i)
+    }
+    accFrame
+  }
+
+  /** Large rounds merge into one checkpoint every this many rounds: a
+    * union chain longer than this makes each round's `except` plan deep,
+    * a shorter one re-copies the accumulator too often. */
+  private val CompactEvery = 8
+
+  /** The large path of [[unionDistinct]]: `acc0` is the set so far,
+    * `delta0` the rows the next round expands (`None`: all of `acc0`). */
+  private def large(acc0: DataFrame, delta0: Option[DataFrame],
+      step: DataFrame => DataFrame, maxIter: Int): DataFrame = {
+    var acc = checkpoint(acc0)._1
+    var accCkpt = acc // last checkpointed ancestor of acc's union chain
+    var delta = delta0.getOrElse(acc)
+    // whether delta's blocks back acc's plan (until the next compaction)
+    var deltaInAcc = delta0.isEmpty
+    // deltas superseded as step inputs but still unioned into acc's plan:
+    // releasable only once acc is compacted past them
+    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
+    try {
+      var i = 0
+      var done = false
+      while (!done && (maxIter < 0 || i < maxIter)) {
+        // except's output is already distinct (set semantics)
+        val (next, n) = checkpoint(step(delta).except(acc))
+        if (!deltaInAcc) Checkpoints.release(delta)
+        else if (delta ne accCkpt) retired += delta
+        delta = next
+        deltaInAcc = false
+        done = n == 0
+        if (done) Checkpoints.release(delta)
+        else {
+          acc = acc.union(delta)
+          deltaInAcc = true
+          i += 1
+          if (i % CompactEvery == 0) {
+            // compacted is materialized: the old base and every retired
+            // delta have left acc's plan, and so has the current delta,
+            // which stays live as the next round's input
+            val compacted = checkpoint(acc)._1
+            Checkpoints.release(accCkpt)
+            retired.foreach(Checkpoints.release)
+            retired.clear()
+            acc = compacted
+            accCkpt = compacted
+            deltaInAcc = false
+          }
+        }
+      }
+      if (!deltaInAcc) Checkpoints.release(delta)
+      // acc's leaves (accCkpt + the deltas since) back the returned plan
+      acc.distinct()
+    } catch {
+      case e: Throwable =>
+        Checkpoints.release(acc); retired.foreach(Checkpoints.release)
+        Checkpoints.release(delta)
+        throw e
+    }
+  }
+
+  /** `limit(cap + 1).collect()`: the rows when there are at most `cap`. */
+  private def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
+    if (cap <= 0) None
+    else Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+
+  private def checkpoint(df: DataFrame): (DataFrame, Long) =
+    org.apache.spark.sql.GraftBridge.localCheckpoint(df)
+
+  private def frame(spark: SparkSession, schema: StructType,
+      rows: IndexedSeq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** `a` with each top-level field nullable when it is in `a` or `b`. */
+  private def orNullable(a: StructType, b: StructType): StructType =
+    StructType(a.fields.zip(b.fields).map { case (x, y) =>
+      StructField(x.name, x.dataType, x.nullable || y.nullable, x.metadata)
+    })
+
+  /** The row `except` and `distinct` output for a row: Spark's
+    * NormalizeFloatingNumbers folds -0.0 into 0.0 and every NaN bit
+    * pattern into one NaN, inside structs and arrays too. */
+  private def canonRow(r: Row): Row = Row.fromSeq(r.toSeq.map(canon))
+
+  private def canon(v: Any): Any = v match {
+    case d: Double => if (d == 0.0d) 0.0d else if (d.isNaN) Double.NaN else d
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case r: Row => canonRow(r)
+    case s: scala.collection.Seq[_] => s.map(canon)
+    case other => other
+  }
+
+  private case object NaNKey
+
+  /** Hash key with `except`'s equality for a [[canonRow]]ical row: NULL
+    * equals NULL, NaN equals NaN (JVM `==` says otherwise, hence the
+    * stand-in), binary compares by content. */
+  private def key(v: Any): Any = v match {
+    case d: Double if d.isNaN => NaNKey
+    case f: Float if f.isNaN => NaNKey
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(key)
+    case s: scala.collection.Seq[_] => s.map(key)
+    case other => other
+  }
+}

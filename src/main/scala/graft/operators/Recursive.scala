@@ -10,133 +10,32 @@ import org.apache.spark.sql.functions._
   * adapter/enumerable/EnumerableRepeatUnion.java:39; RelBuilder surface
   * tools/RelBuilder.java:1867 `repeatUnion` / :1822 `transientScan`).
   *
-  * Spark has no fixpoint operator, so we drive the iteration from the
-  * driver: acc/delta loop with `except` for UNION-DISTINCT semantics,
-  * mirroring EnumerableRepeatUnion's iteration-limit contract.
-  *
-  * Scale posture: each iteration is a distributed job; `localCheckpoint`
-  * truncates the growing lineage every few steps (otherwise the plan tree —
-  * and closure serialization — grows linearly with depth and the planner
-  * becomes the bottleneck long before the data does). The accumulator is
-  * never collected to the driver; only the empty-delta test runs an action.
+  * Spark's native recursion (`UnionLoop`) accepts only UNION ALL
+  * (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`), so the UNION-DISTINCT form is
+  * a driver loop: [[graft.Fixpoint.unionDistinct]], one level per round,
+  * modelled on `UnionLoopExec`. A round whose rows fit Spark's broadcast
+  * size lives on the driver as a `LocalRelation` (the next level's
+  * filters and projections fold with no job); a larger one is
+  * checkpointed and deduplicated with `except` at the session's own
+  * parallelism. The loop changes no session conf.
   */
 object Recursive {
 
   /** UNION-DISTINCT repeat-union: seed ∪ step(seed) ∪ step²(seed) ∪ ...
     * Stops when the step yields no new rows or after maxIter iterations
     * (maxIter < 0 ⇒ unbounded, like RepeatUnion.iterationLimit).
-    *
-    * Batched semi-naive evaluation: each driver round expands the delta
-    * `unroll` levels at once (delta' = ⋃_{j=1..unroll} stepʲ(delta), minus
-    * acc). For a linear recursive step this computes the identical fixpoint
-    * — every new row still enters a delta and is expanded the following
-    * round — but pays the per-round driver/scheduler floor (checkpoint +
-    * emptiness probe) once per `unroll` levels instead of once per level.
-    * A 100-level series thus runs ~unroll× fewer Spark jobs; at true scale
-    * the same batching bounds the number of barrier rounds on the cluster.
-    */
+    * `bucketAcc` selects the bucketed-accumulator loop below. The result's
+    * checkpoints, if any, are released by the next call with the same
+    * `tag` (or `Checkpoints.releaseAll`). */
   def repeatUnion(
       seed: DataFrame,
       step: DataFrame => DataFrame,
       maxIter: Int = 100,
-      checkpointEvery: Int = 8,
-      unroll: Int = 8,
       tag: String = "anon",
-      narrowDeltas: Boolean = true,
-      bucketAcc: Boolean = false): DataFrame = {
-    if (bucketAcc)
-      // wide-delta strategy: runs at the session's full parallelism by
-      // construction, so narrowDeltas is irrelevant on this path
-      return repeatUnionBucketed(seed, step, maxIter, checkpointEvery,
-        unroll, tag)
-    val spark = seed.sparkSession
-    // narrowDeltas=true (the default): iteration deltas are tiny relative
-    // to the cluster; the per-iteration floor is scheduler overhead, so run
-    // the loop's shuffles at minimal width and restore the session's
-    // setting afterwards. A DATA-DOMINANT fixpoint (deltas of millions of
-    // rows — transitive closure over a fact-sized edge set) must pass
-    // narrowDeltas=false to keep the session's parallelism, AQE and
-    // codegen: 1-partition shuffles on wide deltas serialize the whole
-    // loop onto one core (measured in tools/RecursiveScale — the ×50
-    // closure runs 4.3× slower narrow than wide: 1136 s vs 263 s;
-    // SCALING.md "iterate-to-fixpoint" section).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevWsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    val prevFac = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    if (narrowDeltas) {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      // AQE's per-stage re-planning is pure overhead on the loop's tiny
-      // shuffles; the deltas are single-partition by construction.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // The unrolled round plan is a few hundred operators over a handful
-      // of rows; Janino-compiling a fresh WholeStageCodegen body per round
-      // costs ~1s each — 3-4× the whole loop. Interpreted eval is
-      // microseconds on these deltas, so run the loop uncompiled. (A
-      // recursive step with LARGE deltas trades the other way —
-      // narrowDeltas=false.)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
-    try {
-      var acc = seed.distinct().localCheckpoint(eager = true)
-      var accCkpt = acc // last checkpointed ancestor of acc's union chain
-      var delta = acc
-      // deltas superseded as step inputs but still unioned into acc's
-      // lineage — releasable only once acc re-checkpoints past them;
-      // pinned-checkpoint blocks never free themselves (r7 verdict #3)
-      val retired = scala.collection.mutable.Buffer.empty[DataFrame]
-      var i = 0
-      var round = 0
-      var done = false
-      while (!done && (maxIter < 0 || i < maxIter)) {
-        val levels = if (maxIter < 0) unroll else math.min(unroll, maxIter - i)
-        // Unroll `levels` applications of step inside ONE job: the union of
-        // all intermediate levels is the round's candidate set.
-        var d = delta
-        val parts = Seq.newBuilder[DataFrame]
-        var j = 0
-        while (j < levels) { d = step(d); parts += d; j += 1 }
-        // The delta is checkpointed eagerly, so the emptiness probe and the
-        // next round read materialized partitions instead of replaying the
-        // whole lineage chain each round.
-        // except's output is already distinct (set semantics) — no separate
-        // distinct() pass needed on the union
-        val next = parts.result().reduce(_ union _)
-          .except(acc).localCheckpoint(eager = true)
-        if (delta ne acc) retired += delta
-        delta = next
-        done = delta.isEmpty
-        if (done) {
-          // the terminal empty delta never joins acc's lineage — free it
-          graft.Checkpoints.release(delta)
-        } else {
-          acc = acc.union(delta)
-          if (round % checkpointEvery == checkpointEvery - 1) {
-            val compacted = acc.localCheckpoint(eager = true)
-            // compacted is materialized: the old checkpoint base and every
-            // retired delta have left the live lineage (the CURRENT delta
-            // — next round's step input — was not retired yet)
-            graft.Checkpoints.release(accCkpt)
-            retired.foreach(graft.Checkpoints.release)
-            retired.clear()
-            acc = compacted
-            accCkpt = compacted
-          }
-          i += levels
-          round += 1
-        }
-      }
-      // remaining leaves (accCkpt + un-compacted deltas) back the returned
-      // plan; the next repeatUnion with the same tag releases them
-      graft.Checkpoints.superseding(s"repeat_union/$tag", acc.distinct())
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWsc)
-      spark.conf.set("spark.sql.codegen.factoryMode", prevFac)
-    }
-  }
+      bucketAcc: Boolean = false): DataFrame =
+    graft.Checkpoints.superseding(s"repeat_union/$tag",
+      if (bucketAcc) repeatUnionBucketed(seed, step, maxIter)
+      else graft.Fixpoint.unionDistinct(seed, step, maxIter))
 
   /** Bucketed-accumulator semi-naive loop — the r16 SCALING.md mitigation
     * for the one measured super-linear edge (the ×100 wide closure's
@@ -149,10 +48,12 @@ object Recursive {
     * clustering). Each round's "except acc" becomes a chain of
     * CO-PARTITIONED shuffled-hash LEFT ANTI joins against the pieces:
     * the candidate set shuffles once (it must anyway), the accumulator
-    * side shuffles and sorts ZERO times. Pieces older than the current
-    * delta merge into one (a single acc-wide shuffle) every
-    * `checkpointEvery` rounds — amortizing what the except paid per
-    * round — and the merged-out checkpoints release immediately.
+    * side shuffles and sorts ZERO times. Each round expands
+    * `BucketedLevels` levels at once (the batching the ×50 calibration
+    * ran with). Pieces older than the current delta merge into one (a
+    * single acc-wide shuffle) every `BucketedMergeEvery` rounds —
+    * amortizing what the except paid per round — and the merged-out
+    * checkpoints release immediately.
     *
     * Row equality is === (null-UNSAFE), not <=>: Spark extracts
     * null-safe join keys as coalesce-wrapped expressions, which no
@@ -163,13 +64,13 @@ object Recursive {
     * distinct dedupes), but fixpoint DETECTION degrades to maxIter.
     * Closure keys are null-free by construction; pass null-producing
     * steps through the default path instead. */
+  private val BucketedLevels = 5
+  private val BucketedMergeEvery = 8
+
   private def repeatUnionBucketed(
       seed: DataFrame,
       step: DataFrame => DataFrame,
-      maxIter: Int,
-      checkpointEvery: Int,
-      unroll: Int,
-      tag: String): DataFrame = {
+      maxIter: Int): DataFrame = {
     val spark = seed.sparkSession
     val names = seed.columns.toSeq
     // the anti-join chain renames piece columns with this suffix; a seed
@@ -205,7 +106,8 @@ object Recursive {
       var round = 0
       var done = false
       while (!done && (maxIter < 0 || i < maxIter)) {
-        val levels = if (maxIter < 0) unroll else math.min(unroll, maxIter - i)
+        val levels =
+          if (maxIter < 0) BucketedLevels else math.min(BucketedLevels, maxIter - i)
         var d = delta
         val parts = Seq.newBuilder[DataFrame]
         var j = 0
@@ -224,7 +126,7 @@ object Recursive {
           // merge everything EXCEPT the newest delta (still live as the
           // next round's step input); the merged-out checkpoints are gone
           // from the live list, so releasing them is safe
-          if (round % checkpointEvery == checkpointEvery - 1 && pieces.tail.size > 1) {
+          if (round % BucketedMergeEvery == BucketedMergeEvery - 1 && pieces.tail.size > 1) {
             val older = pieces.tail
             val compacted = older.reduce(_ union _)
               .repartition(p, keys: _*).localCheckpoint(eager = true)
@@ -237,8 +139,7 @@ object Recursive {
       }
       // pieces are disjoint, but keep the terminal distinct for exact parity
       // with the default path's set semantics (and the === null caveat)
-      graft.Checkpoints.superseding(s"repeat_union/$tag",
-        pieces.reduce(_ union _).distinct())
+      pieces.reduce(_ union _).distinct()
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
@@ -256,13 +157,10 @@ object Recursive {
         |SELECT n, n * n AS n_sq FROM r""") { (s, dir) =>
       import s.implicits._
       val seed = Seq(1).toDF("n")
-      // deep, cheap levels: unroll 25 per round → 5 driver rounds for the
-      // 100-level series instead of 100. r17 probed 15/25/50: 15 and 25
-      // measure the same (the per-round checkpoint+probe floor dominates),
-      // 50 is 1.8x SLOWER (plan size grows O(unroll²) and Catalyst's
-      // per-round analyze/optimize pass with it) — 25 is the plateau.
+      // every level is one row on the driver: the step folds into the next
+      // LocalRelation in the optimizer, so the 100 rounds launch no job
       repeatUnion(seed, d => d.where(col("n") < 100).select((col("n") + 1).as("n")),
-        unroll = 25, tag = "recursive_series")
+        tag = "recursive_series")
         .select(col("n"), (col("n") * col("n")).as("n_sq"))
     },
 
@@ -282,31 +180,32 @@ object Recursive {
         |)
         |SELECT start_k, node FROM reach""") { (s, dir) =>
       val nation = Tables.t(s, dir, "nation")
-      val edges = nation.where(col("n_nationkey") > 0)
-        .select(col("n_nationkey").as("src"), (col("n_nationkey") - 1).as("dst"))
-        .localCheckpoint(eager = true)
+      val edges = graft.Fixpoint.materialize(nation.where(col("n_nationkey") > 0)
+        .select(col("n_nationkey").as("src"), (col("n_nationkey") - 1).as("dst")))
       val seed = nation.select(col("n_nationkey").as("start_k"), col("n_nationkey").as("node"))
-      val res = repeatUnion(seed, d =>
+      // 25 nations: delta and edges are driver-local, and with both sides
+      // in one partition the shuffle_hash join needs no exchange, so each
+      // level is one single-task job
+      try repeatUnion(seed, d =>
         // alias both sides: the delta's `node` descends from edges' `dst`,
         // so an unaliased self-join is ambiguous to the analyzer
-        d.alias("r").join(edges.alias("e"), col("r.node") === col("e.src"))
+        d.coalesce(1).alias("r")
+          .join(edges.df.coalesce(1).alias("e").hint("shuffle_hash"),
+            col("r.node") === col("e.src"))
           .select(col("r.start_k").as("start_k"), col("e.dst").as("node")),
-        // join-per-level step: keep the unrolled plan shallow (each branch
-        // chains j joins, so plan size grows O(unroll²))
-        maxIter = 50, unroll = 8, tag = "recursive_closure")
-      // every delta is checkpointed, so the returned plan's leaves no
-      // longer reference the edge table — free its pinned blocks now
-      graft.Checkpoints.release(edges)
-      res
+        maxIter = 50, tag = "recursive_closure")
+      // the result is materialized round by round; its plan no longer
+      // reads the edge relation
+      finally graft.Fixpoint.release(edges)
     },
 
     // ---- NATIVE recursion: the same fixpoints as ONE dual-engine SQL ------
     // Spark 4.1 executes WITH RECURSIVE natively (UnionLoop — the engine's
     // own RepeatUnion analogue), so the reference's recursive surface also
     // runs as plain SQL text shared verbatim with the oracle. The
-    // driver-loop repeatUnion above remains the LIBRARY path: programmatic
-    // step functions, unroll batching, checkpoint discipline — things the
-    // SQL surface cannot express.
+    // driver-loop repeatUnion above remains the LIBRARY path: UNION
+    // (distinct) semantics, which native recursion rejects, and
+    // programmatic step functions.
     QDef.common("recursive_series_native",
       """WITH RECURSIVE r(n) AS (
         |  SELECT 1 AS n

@@ -420,88 +420,63 @@ object Dedup {
     * step after pair generation in a real corpus-dedup pipeline: clusters,
     * not pairs, decide which single representative survives.
     *
-    * Scale: per round one join labels⋈edges + one min-aggregate — both
-    * shuffle on node id; rounds = graph diameter (near-dup components are
-    * shallow). No driver-side graph state; the label frame is checkpointed
-    * per round like [[graft.operators.Recursive.repeatUnion]].
+    * The rounds run through [[graft.Fixpoint.iterate]]: per round one
+    * labels⋈edges join, one pointer-jump self-join and one min-aggregate;
+    * rounds = O(log diameter) (near-dup components are shallow). While the
+    * label state and the edges fit Spark's broadcast size they live on the
+    * driver, and both sides of every join are one partition under
+    * `shuffle_hash`, so a round is one single-task job with no exchange.
+    * Larger states are checkpointed and shuffle on node id at the
+    * session's own parallelism. No session conf is changed.
     */
   def clusters(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevWsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Per-round Janino compilation of the join+agg stages costs more than
-    // interpreting them over the (small) label table — same trade as the
-    // recursion loop in operators.Recursive.
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // both directions from ONE pass over the pairs (a union would
+    // compute the pair join twice)
+    val edges = graft.Fixpoint.materialize(pairs.select(explode(array(
+      struct(col("id_a").as("src"), col("id_b").as("dst")),
+      struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e")).select("e.*"))
     try {
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .localCheckpoint(eager = true)
-      var labels = edges.select(col("src").as("id")).distinct()
+      def one(df: DataFrame) = if (edges.local) df.coalesce(1) else df
+      val init = one(edges.df).select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl"))
-        .localCheckpoint(eager = true)
-      // Convergence check: every candidate set includes the node's own
-      // label, so labels decrease monotonically under the min-fold and
-      // Σ lbl strictly decreases iff any node changed. Comparing the sum
-      // over the already-checkpointed frame costs one small scan per
-      // round — no labels⋈labels join. (Decimal sum: immune to overflow
-      // at any node-id scale.)
-      def labelSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head().getDecimal(0)
-      var prevSum = labelSum(labels)
-      var changed = true
-      val roundTimer = sys.env.contains("GRAFT_CLUSTERS_ROUNDS")
-      var roundNo = 0
-      var tRound = System.nanoTime()
-      while (changed) {
-        if (roundTimer) {
-          val now = System.nanoTime()
-          System.err.println(f"[clusters] round $roundNo: ${(now - tRound) / 1e9}%.2f s")
-          tRound = now; roundNo += 1
-        }
+      val labels = graft.Fixpoint.iterate(init) { state =>
+        val small = state.local && edges.local
+        def side(df: DataFrame) = if (small) df.coalesce(1) else df
+        def build(df: DataFrame) = if (small) side(df).hint("shuffle_hash") else df
+        val l = side(state.df)
         // Candidate labels per node, min-folded in ONE aggregation:
         //  - its own label,
         //  - its neighbors' labels (edge propagation),
         //  - its label's label (pointer jump / path halving — labels are
         //    node ids, so following lbl one more hop is a join back onto
-        //    the checkpointed label table).
+        //    the label table).
         // The jump turns convergence from O(diameter) into O(log diameter)
-        // rounds on chain-shaped duplicate clusters while keeping the loop
-        // at one shuffle + one checkpoint per round.
-        val jump = labels
-          .join(labels.select(col("id").as("jid"), col("lbl").as("jlbl")),
+        // rounds on chain-shaped duplicate clusters.
+        val jump = l
+          .join(build(state.df.select(col("id").as("jid"), col("lbl").as("jlbl"))),
             col("lbl") === col("jid"))
           .select(col("id"), col("jlbl").as("lbl"))
-        val prop = labels.alias("l")
-          .join(edges.alias("e"), col("l.id") === col("e.src"))
+        side(l.alias("l")
+          .join(build(edges.df.alias("e")), col("l.id") === col("e.src"))
           .select(col("e.dst").as("id"), col("l.lbl").as("lbl"))
-          .unionByName(labels)
-          .unionByName(jump)
+          .unionByName(l)
+          .unionByName(jump))
           .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint(eager = true)
-        val newSum = labelSum(prop)
-        changed = newSum.compareTo(prevSum) != 0
-        prevSum = newSum
-        // prop is materialized (eager) — the previous round's pinned
-        // blocks are now unreachable from any live plan; release them or
-        // every rep of a long-lived session accumulates one dead label
-        // frame per round (the r7 monotone rep growth)
-        graft.Checkpoints.release(labels)
-        labels = prop
+      } { state =>
+        // Convergence: every candidate set includes the node's own label,
+        // so labels only decrease and Σ lbl changes iff any node changed.
+        // (Decimal sum on the large path: immune to overflow.)
+        state.rows match {
+          case Some(rows) => rows.foldLeft(BigInt(0))(_ + _.getAs[Number](1).longValue)
+          case None => BigInt(state.df.agg(sum(col("lbl").cast(DecimalType(38, 0))))
+            .head().getDecimal(0).toBigInteger)
+        }
       }
-      // the fixpoint no longer reads edges; only the final label frame
-      // backs the returned plan, and the NEXT invocation releases it
-      graft.Checkpoints.release(edges)
+      // only the final label frame backs the returned plan; the NEXT
+      // invocation releases it
       graft.Checkpoints.superseding("dedup_clusters",
-        labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWsc)
-    }
+        labels.df.select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
+    } finally graft.Fixpoint.release(edges)
   }
 
   /** Calibrated peak-scratch cost per raw in-bucket candidate pair across

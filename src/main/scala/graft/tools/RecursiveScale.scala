@@ -22,21 +22,17 @@ import org.apache.spark.sql.functions._
   * measured exponent should be ~1; the measured points live in SCALING.md
   * next to the minhash calibration.
   *
-  * `narrow` mode runs the same closure through the loop's small-delta
-  * configuration (1-partition shuffles, no codegen) to quantify why
-  * data-dominant fixpoints must pass narrowDeltas=false.
-  *
-  * Usage: runMain graft.tools.RecursiveScale [sfDir] [wide|narrow]
+  * Usage: runMain graft.tools.RecursiveScale [sfDir] [wide|bucketed]
   */
 object RecursiveScale {
 
   /** (start_k, node) pairs of the orders key-chain closure.
-    * `mode`: "wide" (narrowDeltas=false), "narrow" (the scale-trap
-    * configuration), or "bucketed" (r17: the bucketed-accumulator loop —
-    * co-partitioned anti-join chain instead of except-against-acc). */
+    * `mode`: "wide" (the default loop, [[graft.Fixpoint.unionDistinct]])
+    * or "bucketed" (r17: the bucketed-accumulator loop — co-partitioned
+    * anti-join chain instead of except-against-acc). */
   def closure(spark: SparkSession, dir: String, mode: String): DataFrame = {
-    require(Set("wide", "narrow", "bucketed")(mode),
-      s"unknown mode '$mode' (wide | narrow | bucketed)")
+    require(Set("wide", "bucketed")(mode),
+      s"unknown mode '$mode' (wide | bucketed)")
     val orders = Tables.t(spark, dir, "orders").select(col("o_orderkey").as("k"))
     val edges = orders.where(pmod(col("k"), lit(10)) =!= 0)
       .select(col("k").as("src"), (col("k") - 1).as("dst"))
@@ -45,9 +41,7 @@ object RecursiveScale {
     val res = Recursive.repeatUnion(seed, d =>
       d.alias("r").join(edges.alias("e"), col("r.node") === col("e.src"))
         .select(col("r.start_k").as("start_k"), col("e.dst").as("node")),
-      maxIter = 12, unroll = 5, tag = "recursive_scale",
-      narrowDeltas = mode == "narrow",
-      bucketAcc = mode == "bucketed")
+      maxIter = 12, tag = "recursive_scale", bucketAcc = mode == "bucketed")
     graft.Checkpoints.release(edges)
     res
   }

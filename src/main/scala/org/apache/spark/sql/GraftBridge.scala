@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Access bridge for extension libraries: Column ↔ Expression conversion
   * is `private[sql]` in Spark 4 (classic.ExpressionUtils); this re-exports
@@ -9,4 +11,30 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** An eager local checkpoint of `df` and its row count, for fixpoint
+    * rounds. It differs from `Dataset.localCheckpoint` in two ways:
+    *  - it carries none of `df`'s constraints. `LogicalRDD.fromDataset`
+    *    maps them onto the new output by attribute equality, which
+    *    includes the qualifier, so a constraint on a column the optimizer
+    *    de-aliased (`r.start_k AS start_k` over a self-join) keeps the old
+    *    exprId, and a later union of such checkpoints fails constraint
+    *    propagation (`key not found` in Union.rewriteConstraints). Its
+    *    statistics are the exact row count instead;
+    *  - when materializing throws, the blocks already pinned are freed. */
+  def localCheckpoint(df: DataFrame): (DataFrame, Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val (rdd, n) = SQLExecution.withNewExecutionId(ds.queryExecution, Some("localCheckpoint")) {
+      val rdd = ds.queryExecution.toRdd.map(_.copy())
+      rdd.localCheckpoint()
+      try (rdd, rdd.count())
+      catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+    }
+    val session = ds.sparkSession
+    val stats = Statistics(
+      sizeInBytes = BigInt(n) * math.max(1, df.schema.defaultSize), rowCount = Some(n))
+    val plan = LogicalRDD(ds.queryExecution.analyzed.output.map(_.newInstance()), rdd)(
+      session, Some(stats), None)
+    (classic.Dataset.ofRows(session, plan), n)
+  }
 }

@@ -1,0 +1,189 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The fixpoint module's contract: UNION-distinct semantics with
+  * `except`'s row equality, the iteration limit, identical results on the
+  * driver-local and the checkpoint path, and a session left as it was
+  * found — same conf, no pinned blocks — after success and after a
+  * throwing step. */
+class FixpointSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Runs `f` with the broadcast threshold off, which turns the local
+    * path off; restores the session's setting afterwards. */
+  private def onCheckpointPath[T](f: => T): T = {
+    val prev = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try f finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
+
+  private def rows(df: DataFrame): Seq[String] = {
+    val out = df.collect().map(_.toString).sorted.toSeq
+    Checkpoints.release(df)
+    out
+  }
+
+  /** Both paths' results, after asserting they agree. */
+  private def bothPaths(seed: => DataFrame, step: DataFrame => DataFrame,
+      maxIter: Int = 50): Seq[String] = {
+    val local = rows(Fixpoint.unionDistinct(seed, step, maxIter))
+    val ckpt = onCheckpointPath(rows(Fixpoint.unionDistinct(seed, step, maxIter)))
+    assert(local == ckpt, "local and checkpoint paths disagree")
+    local
+  }
+
+  private def edges: DataFrame = {
+    val s = spark
+    import s.implicits._
+    // 1 → 2 → 3 → 1 is a cycle; 3 → 4 leaves it
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+  }
+
+  private def reachStep(e: DataFrame)(d: DataFrame): DataFrame =
+    d.alias("r").join(e.alias("e"), col("r.node") === col("e.src"))
+      .select(col("r.start_k").as("start_k"), col("e.dst").as("node"))
+
+  test("UNION fixpoint over a cyclic edge set terminates (native recursion rejects it)") {
+    val s = spark
+    import s.implicits._
+    edges.createOrReplaceTempView("fixpoint_edges")
+    val ex = intercept[Exception] {
+      spark.sql(
+        """WITH RECURSIVE reach(start_k, node) AS (
+          |  SELECT src, src FROM fixpoint_edges
+          |  UNION
+          |  SELECT r.start_k, e.dst FROM reach r JOIN fixpoint_edges e ON r.node = e.src
+          |)
+          |SELECT * FROM reach""".stripMargin).collect()
+    }
+    assert(ex.getMessage.contains("UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE"), ex.getMessage)
+    val seed = Seq(1L, 2L, 3L).toDF("k").select(col("k").as("start_k"), col("k").as("node"))
+    val got = bothPaths(seed, reachStep(edges), maxIter = -1)
+    val expected = for (a <- Seq(1L, 2L, 3L); b <- Seq(1L, 2L, 3L, 4L)) yield Row(a, b).toString
+    assert(got == expected.sorted)
+  }
+
+  test("dedup matches except on NaN, -0.0/0.0 and NULL") {
+    val schema = StructType(Seq(
+      StructField("x", DoubleType), StructField("s", StringType)))
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    def seed = spark.createDataFrame(java.util.Arrays.asList(
+      Row(-0.0, null), Row(Double.NaN, "a"), Row(otherNaN, "a"), Row(1.0, "b"),
+      Row(null, null)), schema)
+    // negation: -0.0 → 0.0 and NaN → NaN are the same rows under except
+    // (which outputs 0.0); only 1.0 → -1.0 is new, and -1.0 → 1.0 closes
+    // the loop
+    val step = (d: DataFrame) => d.select((-col("x")).as("x"), col("s"))
+    val expected = {
+      val s0 = seed
+      rows(s0.union(step(s0)).union(step(step(s0))).distinct())
+    }
+    assert(expected.size == 5)
+    // a dedup without except's equality never converges on NaN and
+    // returns extra rows at the iteration limit
+    assert(bothPaths(seed, step) == expected)
+  }
+
+  test("maxIter is respected on both paths") {
+    val s = spark
+    import s.implicits._
+    val inc = (d: DataFrame) => d.select((col("n") + 1).as("n"))
+    for (n <- Seq(0, 1, 3))
+      assert(bothPaths(Seq(0L).toDF("n"), inc, maxIter = n) ==
+        (0 to n).map(i => Row(i.toLong).toString).sorted)
+  }
+
+  test("iterate: label propagation agrees on both paths") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 7L), (9L, 3L))
+      .toDF("id_a", "id_b")
+    val local = rows(pipeline.Dedup.clusters(pairs))
+    val ckpt = onCheckpointPath(rows(pipeline.Dedup.clusters(pairs)))
+    assert(local == ckpt)
+    assert(local == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
+      (7L, 7L), (9L, 1L)).map { case (a, b) => Row(a, b).toString })
+  }
+
+  /** Asserts that `f` leaves the session conf as it found it and adds no
+    * persistent RDD. Spark tracks persisted RDDs weakly, so a leaked
+    * checkpoint can vanish from the census once it is garbage; `f` gets
+    * `keep`, which holds every step input strongly until the census is
+    * read. (RDDs other suites leave behind may be collected meanwhile, so
+    * the census is compared by id.) */
+  private def leavesSessionClean(f: (DataFrame => DataFrame) => Unit): Unit = {
+    Checkpoints.releaseAll(spark)
+    val conf = spark.conf.getAll
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val inputs = scala.collection.mutable.Buffer.empty[DataFrame]
+    f { d => inputs += d; d }
+    assert(spark.conf.getAll == conf)
+    val added = spark.sparkContext.getPersistentRDDs -- pinned
+    assert(added.isEmpty, added.values.mkString("\n"))
+    java.lang.ref.Reference.reachabilityFence(inputs)
+  }
+
+  for (path <- Seq("local", "checkpoint")) {
+    def onPath(f: => Unit): Unit = if (path == "local") f else onCheckpointPath(f)
+
+    test(s"session is left clean after a successful run ($path path)") {
+      val s = spark
+      import s.implicits._
+      onPath {
+        leavesSessionClean { keep =>
+          val seed = Seq(1L, 2L, 3L).toDF("k").select(col("k").as("start_k"), col("k").as("node"))
+          // enough rounds to compact the checkpoint accumulator twice
+          val series = Fixpoint.unionDistinct(Seq(0L).toDF("n"),
+            d => keep(d).where(col("n") < 20).select((col("n") + 1).as("n")), -1)
+          assert(series.count() == 21)
+          Checkpoints.release(series)
+          rows(Fixpoint.unionDistinct(seed, d => reachStep(edges)(keep(d)), -1))
+          val state = Fixpoint.iterate(Seq(10L).toDF("n"))(
+            r => keep(r.df).select(greatest(col("n") - 1, lit(0L)).as("n")))(
+            r => r.df.head().getLong(0))
+          assert(state.df.head().getLong(0) == 0L)
+          Fixpoint.release(state)
+        }
+      }
+    }
+
+    test(s"session is left clean after a throwing step ($path path)") {
+      val s = spark
+      import s.implicits._
+      onPath {
+        // fails while the plan is built, after a compaction
+        leavesSessionClean { keep =>
+          var calls = 0
+          intercept[IllegalStateException] {
+            Fixpoint.unionDistinct(Seq(0L).toDF("n"), { d =>
+              calls += 1
+              if (calls > 10) throw new IllegalStateException("boom")
+              keep(d).select((col("n") + 1).as("n"))
+            }, -1)
+          }
+          intercept[IllegalStateException] {
+            Fixpoint.iterate(Seq(0L).toDF("n"))({ r =>
+              if (r.df.head().getLong(0) > 3) throw new IllegalStateException("boom")
+              keep(r.df).select((col("n") + 1).as("n"))
+            })(_.df.head().getLong(0))
+          }
+        }
+        // fails while a round executes
+        leavesSessionClean { keep =>
+          val failing = (d: DataFrame) => keep(d).select(
+            when(col("n") > 10, raise_error(lit("boom"))).otherwise(col("n") + 1).as("n"))
+          intercept[Exception](Fixpoint.unionDistinct(Seq(0L).toDF("n"), failing, -1))
+          intercept[Exception] {
+            Fixpoint.iterate(Seq(0L).toDF("n"))(r => failing(r.df))(_.df.head().getLong(0))
+          }
+        }
+      }
+    }
+  }
+}

@@ -5,11 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The RecursiveScale calibration workload (r14 VERDICT #7) computes the
   * right fixpoint: the repeatUnion orders key-chain closure must equal
-  * Spark's native WITH RECURSIVE over the same edge set, in BOTH delta
-  * modes (narrowDeltas=false is the data-dominant path SCALING.md
-  * measures; flipping the flag must never change the result, only the
-  * physical loop configuration). Closure size has a closed form on the
-  * contiguous fixture keys — Σ(k%10+1) — pinned as an independent check.
+  * Spark's native WITH RECURSIVE over the same edge set, on the default
+  * loop and the bucketed accumulator. The default loop runs once with the
+  * session's settings (this fixture's closure fits on the driver) and
+  * once with the broadcast threshold off, which forces its checkpoint +
+  * `except` path — the one data-dominant fixpoints take. Closure size has
+  * a closed form on the contiguous fixture keys — Σ(k%10+1) — pinned as
+  * an independent check.
   */
 class RecursiveScaleSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -36,15 +38,27 @@ class RecursiveScaleSpec extends AnyFunSuite {
     assert(native.length.toLong == expected)
   }
 
-  for (mode <- Seq("narrow", "wide", "bucketed"))
+  private def assertNative(mode: String): Unit = {
+    val got = RecursiveScale.closure(spark, sfDir, mode)
+      .collect().map(_.toString).sorted
+    assert(got.length == native.length,
+      s"row count ${got.length} != ${native.length}")
+    assert(got.sameElements(native))
+    Checkpoints.releaseAll(spark)
+  }
+
+  for (mode <- Seq("wide", "bucketed"))
     test(s"repeatUnion closure (mode=$mode) equals native WITH RECURSIVE") {
-      val got = RecursiveScale.closure(spark, sfDir, mode)
-        .collect().map(_.toString).sorted
-      assert(got.length == native.length,
-        s"row count ${got.length} != ${native.length}")
-      assert(got.sameElements(native))
-      Checkpoints.releaseAll(spark)
+      assertNative(mode)
     }
+
+  test("repeatUnion closure on the checkpoint path equals native WITH RECURSIVE") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try assertNative("wide")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("bucketAcc rejects seed columns carrying the reserved __acc suffix") {
     import org.apache.spark.sql.functions._
