@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Per-round benchmark main: runs every registry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON metrics line.
@@ -112,10 +112,13 @@ object Bench {
   }
 
   /** The full artifact: per-query medians (back-compat scalar map) plus
-    * per-query mins, every raw rep list, and the calibration-probe trace. */
+    * per-query mins, every raw rep list, the calibration-probe trace, and
+    * each query's Janino compile count over all its reps (a warm codegen
+    * cache compiles nothing after the first rep). */
   def renderFull(total: Double, results: Seq[(String, Option[Double])], sfDir: String,
       reps: Map[String, Seq[Double]] = Map.empty,
-      probe: Seq[Double] = Nil): String = {
+      probe: Seq[Double] = Nil,
+      compiles: Map[String, Long] = Map.empty): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmtOpt(v) }
       .mkString("{", ",", "}")
     val minTotal = results.collect { case (k, Some(_)) =>
@@ -129,7 +132,10 @@ object Bench {
       .mkString("{", ",", "}")
     val probeJson = "{\"every\":" + ProbeEvery + ",\"times\":[" +
       probe.map(fmt).mkString(",") + "]}"
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","value_min":${fmt(minTotal)},"n":${results.size},"failed":${failedList(results)},"probe":$probeJson,"queries":$qs,"mins":$mins,"reps":$allReps,"sf":"$sfDir"}"""
+    val compileCounts = results.map { case (k, _) =>
+      "\"" + k + "\":" + compiles.get(k).map(_.toString).getOrElse("null") }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","value_min":${fmt(minTotal)},"n":${results.size},"failed":${failedList(results)},"probe":$probeJson,"queries":$qs,"mins":$mins,"reps":$allReps,"compiles":$compileCounts,"sf":"$sfDir"}"""
   }
 
   /** Median of the recorded reps (odd rep counts take the middle element;
@@ -148,24 +154,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner is GC-triggered: on an oversized driver heap a
-      // 333-query run never GCs, thousands of finished queries' broadcast/
-      // shuffle state accumulate, and late-registry queries degrade 5-15×
-      // (measured r17: text_chunks 0.28 s at -Xmx8g vs 3.3 s at -Xmx48g,
-      // clean CPU probes both). Forcing the cleaner's periodic GC every
-      // 5 min bounds that accumulation at ANY heap size, so the statistic
-      // measures the queries, not the runner's heap flag. (Default 30 min
-      // — longer than the whole run.)
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench", s"local[$cpus]", cpus.toInt)
     // Optional local-iteration filter; the driver leaves this unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val defs = only match {
@@ -241,6 +230,7 @@ object Bench {
 
     val timed = defs.zipWithIndex.map { case (d, idx) =>
       probeTick(idx)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       def rep(label: String): Option[Double] = {
         val t0 = System.nanoTime()
         try {
@@ -274,16 +264,18 @@ object Bench {
       val med = if (times.isEmpty) None
         else Some(median(times.sorted.take(reps)))
       val mn = if (times.isEmpty) None else Some(times.min)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       // stream per-query results to stderr so partial runs stay diagnosable
-      System.err.println(s"[bench] ${d.name}: median=${med.map(fmt).getOrElse("FAILED")}s min=${mn.map(fmt).getOrElse("-")}s reps=[${times.map(fmt).mkString(",")}]")
-      (d.name, med, times)
+      System.err.println(s"[bench] ${d.name}: median=${med.map(fmt).getOrElse("FAILED")}s min=${mn.map(fmt).getOrElse("-")}s reps=[${times.map(fmt).mkString(",")}] compiles=$compiles")
+      (d.name, med, times, compiles)
     }
     // closing probe reading bounds the trace on both ends
     val pEnd = runProbe()
     probeTimes += pEnd
     System.err.println(f"[bench] probe@end: ${pEnd}%.3fs")
-    val results = timed.map { case (n, m, _) => n -> m }
-    val allReps = timed.map { case (n, _, ts) => n -> ts }.toMap
+    val results = timed.map { case (n, m, _, _) => n -> m }
+    val allReps = timed.map { case (n, _, ts, _) => n -> ts }.toMap
+    val allCompiles = timed.map { case (n, _, _, c) => n -> c }.toMap
     val total = results.flatMap(_._2).sum
     // Full map → BENCH_FULL.json, headline line → BENCH.json (and stdout).
     // The stdout JSON line is the LAST line of the process's stdout; since
@@ -307,7 +299,7 @@ object Bench {
     val (fullName, lineName) =
       if (defs.size == SparkEntry.allDefs.size) ("BENCH_FULL.json", "BENCH.json")
       else ("SCALE_BENCH_FULL.json", "SCALE_BENCH.json")
-    writeFile(fullName, renderFull(total, results, sfDir, allReps, probeTimes.toSeq))
+    writeFile(fullName, renderFull(total, results, sfDir, allReps, probeTimes.toSeq, allCompiles))
     writeFile(lineName, renderLine(total, results, sfDir, allReps))
     // Stop BEFORE printing so shutdown log noise precedes the JSON line and
     // the ~2000-char stdout tail the consumer keeps always ends with it.

@@ -13,10 +13,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prepare, reference: core/src/main/java/org/apache/calcite/tools/RelBuilder.java,
   * prepare/CalcitePrepareImpl.java:138) resolve the same tables.
   *
-  * Scale posture: AQE on (runtime re-plan, skew-join splitting), broadcast
-  * threshold left to Spark's default, shuffle partitions sized for local[32]
-  * but overridable — on a 1000-executor cluster this is the one knob that
-  * must change (or be left to AQE coalescing).
+  * Scale posture: this is the only session factory. Bench, Verify, the
+  * tools and the test suites' shared session all build here, so they run
+  * with the same fixed settings, each for a measured reason:
+  *  - AQE on (runtime re-plan, skew-join splitting), broadcast threshold
+  *    left to Spark's default, shuffle partitions sized for local[32] but
+  *    overridable — on a 1000-executor cluster this is the one knob that
+  *    must change (or be left to AQE coalescing);
+  *  - a codegen cache of 1000 classes: one tpch_sql pass generates 311
+  *    distinct classes, one iterative_build pass 144 (local[4], sf0.01).
+  *    Spark's default of 100 evicted each before it repeated, so every pass
+  *    recompiled 324–331 classes at 11–18 ms each, 4–5 s of a 10 s pass.
+  *    Spark reads the size once per JVM, from the session active when
+  *    `CodeGenerator` first loads: a session built elsewhere could fix it
+  *    at the default for the whole JVM;
+  *  - status retention of 10 SQL executions, jobs and stages and 100 tasks:
+  *    the UI is off and nothing reads Spark's status stores. The trim pays
+  *    for the cache's heap (tpch_sql retained heap +8.7% with the cache
+  *    alone, +1–3% with both);
+  *  - Spark's TIME type on: fn_time_type needs it, and turning it on inside
+  *    one query's build changed the session for every later query;
+  *  - the ContextCleaner's periodic GC every 5 min: finished queries'
+  *    broadcast/shuffle state is freed only by a GC, which a large driver
+  *    heap rarely runs.
   */
 object Engine {
   def session(
@@ -37,7 +56,26 @@ object Engine {
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.timeType.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // Codegen working set (local[4], sf0.01): 311 distinct classes per
+      // tpch_sql pass, plus the variants other query orders generate. A
+      // cached class retains about 25 KB of heap, so 1000 cost ~25 MB.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // Status stores nothing reads (UI off); their defaults keep 1000 SQL
+      // executions, 1000 jobs, 1000 stages and 100,000 tasks.
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
+      .config("spark.ui.retainedTasks", "100")
+      // ContextCleaner is GC-triggered: on an oversized driver heap a
+      // 333-query run never GCs, thousands of finished queries' broadcast/
+      // shuffle state accumulate, and late-registry queries degrade 5-15×
+      // (measured r17: text_chunks 0.28 s at -Xmx8g vs 3.3 s at -Xmx48g,
+      // clean CPU probes both). Forcing the cleaner's periodic GC every
+      // 5 min bounds that accumulation at ANY heap size. (Default 30 min
+      // — longer than a whole registry run.)
+      .config("spark.cleaner.periodicGC.interval", "5min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

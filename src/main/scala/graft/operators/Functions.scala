@@ -240,7 +240,8 @@ object Functions {
     // ---- TIME as a first-class column type --------------------------------
     // SURVEY §1.2 decision point; reference sql/type/SqlTypeName.java:64
     // (TIME). Spark 4.1 ships a native TimeType behind
-    // spark.sql.timeType.enabled — micros-of-day internally, i.e. the
+    // spark.sql.timeType.enabled (Engine.session turns it on) —
+    // micros-of-day internally, i.e. the
     // INT-millis-of-day representation SURVEY §1.2 proposed, but engine-
     // native: literals, make_time, EXTRACT, comparison, +INTERVAL and
     // BIGINT/STRING casts all work (TimeTypeSpec pins the parquet
@@ -271,7 +272,6 @@ object Functions {
         |    || lpad(CAST((secs + 5400) % 60 AS VARCHAR), 2, '0')
         |  END AS shifted
         |FROM c""") { (s, dir) =>
-      s.conf.set("spark.sql.timeType.enabled", "true")
       t(s, dir, "events").where(col("event_id") % 3 === 0)
         .selectExpr("event_id",
           "make_time(hour(ts), minute(ts), second(ts)) AS t")

@@ -37,4 +37,9 @@ object GraftBridge {
       session, Some(stats), None)
     (classic.Dataset.ofRows(session, plan), n)
   }
+
+  /** SQL executions Spark's status store currently holds (the store is
+    * `private[sql]`); bounded by `spark.sql.ui.retainedExecutions`. */
+  def sqlExecutionsRetained(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sharedState.statusStore.executionsCount()
 }

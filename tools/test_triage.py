@@ -4,8 +4,9 @@
 Reads the JUnit XML reports sbt writes (target/test-reports/*.xml), finds
 each failing test's root cause (the innermost "Caused by:" of its stack
 trace, else the reported exception), groups failures by that cause and
-prints one line per group. Exits 1 when any failure falls outside the
-known set, 2 when there are no reports, 0 otherwise.
+prints one line per group, then the suites' summed time and the five
+slowest suites. Exits 1 when any failure falls outside the known set, 2
+when there are no reports, 0 otherwise.
 
 The known set is the environment-blocked one: a suite whose test reads
 the Calcite reference tree (REFERENCE_TREE, the path the census and .iq
@@ -57,15 +58,24 @@ def group_key(cls, message):
     return f"{cls}: {msg[:160]}"
 
 
-def failures(reports_dir):
+def suites(reports_dir):
     for path in sorted(glob.glob(os.path.join(reports_dir, "*.xml"))):
-        root = ET.parse(path).getroot()
-        for suite in root.iter("testsuite"):
-            for case in suite.iter("testcase"):
-                for kind in ("failure", "error"):
-                    for el in case.findall(kind):
-                        cls, msg = root_cause(el)
-                        yield {"suite": suite.get("name"), "kind": kind, "cause": cls, "message": msg}
+        yield from ET.parse(path).getroot().iter("testsuite")
+
+
+def failures(reports_dir):
+    for suite in suites(reports_dir):
+        for case in suite.iter("testcase"):
+            for kind in ("failure", "error"):
+                for el in case.findall(kind):
+                    cls, msg = root_cause(el)
+                    yield {"suite": suite.get("name"), "kind": kind, "cause": cls, "message": msg}
+
+
+def suite_times(reports_dir):
+    """(seconds, suite name) of every suite, slowest first."""
+    return sorted(((float(s.get("time") or 0), s.get("name")) for s in suites(reports_dir)),
+                  reverse=True)
 
 
 def main(argv):
@@ -87,6 +97,9 @@ def main(argv):
         if not g["known"]:
             for s in sorted(g["suites"]):
                 print(f"       {s}")
+    times = suite_times(reports_dir)
+    print(f"== {sum(t for t, _ in times):.0f} s over {len(times)} suites; slowest: "
+          + ", ".join(f"{name} {t:.0f} s" for t, name in times[:5]) + " ==")
     print(f"== {len(found)} failing, {unknown} outside the known set ==")
     return 1 if unknown else 0
 
