@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Per-round benchmark main: runs every registry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON metrics line.
@@ -43,6 +47,16 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * cannot trail (and truncate away) the JSON payload.
   */
 object Bench {
+
+  /** Counts the Spark jobs `spark` starts from its creation on. */
+  final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val started = new AtomicLong
+    spark.sparkContext.addSparkListener(this)
+    override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    /** Jobs started so far, once the listener bus has delivered them. */
+    def count: Long = { GraftBridge.drainListenerBus(spark); started.get }
+    def close(): Unit = spark.sparkContext.removeSparkListener(this)
+  }
 
   /** Headline queries whose per-query seconds go on the stdout JSON line:
     * the full TPC-H corpus plus one representative per major subsystem. */
@@ -113,12 +127,14 @@ object Bench {
 
   /** The full artifact: per-query medians (back-compat scalar map) plus
     * per-query mins, every raw rep list, the calibration-probe trace, and
-    * each query's Janino compile count over all its reps (a warm codegen
-    * cache compiles nothing after the first rep). */
+    * two counts per query summed over its reps: Janino compiles (a warm
+    * codegen cache compiles nothing after the first rep) and Spark jobs (a
+    * fixpoint round evaluated on the driver launches none). */
   def renderFull(total: Double, results: Seq[(String, Option[Double])], sfDir: String,
       reps: Map[String, Seq[Double]] = Map.empty,
       probe: Seq[Double] = Nil,
-      compiles: Map[String, Long] = Map.empty): String = {
+      compiles: Map[String, Long] = Map.empty,
+      jobs: Map[String, Long] = Map.empty): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmtOpt(v) }
       .mkString("{", ",", "}")
     val minTotal = results.collect { case (k, Some(_)) =>
@@ -132,10 +148,10 @@ object Bench {
       .mkString("{", ",", "}")
     val probeJson = "{\"every\":" + ProbeEvery + ",\"times\":[" +
       probe.map(fmt).mkString(",") + "]}"
-    val compileCounts = results.map { case (k, _) =>
-      "\"" + k + "\":" + compiles.get(k).map(_.toString).getOrElse("null") }
+    def counts(m: Map[String, Long]): String = results.map { case (k, _) =>
+      "\"" + k + "\":" + m.get(k).map(_.toString).getOrElse("null") }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","value_min":${fmt(minTotal)},"n":${results.size},"failed":${failedList(results)},"probe":$probeJson,"queries":$qs,"mins":$mins,"reps":$allReps,"compiles":$compileCounts,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","value_min":${fmt(minTotal)},"n":${results.size},"failed":${failedList(results)},"probe":$probeJson,"queries":$qs,"mins":$mins,"reps":$allReps,"compiles":${counts(compiles)},"jobs":${counts(jobs)},"sf":"$sfDir"}"""
   }
 
   /** Median of the recorded reps (odd rep counts take the middle element;
@@ -220,6 +236,7 @@ object Bench {
     warm("probe")(runProbe())
     System.err.println(f"[bench] warmup done in ${(System.nanoTime() - tWarm0) / 1e9}%.1fs; timing ${defs.size} queries x $reps reps (median+min, spread>${SpreadLimit}%.0fx re-measured)")
 
+    val jobCounter = new JobCounter(spark)
     val probeTimes = scala.collection.mutable.ArrayBuffer[Double]()
     def probeTick(idx: Int): Unit =
       if (idx % ProbeEvery == 0) {
@@ -231,6 +248,7 @@ object Bench {
     val timed = defs.zipWithIndex.map { case (d, idx) =>
       probeTick(idx)
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val jobs0 = jobCounter.count
       def rep(label: String): Option[Double] = {
         val t0 = System.nanoTime()
         try {
@@ -265,17 +283,19 @@ object Bench {
         else Some(median(times.sorted.take(reps)))
       val mn = if (times.isEmpty) None else Some(times.min)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val jobs = jobCounter.count - jobs0
       // stream per-query results to stderr so partial runs stay diagnosable
-      System.err.println(s"[bench] ${d.name}: median=${med.map(fmt).getOrElse("FAILED")}s min=${mn.map(fmt).getOrElse("-")}s reps=[${times.map(fmt).mkString(",")}] compiles=$compiles")
-      (d.name, med, times, compiles)
+      System.err.println(s"[bench] ${d.name}: median=${med.map(fmt).getOrElse("FAILED")}s min=${mn.map(fmt).getOrElse("-")}s reps=[${times.map(fmt).mkString(",")}] compiles=$compiles jobs=$jobs")
+      (d.name, med, times, compiles, jobs)
     }
     // closing probe reading bounds the trace on both ends
     val pEnd = runProbe()
     probeTimes += pEnd
     System.err.println(f"[bench] probe@end: ${pEnd}%.3fs")
-    val results = timed.map { case (n, m, _, _) => n -> m }
-    val allReps = timed.map { case (n, _, ts, _) => n -> ts }.toMap
-    val allCompiles = timed.map { case (n, _, _, c) => n -> c }.toMap
+    val results = timed.map { case (n, m, _, _, _) => n -> m }
+    val allReps = timed.map { case (n, _, ts, _, _) => n -> ts }.toMap
+    val allCompiles = timed.map { case (n, _, _, c, _) => n -> c }.toMap
+    val allJobs = timed.map { case (n, _, _, _, j) => n -> j }.toMap
     val total = results.flatMap(_._2).sum
     // Full map → BENCH_FULL.json, headline line → BENCH.json (and stdout).
     // The stdout JSON line is the LAST line of the process's stdout; since
@@ -299,7 +319,7 @@ object Bench {
     val (fullName, lineName) =
       if (defs.size == SparkEntry.allDefs.size) ("BENCH_FULL.json", "BENCH.json")
       else ("SCALE_BENCH_FULL.json", "SCALE_BENCH.json")
-    writeFile(fullName, renderFull(total, results, sfDir, allReps, probeTimes.toSeq, allCompiles))
+    writeFile(fullName, renderFull(total, results, sfDir, allReps, probeTimes.toSeq, allCompiles, allJobs))
     writeFile(lineName, renderLine(total, results, sfDir, allReps))
     // Stop BEFORE printing so shutdown log noise precedes the JSON line and
     // the ~2000-char stdout tail the consumer keeps always ends with it.

@@ -62,6 +62,11 @@ object Engine {
       // tpch_sql pass, plus the variants other query orders generate. A
       // cached class retains about 25 KB of heap, so 1000 cost ~25 MB.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // The cache is keyed by source text, and by default a class's name
+      // carries its codegen stage id. Under AQE that id depends on which
+      // concurrent stages finished first, so a rerun of the same query
+      // could name its classes differently and compile them again.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // Status stores nothing reads (UI off); their defaults keep 1000 SQL
       // executions, 1000 jobs, 1000 stages and 100,000 tasks.
       .config("spark.sql.ui.retainedExecutions", "10")

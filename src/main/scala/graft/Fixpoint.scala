@@ -11,10 +11,18 @@ import scala.jdk.CollectionConverters._
   *
   * Every round is its own small plan over the previous round's
   * materialized result, and the module picks how that result is held:
-  *  - '''small''' — at most [[localRowCap]] rows: collected with a bounded
-  *    `limit(cap + 1).collect()` into a driver `LocalRelation`. The next
-  *    round's filters and projections then fold in the optimizer with no
-  *    job at all, and its joins run as one small job;
+  *  - '''small''' — at most [[localRowCap]] rows, held in a driver
+  *    `LocalRelation`. A round whose optimized plan reads only such
+  *    relations is evaluated on the driver by [[LocalEval]], with no job:
+  *    `Project`, `Filter`, inner and cross joins, `Union`, aggregates over
+  *    declarative functions, limits, and pass-through repartitions, hints
+  *    and aliases. LocalEval declines any other operator, a
+  *    non-deterministic, subquery or unevaluable expression, an
+  *    intermediate output past `cap + 1` rows, and a round whose work
+  *    passes [[LocalEval.MaxWork]] (where a Spark job is the faster); such
+  *    a round (and a seed read from files) is collected with a bounded
+  *    `limit(cap + 1).collect()`, one job. A round LocalEval finds over
+  *    the cap goes straight to the large path;
   *  - '''large''' — anything over the cap: `localCheckpoint`ed at the
   *    session's own parallelism, the only form that holds what the driver
   *    cannot.
@@ -182,10 +190,15 @@ object Fixpoint {
     }
   }
 
-  /** `limit(cap + 1).collect()`: the rows when there are at most `cap`. */
+  /** The rows when there are at most `cap`: evaluated on the driver by
+    * [[LocalEval]], or, where it declines, by `limit(cap + 1).collect()`. */
   private def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None
-    else Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+    else LocalEval.collect(df, cap) match {
+      case LocalEval.Rows(rows) => Some(rows)
+      case LocalEval.OverCap => None
+      case LocalEval.Declined => Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+    }
 
   private def checkpoint(df: DataFrame): (DataFrame, Long) =
     org.apache.spark.sql.GraftBridge.localCheckpoint(df)

@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`), so the UNION-DISTINCT form is
   * a driver loop: [[graft.Fixpoint.unionDistinct]], one level per round,
   * modelled on `UnionLoopExec`. A round whose rows fit Spark's broadcast
-  * size lives on the driver as a `LocalRelation` (the next level's
-  * filters and projections fold with no job); a larger one is
-  * checkpointed and deduplicated with `except` at the session's own
-  * parallelism. The loop changes no session conf.
+  * size lives on the driver as a `LocalRelation`, and the next level's
+  * step (filters, projections, joins against other driver-local inputs)
+  * is evaluated on the driver with no job; a larger one is checkpointed
+  * and deduplicated with `except` at the session's own parallelism. The
+  * loop changes no session conf.
   */
 object Recursive {
 
@@ -183,15 +184,12 @@ object Recursive {
       val edges = graft.Fixpoint.materialize(nation.where(col("n_nationkey") > 0)
         .select(col("n_nationkey").as("src"), (col("n_nationkey") - 1).as("dst")))
       val seed = nation.select(col("n_nationkey").as("start_k"), col("n_nationkey").as("node"))
-      // 25 nations: delta and edges are driver-local, and with both sides
-      // in one partition the shuffle_hash join needs no exchange, so each
-      // level is one single-task job
+      // 25 nations: delta and edges are driver-local, so each level's join
+      // is evaluated on the driver and launches no job
       try repeatUnion(seed, d =>
         // alias both sides: the delta's `node` descends from edges' `dst`,
         // so an unaliased self-join is ambiguous to the analyzer
-        d.coalesce(1).alias("r")
-          .join(edges.df.coalesce(1).alias("e").hint("shuffle_hash"),
-            col("r.node") === col("e.src"))
+        d.alias("r").join(edges.df.alias("e"), col("r.node") === col("e.src"))
           .select(col("r.start_k").as("start_k"), col("e.dst").as("node")),
         maxIter = 50, tag = "recursive_closure")
       // the result is materialized round by round; its plan no longer

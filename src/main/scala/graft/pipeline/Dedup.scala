@@ -424,10 +424,9 @@ object Dedup {
     * labels⋈edges join, one pointer-jump self-join and one min-aggregate;
     * rounds = O(log diameter) (near-dup components are shallow). While the
     * label state and the edges fit Spark's broadcast size they live on the
-    * driver, and both sides of every join are one partition under
-    * `shuffle_hash`, so a round is one single-task job with no exchange.
-    * Larger states are checkpointed and shuffle on node id at the
-    * session's own parallelism. No session conf is changed.
+    * driver, and each round is evaluated there with no job (see
+    * [[graft.Fixpoint]]). Larger states are checkpointed and shuffle on
+    * node id at the session's own parallelism. No session conf is changed.
     */
   def clusters(pairs: DataFrame): DataFrame = {
     // both directions from ONE pass over the pairs (a union would
@@ -436,14 +435,10 @@ object Dedup {
       struct(col("id_a").as("src"), col("id_b").as("dst")),
       struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e")).select("e.*"))
     try {
-      def one(df: DataFrame) = if (edges.local) df.coalesce(1) else df
-      val init = one(edges.df).select(col("src").as("id")).distinct()
+      val init = edges.df.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl"))
       val labels = graft.Fixpoint.iterate(init) { state =>
-        val small = state.local && edges.local
-        def side(df: DataFrame) = if (small) df.coalesce(1) else df
-        def build(df: DataFrame) = if (small) side(df).hint("shuffle_hash") else df
-        val l = side(state.df)
+        val l = state.df
         // Candidate labels per node, min-folded in ONE aggregation:
         //  - its own label,
         //  - its neighbors' labels (edge propagation),
@@ -453,14 +448,13 @@ object Dedup {
         // The jump turns convergence from O(diameter) into O(log diameter)
         // rounds on chain-shaped duplicate clusters.
         val jump = l
-          .join(build(state.df.select(col("id").as("jid"), col("lbl").as("jlbl"))),
-            col("lbl") === col("jid"))
+          .join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
           .select(col("id"), col("jlbl").as("lbl"))
-        side(l.alias("l")
-          .join(build(edges.df.alias("e")), col("l.id") === col("e.src"))
+        l.alias("l")
+          .join(edges.df.alias("e"), col("l.id") === col("e.src"))
           .select(col("e.dst").as("id"), col("l.lbl").as("lbl"))
           .unionByName(l)
-          .unionByName(jump))
+          .unionByName(jump)
           .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
       } { state =>
         // Convergence: every candidate set includes the node's own label,

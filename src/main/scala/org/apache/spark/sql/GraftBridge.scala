@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
@@ -11,6 +12,11 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `e` with Spark's float key equality: -0.0 as 0.0 and one NaN, inside
+    * structs and arrays too (what physical planning applies to grouping
+    * keys). */
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 
   /** An eager local checkpoint of `df` and its row count, for fixpoint
     * rounds. It differs from `Dataset.localCheckpoint` in two ways:
@@ -37,6 +43,11 @@ object GraftBridge {
       session, Some(stats), None)
     (classic.Dataset.ofRows(session, plan), n)
   }
+
+  /** Returns once Spark's listener bus has delivered every event posted so
+    * far, so a listener's counts are complete (the bus is `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** SQL executions Spark's status store currently holds (the store is
     * `private[sql]`); bounded by `spark.sql.ui.retainedExecutions`. */

@@ -65,8 +65,9 @@ class BenchFormatSpec extends AnyFunSuite {
       Seq("a" -> Some(2.0), "b" -> None)
     val reps = Map("a" -> Seq(3.0, 2.0, 1.5))
     val full = Bench.renderFull(2.0, results, "sf", reps, probe = Seq(0.1, 0.4),
-      compiles = Map("a" -> 12L))
+      compiles = Map("a" -> 12L), jobs = Map("a" -> 3L))
     assert(full.contains(""""compiles":{"a":12,"b":null}"""))
+    assert(full.contains(""""jobs":{"a":3,"b":null}"""))
     assert(full.contains(""""queries":{"a":2.000,"b":null}"""))
     assert(full.contains(""""mins":{"a":1.500,"b":null}"""))
     assert(full.contains(""""reps":{"a":[3.000,2.000,1.500],"b":[]}"""))

@@ -69,6 +69,31 @@ class FixpointSpec extends AnyFunSuite {
     assert(got == expected.sorted)
   }
 
+  /** `f`'s result and the Spark jobs it launched. */
+  private def jobsDuring[T](f: => T): (T, Long) = {
+    val jobs = new Bench.JobCounter(spark)
+    try {
+      val out = f
+      (out, jobs.count)
+    } finally jobs.close()
+  }
+
+  test("driver-local rounds launch no Spark job") {
+    val s = spark
+    import s.implicits._
+    // a 25-level closure over the chain 24 → 23 → … → 0
+    val chain = (1L to 24L).map(n => (n, n - 1)).toDF("src", "dst")
+    val seed = (0L to 24L).toDF("k").select(col("k").as("start_k"), col("k").as("node"))
+    val (closure, closureJobs) = jobsDuring(Fixpoint.unionDistinct(seed, reachStep(chain), -1))
+    assert(closureJobs == 0)
+    assert(rows(closure).size == 25 * 26 / 2)
+    // a 100-level series
+    val (series, seriesJobs) = jobsDuring(Fixpoint.unionDistinct(Seq(1L).toDF("n"),
+      d => d.where(col("n") < 100).select((col("n") + 1).as("n")), -1))
+    assert(seriesJobs == 0)
+    assert(rows(series).size == 100)
+  }
+
   test("dedup matches except on NaN, -0.0/0.0 and NULL") {
     val schema = StructType(Seq(
       StructField("x", DoubleType), StructField("s", StringType)))
