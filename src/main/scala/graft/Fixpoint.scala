@@ -4,25 +4,30 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Driver-loop fixpoint iteration, modelled on Spark 4.1's `UnionLoopExec`
   * (the engine's own RepeatUnion; reference:
   * adapter/enumerable/EnumerableRepeatUnion.java:39).
   *
-  * Every round is its own small plan over the previous round's
-  * materialized result, and the module picks how that result is held:
-  *  - '''small''' — at most [[localRowCap]] rows, held in a driver
-  *    `LocalRelation`. A round whose optimized plan reads only such
-  *    relations is evaluated on the driver by [[LocalEval]], with no job:
+  * Each round applies a step to the previous round's materialized
+  * result, and the module picks how that result is held:
+  *  - '''small''' — at most [[localRowCap]] rows, held on the driver.
+  *    The step's plan is built and optimized once, over a transient input
+  *    (the reference's TransientTable scan), and each round binds its rows
+  *    into it; a plan that reads only driver relations is evaluated by
+  *    [[LocalEval]], with no job:
   *    `Project`, `Filter`, inner and cross joins, `Union`, aggregates over
   *    declarative functions, limits, and pass-through repartitions, hints
   *    and aliases. LocalEval declines any other operator, a
   *    non-deterministic, subquery or unevaluable expression, an
   *    intermediate output past `cap + 1` rows, and a round whose work
-  *    passes [[LocalEval.MaxWork]] (where a Spark job is the faster); such
-  *    a round (and a seed read from files) is collected with a bounded
-  *    `limit(cap + 1).collect()`, one job. A round LocalEval finds over
-  *    the cap goes straight to the large path;
+  *    passes [[LocalEval.MaxWork]] (where a Spark job is the faster). A
+  *    step it cannot compile is built once per round over a
+  *    `LocalRelation` of the round's rows (see [[unionDistinct]]); a round
+  *    it declines (and a seed read from files) is collected with a
+  *    bounded `limit(cap + 1).collect()`, one job. A round LocalEval finds
+  *    over the cap goes straight to the large path;
   *  - '''large''' — anything over the cap: `localCheckpoint`ed at the
   *    session's own parallelism, the only form that holds what the driver
   *    cannot.
@@ -35,19 +40,28 @@ import scala.jdk.CollectionConverters._
 object Fixpoint {
 
   /** One materialized round: `rows` is defined iff it lives on the driver
-    * (then `df` is a `LocalRelation` over them). */
+    * (then `df` is a `LocalRelation` over them, built on first use). The
+    * transient round a step's plan is built over has no rows of its own:
+    * reading them there throws, and the loop falls back to a plan per
+    * round. */
   final class Round private[Fixpoint] (
-      val df: DataFrame, val rows: Option[IndexedSeq[Row]]) {
-    def local: Boolean = rows.isDefined
+      frame: => DataFrame, held: Option[IndexedSeq[Row]], transient: Boolean = false) {
+    lazy val df: DataFrame = frame
+    def rows: Option[IndexedSeq[Row]] =
+      if (transient) throw new IllegalStateException("a step builds its plan from df, not rows")
+      else held
+    def local: Boolean = transient || held.isDefined
   }
 
   /** Largest row count a round may hold on the driver: Spark's
     * `spark.sql.autoBroadcastJoinThreshold` (the size Spark itself ships
     * to every task as a broadcast) over the row's estimated size. A
     * threshold of -1 turns the local path off. */
-  def localRowCap(df: DataFrame): Long = {
-    val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    math.min(math.max(0L, bytes / math.max(1, df.schema.defaultSize)), Int.MaxValue - 1L)
+  def localRowCap(df: DataFrame): Long = localRowCap(df.sparkSession, df.schema)
+
+  private def localRowCap(spark: SparkSession, schema: StructType): Long = {
+    val bytes = spark.sessionState.conf.autoBroadcastJoinThreshold
+    math.min(math.max(0L, bytes / math.max(1, schema.defaultSize)), Int.MaxValue - 1L)
   }
 
   /** Materializes `df` on the driver when it has at most [[localRowCap]]
@@ -55,8 +69,8 @@ object Fixpoint {
   def materialize(df: DataFrame, tryLocal: Boolean = true): Round = {
     val rows = if (tryLocal) collectUpTo(df, localRowCap(df)) else None
     rows match {
-      case Some(rs) => new Round(frame(df.sparkSession, df.schema, rs), Some(rs))
-      case None => new Round(checkpoint(df)._1, None)
+      case Some(rs) => localRound(df.sparkSession, df.schema, rs)
+      case None => checkpointRound(df)
     }
   }
 
@@ -67,18 +81,36 @@ object Fixpoint {
     * stops changing, or after `maxIter` rounds (`maxIter < 0`: unbounded).
     * `measure` must change whenever the state does (a row-set fingerprint,
     * or a monotone quantity). Each superseded state is released; the
-    * returned round is the caller's to release. */
+    * returned round is the caller's to release.
+    *
+    * While the state is on the driver, `step` builds a plan, not a round:
+    * it is called once on a transient round and every local round binds
+    * its state's rows into that plan (the step contract and its fallback
+    * are [[unionDistinct]]'s). */
   def iterate(init: DataFrame, maxIter: Int = -1)(step: Round => DataFrame)
       (measure: Round => Any): Round = {
+    val spark = init.sparkSession
+    val plans = new StepPlans(spark, in => step(new Round(in, None, transient = true)))
     var state = materialize(init)
+    var schema = init.schema
     try {
       var m = measure(state)
       var i = 0
       var done = false
       while (!done && (maxIter < 0 || i < maxIter)) {
-        val next = materialize(step(state), tryLocal = state.local)
-        release(state)
+        val prev = state
+        lazy val df = step(prev)
+        val (next, nextSchema) = prev.rows.flatMap(rows => plans(schema).map(_ -> rows)) match {
+          case Some((plan, rows)) =>
+            runRound(plan, rows, localRowCap(spark, plan.schema), df) match {
+              case Some(rs) => (localRound(spark, plan.schema, rs), plan.schema)
+              case None => (checkpointRound(df), df.schema)
+            }
+          case None => (materialize(df, tryLocal = prev.local), df.schema)
+        }
+        release(prev)
         state = next
+        schema = nextSchema
         val m2 = measure(state)
         done = m2 == m
         m = m2
@@ -96,9 +128,25 @@ object Fixpoint {
     *
     * While the accumulated set fits under [[localRowCap]], it is a
     * driver-side set with `except`'s row equality (see [[key]]) and each
-    * delta a `LocalRelation`. Past the cap — or when a round changes the
-    * row type, which only the engine's union widening can follow — the
-    * loop continues as `localCheckpoint` + `except(acc)` rounds. */
+    * delta is bound into one compiled plan. Past the cap — or when a round
+    * changes the row type, which only the engine's union widening can
+    * follow — the loop continues as `localCheckpoint` + `except(acc)`
+    * rounds.
+    *
+    * '''The step contract.''' `step` builds a plan from its input, and it
+    * is called once per plan, not once per round. On the driver path the
+    * loop calls it once on a transient input (a `RoundInput` leaf, the
+    * reference's TransientTable scan), [[LocalEval]] compiles the result,
+    * and each round binds its rows into that plan: no analysis, no
+    * optimization and no job per round. The plan is built again only when
+    * the round's row type changes (a round widened a nullability). A step
+    * LocalEval cannot compile — an unsupported operator, a leaf that is
+    * not a `LocalRelation`, output types other than its input's, or a
+    * step that throws while it is built over the transient input (one
+    * that runs an action on it, say) — runs one plan per round over a
+    * `LocalRelation` of the round's rows, as every step did before. So
+    * does a single round LocalEval declines at run time. The checkpoint
+    * path builds one plan per round. */
   def unionDistinct(seed: DataFrame, step: DataFrame => DataFrame,
       maxIter: Int): DataFrame = {
     val spark = seed.sparkSession
@@ -112,15 +160,19 @@ object Fixpoint {
       case Some(rows) => absorb(rows)
       case None => return large(seed.distinct(), None, step, maxIter)
     }
+    val plans = new StepPlans(spark, step)
     var i = 0
     while (delta.nonEmpty && (maxIter < 0 || i < maxIter)) {
-      val input = frame(spark, schema, delta)
-      val cand = step(input)
-      val rows =
-        if (cand.schema.map(_.dataType) == schema.map(_.dataType)) collectUpTo(cand, cap)
-        else None
+      val in = delta
+      lazy val input = frame(spark, schema, in)
+      lazy val cand = step(input)
+      val (rows, candSchema) = plans(schema) match {
+        case Some(plan) => (runRound(plan, in, cap, cand), plan.schema)
+        case None =>
+          (if (sameTypes(cand.schema, schema)) collectUpTo(cand, cap) else None, cand.schema)
+      }
       rows.foreach { rs =>
-        schema = orNullable(schema, cand.schema)
+        schema = orNullable(schema, candSchema)
         delta = absorb(rs)
         i += 1
       }
@@ -131,6 +183,42 @@ object Fixpoint {
     }
     accFrame
   }
+
+  /** A step compiled over a transient input: the plan and the input's id. */
+  private final case class StepPlan(compiled: LocalEval.Compiled, input: Long) {
+    def schema: StructType = compiled.schema
+  }
+
+  /** `step`'s compiled plan for the current input row type, built again
+    * only when the row type changes; `None` where LocalEval cannot compile
+    * it (the step contract at [[unionDistinct]]). */
+  private final class StepPlans(spark: SparkSession, step: DataFrame => DataFrame) {
+    private var last: Option[(StructType, Option[StepPlan])] = None
+
+    def apply(schema: StructType): Option[StepPlan] = last match {
+      case Some((s, plan)) if s == schema => plan
+      case _ =>
+        val plan = compile(schema)
+        last = Some((schema, plan))
+        plan
+    }
+
+    private def compile(schema: StructType): Option[StepPlan] = {
+      val (input, id) = org.apache.spark.sql.GraftBridge.roundInput(spark, schema)
+      try {
+        val out = step(input)
+        if (sameTypes(out.schema, schema)) LocalEval.compile(out).map(StepPlan(_, id))
+        else None
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
+  /** One driver round: `plan` over `rows`, its result when it has at most
+    * `cap` rows. `df` is the same round as a plan of its own, which runs
+    * as one bounded job where LocalEval declines the round. */
+  private def runRound(plan: StepPlan, rows: IndexedSeq[Row], cap: Long,
+      df: => DataFrame): Option[Array[Row]] =
+    rowsOf(LocalEval.run(plan.compiled, Map(plan.input -> rows), cap), df, cap)
 
   /** Large rounds merge into one checkpoint every this many rounds: a
     * union chain longer than this makes each round's `except` plan deep,
@@ -193,12 +281,24 @@ object Fixpoint {
   /** The rows when there are at most `cap`: evaluated on the driver by
     * [[LocalEval]], or, where it declines, by `limit(cap + 1).collect()`. */
   private def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
-    if (cap <= 0) None
-    else LocalEval.collect(df, cap) match {
-      case LocalEval.Rows(rows) => Some(rows)
-      case LocalEval.OverCap => None
-      case LocalEval.Declined => Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
-    }
+    if (cap <= 0) None else rowsOf(LocalEval.collect(df, cap), df, cap)
+
+  /** The rows of a LocalEval outcome; a declined one runs `df` as one job. */
+  private def rowsOf(outcome: LocalEval.Outcome, df: => DataFrame,
+      cap: Long): Option[Array[Row]] = outcome match {
+    case LocalEval.Rows(rows) => Some(rows)
+    case LocalEval.OverCap => None
+    case LocalEval.Declined => Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+  }
+
+  private def localRound(spark: SparkSession, schema: StructType,
+      rows: IndexedSeq[Row]): Round = new Round(frame(spark, schema, rows), Some(rows))
+
+  /** A round checkpointed now (only a local round's frame is deferred). */
+  private def checkpointRound(df: DataFrame): Round = {
+    val ckpt = checkpoint(df)._1
+    new Round(ckpt, None)
+  }
 
   private def checkpoint(df: DataFrame): (DataFrame, Long) =
     org.apache.spark.sql.GraftBridge.localCheckpoint(df)
@@ -206,6 +306,9 @@ object Fixpoint {
   private def frame(spark: SparkSession, schema: StructType,
       rows: IndexedSeq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
+
+  private def sameTypes(a: StructType, b: StructType): Boolean =
+    a.map(_.dataType) == b.map(_.dataType)
 
   /** `a` with each top-level field nullable when it is in `a` or `b`. */
   private def orNullable(a: StructType, b: StructType): StructType =

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.GraftBridge.RoundInput
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, DeclarativeAggregate}
@@ -8,18 +9,21 @@ import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalAggr
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.ControlThrowable
 
 /** Driver-side evaluation of a small optimized plan whose leaves are all
-  * `LocalRelation`s: no physical planning, no job, no codegen. It extends
-  * the idea of Spark's `ConvertToLocalRelation` (which already folds
-  * `Project`/`Filter` over a `LocalRelation`) to joins, unions and
-  * aggregates, and mirrors the reference's row interpreter for small plans
-  * (interpreter/Interpreter.java; Nodes.java dispatches Filter, Project,
-  * Join, Aggregate and Union nodes).
+  * `LocalRelation`s or `RoundInput`s: no physical planning, no job, no
+  * codegen. [[compile]] optimizes a plan once; [[run]] evaluates it with
+  * each round input bound to rows, so a fixpoint step pays analysis and
+  * optimization once, not every round. It extends the idea of Spark's
+  * `ConvertToLocalRelation` (which already folds `Project`/`Filter` over
+  * a `LocalRelation`) to joins, unions and aggregates, and mirrors the
+  * reference's row interpreter for small plans (interpreter/Interpreter.java;
+  * Nodes.java dispatches Filter, Project, Join, Aggregate and Union nodes).
   *
   * Supported: `Project`, `Filter`, inner and cross `Join` (a hash join on
   * the `ExtractEquiJoinKeys` keys plus the residual predicate; null keys
@@ -36,13 +40,13 @@ import scala.util.control.ControlThrowable
   * join and grouping keys compare as `UnsafeRow` bytes, like Spark's hash
   * join and hash aggregate.
   *
-  * [[collect]] declines on any other node, on a non-deterministic,
-  * subquery or `Unevaluable` expression, as soon as an operator below the
-  * root outputs more than `cap + 1` rows, and once the evaluation passes
-  * [[MaxWork]]. A root that outputs more than `cap` rows is [[OverCap]]
-  * instead: the result itself is too large to hold. An error an
-  * expression raises is never swallowed: it propagates as it would from
-  * Spark's own execution.
+  * [[compile]] declines any other node and a non-deterministic, subquery
+  * or `Unevaluable` expression. [[run]] declines as soon as an operator
+  * below the root outputs more than `cap + 1` rows, and once the
+  * evaluation passes [[MaxWork]]. A root that outputs more than `cap`
+  * rows is [[OverCap]] instead: the result itself is too large to hold.
+  * An error an expression raises is never swallowed: it propagates as it
+  * would from Spark's own execution.
   */
 object LocalEval {
 
@@ -56,34 +60,64 @@ object LocalEval {
 
   /** Work budget: the rows all operators output plus the row pairs joins
     * check. Past it a round runs as a Spark job. `graft.LocalEvalCrossover`
-    * times both on round plans over `LocalRelation`s (local[4], 4-core
-    * VM). A job costs 50-250 ms however few its rows. Interpreting costs
-    * 0.13 µs a unit on a theta join (pairs) and 0.6-1 µs on the fixpoint
-    * steps' joins and aggregates. The job wins from 400,000-490,000 units
-    * on a theta join, but the steps' rounds still win by a third at
-    * 500,000 (and clusters rounds at 1.5 million). This is the largest
-    * budget at which no measured shape loses more than 10 ms to the job. */
+    * times both as `Fixpoint` runs them (local[4], 4-core VM): the step's
+    * plan compiled once with each round's rows bound, against a job over
+    * a plan built for the round. A job costs 50-250 ms however few its
+    * rows. Interpreting costs about 0.13 µs a unit on a theta join
+    * (pairs) and 0.1-0.3 µs on the fixpoint steps' joins and aggregates.
+    * The job wins from about 400,000 units on a theta join (66 against
+    * 59 ms at 492,000, 136 against 73 ms at 1 million), while closure
+    * levels at 500,000 units (169 against 808 ms) and clusters rounds at
+    * 1.56 million (150 against 1,090 ms) still win by far. This is the
+    * largest budget at which no measured shape loses more than 10 ms to
+    * the job. */
   val MaxWork: Long = 500000L
 
-  /** `df`'s rows, evaluated on the driver under [[MaxWork]]. */
-  def collect(df: DataFrame, cap: Long): Outcome = evaluate(df, cap, MaxWork)._1
+  /** A plan [[compile]] optimized once: [[run]] evaluates it for each
+    * binding of its [[GraftBridge.RoundInput]]s, under the conf of the
+    * session that built it. */
+  final case class Compiled(plan: LogicalPlan, conf: SQLConf) {
+    def schema: StructType = plan.schema
+  }
 
-  /** [[collect]] under the budget `maxWork`, with the work it did (up to
-    * where it stopped). */
-  private[graft] def evaluate(df: DataFrame, cap: Long, maxWork: Long): (Outcome, Long) = {
+  /** `df`'s optimized plan when every leaf is a `LocalRelation` or a
+    * `RoundInput` and every operator is supported; `None` otherwise. */
+  def compile(df: DataFrame): Option[Compiled] = {
     // a plan that reads files or checkpoints is declined before it is optimized
-    if (!df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
-      return (Declined, 0L)
-    val plan = df.queryExecution.optimizedPlan
+    val driverLeaves = df.queryExecution.analyzed.collectLeaves().forall {
+      case _: LocalRelation | _: RoundInput => true
+      case _ => false
+    }
+    if (!driverLeaves) None
+    else Some(df.queryExecution.optimizedPlan).filter(supported)
+      .map(Compiled(_, df.sparkSession.sessionState.conf))
+  }
+
+  /** `c`'s rows with each round input read from `bindings` (by its id),
+    * evaluated on the driver under [[MaxWork]]. */
+  def run(c: Compiled, bindings: Map[Long, Seq[Row]], cap: Long): Outcome =
+    evaluate(c, bindings, cap, MaxWork)._1
+
+  /** `df`'s rows, evaluated on the driver under [[MaxWork]]. */
+  def collect(df: DataFrame, cap: Long): Outcome =
+    compile(df).fold[Outcome](Declined)(run(_, Map.empty, cap))
+
+  /** [[run]] under the budget `maxWork`, with the work it did (up to where
+    * it stopped). */
+  private[graft] def evaluate(c: Compiled, bindings: Map[Long, Seq[Row]], cap: Long,
+      maxWork: Long): (Outcome, Long) = {
     // every leaf row is output once, so their count alone can pass the budget
-    val leafRows = plan.collectLeaves().map(_.asInstanceOf[LocalRelation].data.size.toLong).sum
-    if (!supported(plan) || leafRows > maxWork) (Declined, 0L)
-    else SQLConf.withExistingConf(df.sparkSession.sessionState.conf) {
-      val eval = new Eval(cap, maxWork)
+    val leafRows = c.plan.collectLeaves().map {
+      case r: LocalRelation => r.data.size.toLong
+      case r: RoundInput => bindings(r.id).size.toLong
+    }.sum
+    if (leafRows > maxWork) (Declined, 0L)
+    else SQLConf.withExistingConf(c.conf) {
+      val eval = new Eval(cap, maxWork, bindings)
       val outcome =
         try {
-          val rows = eval.root(plan)
-          val toRow = CatalystTypeConverters.createToScalaConverter(plan.schema)
+          val rows = eval.root(c.plan)
+          val toRow = CatalystTypeConverters.createToScalaConverter(c.schema)
           Rows(rows.map(toRow(_).asInstanceOf[Row]).toArray)
         } catch { case Stop(o) => o }
       (outcome, eval.work)
@@ -93,7 +127,7 @@ object LocalEval {
   private final case class Stop(outcome: Outcome) extends ControlThrowable
 
   private def supported(p: LogicalPlan): Boolean = (p match {
-    case _: LocalRelation => true
+    case _: LocalRelation | _: RoundInput => true
     case Project(list, _) => list.forall(evaluable)
     case Filter(cond, _) => evaluable(cond)
     case Join(_, _, Inner | Cross, cond, _) => cond.forall(evaluable)
@@ -130,8 +164,16 @@ object LocalEval {
   /** Evaluates a [[supported]] plan: an operator below the root outputs
     * at most `cap + 1` rows, the root at most `cap`, and all of them
     * together do at most `maxWork` work. */
-  private final class Eval(cap: Long, maxWork: Long) {
+  private final class Eval(cap: Long, maxWork: Long, bindings: Map[Long, Seq[Row]]) {
     var work = 0L
+
+    /** Each round input's rows in Catalyst form, converted once per id. */
+    private val inputs = mutable.HashMap.empty[Long, IndexedSeq[InternalRow]]
+
+    private def input(r: RoundInput): IndexedSeq[InternalRow] = inputs.getOrElseUpdate(r.id, {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(r.schema)
+      bindings(r.id).iterator.map(toCatalyst(_).asInstanceOf[InternalRow]).toIndexedSeq
+    })
 
     private def charge(n: Long): Unit = {
       work += n
@@ -156,6 +198,7 @@ object LocalEval {
     /** `atRoot`: `p` outputs as many rows as the result. */
     private def eval(p: LogicalPlan, atRoot: Boolean): IndexedSeq[InternalRow] = p match {
       case r: LocalRelation => bounded(r.data.iterator, atRoot)
+      case r: RoundInput => bounded(input(r).iterator, atRoot)
       case Project(list, child) =>
         val es = bind(list, child.output)
         bounded(eval(child, atRoot).iterator.map(project(es)), atRoot)

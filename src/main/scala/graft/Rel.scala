@@ -107,6 +107,11 @@ final class Rel private (
       df, partitionCol, orderCol, orderTie, measures, pattern, defines))
 
   // -- iteration (reference: repeatUnion:1867 + transientScan:1822) ---------
+  /** UNION-DISTINCT repeat-union of the top relation. `step` receives the
+    * iteration's input, the transient scan, and builds one plan from it:
+    * it is called once per plan, not once per round. A step that reads
+    * the input's rows (an action on it) falls back to one plan per round.
+    * See [[operators.Recursive.repeatUnion]]. */
   def repeatUnion(step: DataFrame => DataFrame, maxIter: Int = 100): Rel =
     pop1(seed => operators.Recursive.repeatUnion(seed, step, maxIter, tag = "rel"))
 

@@ -13,18 +13,26 @@ import org.apache.spark.sql.functions._
   * Spark's native recursion (`UnionLoop`) accepts only UNION ALL
   * (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`), so the UNION-DISTINCT form is
   * a driver loop: [[graft.Fixpoint.unionDistinct]], one level per round,
-  * modelled on `UnionLoopExec`. A round whose rows fit Spark's broadcast
-  * size lives on the driver as a `LocalRelation`, and the next level's
-  * step (filters, projections, joins against other driver-local inputs)
-  * is evaluated on the driver with no job; a larger one is checkpointed
-  * and deduplicated with `except` at the session's own parallelism. The
-  * loop changes no session conf.
+  * modelled on `UnionLoopExec`. While a level's rows fit Spark's broadcast
+  * size they live on the driver, and the step (filters, projections,
+  * joins against other driver-local inputs) is planned once over a
+  * transient input, the reference's TransientTable scan; each level binds
+  * its rows into that plan and is evaluated on the driver with no job. A
+  * larger level is checkpointed and deduplicated with `except` at the
+  * session's own parallelism. The loop changes no session conf.
   */
 object Recursive {
 
   /** UNION-DISTINCT repeat-union: seed ∪ step(seed) ∪ step²(seed) ∪ ...
     * Stops when the step yields no new rows or after maxIter iterations
     * (maxIter < 0 ⇒ unbounded, like RepeatUnion.iterationLimit).
+    * `step` builds a plan from its input and is called once per plan, not
+    * once per round: on the driver path once in all (again only when a
+    * round widens a column's nullability), on the checkpoint path once a
+    * round. A step the driver cannot compile (an unsupported operator, a
+    * file or checkpoint leaf, a changed row type, or one that throws when
+    * built over the transient input, such as an action on it) falls back
+    * to one plan per round; see [[graft.Fixpoint.unionDistinct]].
     * `bucketAcc` selects the bucketed-accumulator loop below. The result's
     * checkpoints, if any, are released by the next call with the same
     * `tag` (or `Checkpoints.releaseAll`). */

@@ -696,7 +696,10 @@ object Dedup {
     // bucket sizes: pure codegen count aggregate, reusing the persisted
     // partitioning (no exchange). Feeds the scratch planner AND the
     // adaptive sig-join sizing below in ONE action.
-    val sizes = banded.groupBy(col("b"), col("h")).agg(count(lit(1)).as("c"))
+    // Σ n over a bucket's rows: every doc sits in one bucket per band, so
+    // the total over buckets is bands × the corpus' gram count
+    val sizes = banded.groupBy(col("b"), col("h"))
+      .agg(count(lit(1)).as("c"), sum(col("n")).as("grams"))
     if (sys.env.contains("GRAFT_LSH_DEBUG")) {
       def timed[A](label: String)(body: => A): A = {
         val t0 = System.nanoTime(); val r = body
@@ -725,9 +728,15 @@ object Dedup {
     val planStats = sizes.agg(
       coalesce(sum(when(col("c").between(2, 100),
         col("c") * (col("c") - 1) / 2)), lit(0.0)).as("pm"),
-      coalesce(sum(col("c")), lit(0L)).as("rows")).first()
+      coalesce(sum(col("c")), lit(0L)).as("rows"),
+      coalesce(sum(col("grams")), lit(0L)).as("grams")).first()
     val pairMass = planStats.getDouble(0)
     val nDocs = planStats.getLong(1) / bands
+    // the gram arrays' measured payload: the verify joins broadcast them
+    // when it fits the session's broadcast threshold (never at -1)
+    val gramBytes = planStats.getLong(2) / bands * java.lang.Long.BYTES
+    val gramsFit =
+      gramBytes <= docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val budget = scratchBudgetBytes.getOrElse(usableScratchBytes(docs.sparkSession))
     val numPasses = verifyPasses(pairMass, budget, bands)
     // the decision line is the scale-calibration instrument (SCALING.md
@@ -779,12 +788,17 @@ object Dedup {
         col("doc_id").as("id_a"), col("n").as("na"))
       val y = capped.select(col("b").as("yb"), col("h").as("yh"),
         col("doc_id").as("id_b"), col("n").as("nb"))
-      x.join(y,
+      val pairs = x.join(y,
         col("b") === col("yb") && col("h") === col("yh") &&
           col("id_a") < col("id_b") &&
           least(col("na"), col("nb")).cast("double") >=
             thr * greatest(col("na"), col("nb")))
-        .select(col("id_a"), col("id_b")).distinct()
+        .select(col("id_a"), col("id_b"))
+      // under a broadcast verify the distinct's exchange is the result's
+      // partitioning: place it at the session's parallelism, as every
+      // other exchange here is (the shuffled verify re-partitions on id_a)
+      (if (gramsFit) pairs.repartition(spark2.sparkContext.defaultParallelism,
+        col("id_a"), col("id_b")) else pairs).distinct()
     }
     val cands = phase("cands+distinct")(candsFor(banded))
     // signature-estimate prefilter (see scaladoc): the distinct pair list
@@ -889,11 +903,14 @@ object Dedup {
     // the per-partition hash from the corpus side, which is small by
     // construction (docs/partitions rows); g's persisted doc_id
     // hash-partitioning is reused, so the gram arrays never re-shuffle.
+    // When the measured gram bytes fit the broadcast threshold, g is
+    // broadcast instead: then no gram array rides the pair shuffles at
+    // all (at sf0.01, ~85 k survivors × two ~2.4 KB arrays per pair).
+    def gramSide(side: DataFrame): DataFrame =
+      if (gramsFit) broadcast(side) else side.hint("shuffle_hash")
     def verifyJoin(pairs: DataFrame): DataFrame = pairs
-      .join(g.select(col("doc_id").as("id_a"), col("gs").as("gs_a"))
-        .hint("shuffle_hash"), "id_a")
-      .join(g.select(col("doc_id").as("id_b"), col("gs").as("gs_b"))
-        .hint("shuffle_hash"), "id_b")
+      .join(gramSide(g.select(col("doc_id").as("id_a"), col("gs").as("gs_a"))), "id_a")
+      .join(gramSide(g.select(col("doc_id").as("id_b"), col("gs").as("gs_b"))), "id_b")
       .select(col("id_a"), col("id_b"),
         graft.functions.IntersectSizeSorted
           .intersect_size_sorted(col("gs_a"), col("gs_b")).as("ni"),

@@ -1,9 +1,14 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.StructType
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Access bridge for extension libraries: Column ↔ Expression conversion
   * is `private[sql]` in Spark 4 (classic.ExpressionUtils); this re-exports
@@ -42,6 +47,32 @@ object GraftBridge {
     val plan = LogicalRDD(ds.queryExecution.analyzed.output.map(_.newInstance()), rdd)(
       session, Some(stats), None)
     (classic.Dataset.ofRows(session, plan), n)
+  }
+
+  /** A fixpoint round's input as a plan leaf: the scan of a transient
+    * table whose rows are bound each time the plan is evaluated
+    * ([[graft.LocalEval]]), so a step's plan is analyzed and optimized once
+    * for every round (reference: schema/TransientTable.java,
+    * RelBuilder.transientScan:1822). A self-join of the input gets fresh
+    * attribute ids but keeps `id`, so both sides read the same rows. Its
+    * statistics are fixed: a driver round holds at most what Spark
+    * broadcasts. Spark cannot plan it physically, so an action on a frame
+    * over it throws. */
+  final case class RoundInput(output: Seq[Attribute], id: Long, sizeInBytes: BigInt)
+      extends LeafNode with MultiInstanceRelation {
+    override def newInstance(): RoundInput = copy(output = output.map(_.newInstance()))
+    override def computeStats(): Statistics = Statistics(sizeInBytes)
+  }
+
+  private val roundInputIds = new AtomicLong()
+
+  /** A frame over a new [[RoundInput]] of `schema`, and the id that binds
+    * its rows. */
+  def roundInput(spark: SparkSession, schema: StructType): (DataFrame, Long) = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val id = roundInputIds.incrementAndGet()
+    val size = math.max(1L, session.sessionState.conf.autoBroadcastJoinThreshold)
+    (classic.Dataset.ofRows(session, RoundInput(DataTypeUtils.toAttributes(schema), id, size)), id)
   }
 
   /** Returns once Spark's listener bus has delivered every event posted so

@@ -1,15 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fixpoint module's contract: UNION-distinct semantics with
   * `except`'s row equality, the iteration limit, identical results on the
-  * driver-local and the checkpoint path, and a session left as it was
-  * found — same conf, no pinned blocks — after success and after a
-  * throwing step. */
+  * driver-local and the checkpoint path, a step's plan built once on the
+  * driver path (and once per round where it cannot be), and a session
+  * left as it was found — same conf, no pinned blocks — after success and
+  * after a throwing step. */
 class FixpointSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -78,20 +80,64 @@ class FixpointSpec extends AnyFunSuite {
     } finally jobs.close()
   }
 
+  /** `step`, and the number of times the loop has called it. */
+  private final class Counted(step: DataFrame => DataFrame) extends (DataFrame => DataFrame) {
+    var calls = 0
+    def apply(d: DataFrame): DataFrame = { calls += 1; step(d) }
+  }
+
   test("driver-local rounds launch no Spark job") {
     val s = spark
     import s.implicits._
     // a 25-level closure over the chain 24 → 23 → … → 0
     val chain = (1L to 24L).map(n => (n, n - 1)).toDF("src", "dst")
     val seed = (0L to 24L).toDF("k").select(col("k").as("start_k"), col("k").as("node"))
-    val (closure, closureJobs) = jobsDuring(Fixpoint.unionDistinct(seed, reachStep(chain), -1))
+    val closureStep = new Counted(reachStep(chain))
+    val (closure, closureJobs) = jobsDuring(Fixpoint.unionDistinct(seed, closureStep, -1))
     assert(closureJobs == 0)
+    assert(closureStep.calls == 1)
     assert(rows(closure).size == 25 * 26 / 2)
     // a 100-level series
+    val seriesStep = new Counted(d => d.where(col("n") < 100).select((col("n") + 1).as("n")))
     val (series, seriesJobs) = jobsDuring(Fixpoint.unionDistinct(Seq(1L).toDF("n"),
-      d => d.where(col("n") < 100).select((col("n") + 1).as("n")), -1))
+      seriesStep, -1))
     assert(seriesJobs == 0)
+    assert(seriesStep.calls == 1)
     assert(rows(series).size == 100)
+  }
+
+  test("a round that widens nullability builds the step's plan again, once") {
+    val s = spark
+    import s.implicits._
+    // n is non-null in the seed; the step's output is nullable
+    val step = new Counted(d => d.select(when(col("n") < 3, col("n") + 1).as("n")))
+    val (result, jobs) = jobsDuring(Fixpoint.unionDistinct(Seq(1L).toDF("n"), step, -1))
+    assert(rows(result) == Seq("[1]", "[2]", "[3]", "[null]"))
+    assert(step.calls == 2)
+    assert(jobs == 0)
+  }
+
+  test("a step that runs an action on its input, or that LocalEval declines, " +
+      "runs one plan per round") {
+    val s = spark
+    import s.implicits._
+    val expected = (0 to 10).map(i => Row(i.toLong).toString).sorted
+    // the action cannot run on the transient input, so the plan-once
+    // build throws and every round builds its own plan
+    val acting = new Counted({ d =>
+      val top = d.agg(max("n")).head().getLong(0)
+      d.where(lit(top) < 10).select((col("n") + 1).as("n"))
+    })
+    assert(bothPaths(Seq(0L).toDF("n"), acting) == expected)
+    assert(acting.calls > 2)
+    // a window: LocalEval declines it, and each round runs as one job
+    val windowed = new Counted(d => d
+      .withColumn("rn", row_number().over(Window.orderBy("n")))
+      .where(col("rn") === 1 && col("n") < 10).select((col("n") + 1).as("n")))
+    val (result, jobs) = jobsDuring(Fixpoint.unionDistinct(Seq(0L).toDF("n"), windowed, 50))
+    assert(rows(result) == expected)
+    assert(windowed.calls > 2)
+    assert(jobs > 0)
   }
 
   test("dedup matches except on NaN, -0.0/0.0 and NULL") {
@@ -134,6 +180,25 @@ class FixpointSpec extends AnyFunSuite {
     assert(local == ckpt)
     assert(local == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
       (7L, 7L), (9L, 1L)).map { case (a, b) => Row(a, b).toString })
+  }
+
+  test("iterate builds a self-joining step's plan once") {
+    val s = spark
+    import s.implicits._
+    // pointer jumping, as dedup_clusters' rounds do: each id takes its
+    // label's label, so the input is joined to itself
+    val labels = Seq((1L, 2L), (2L, 3L), (3L, 3L), (4L, 4L)).toDF("id", "lbl")
+    var calls = 0
+    val (state, jobs) = jobsDuring(Fixpoint.iterate(labels) { r =>
+      calls += 1
+      val l = r.df
+      l.join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
+        .select(col("id"), col("jlbl").as("lbl"))
+    }(_.rows.get.map(_.getLong(1)).sum))
+    assert(calls == 1)
+    assert(jobs == 0)
+    assert(state.rows.get.map(r => (r.getLong(0), r.getLong(1))).sorted ==
+      Seq((1L, 3L), (2L, 3L), (3L, 3L), (4L, 4L)))
   }
 
   /** Asserts that `f` leaves the session conf as it found it and adds no
@@ -182,13 +247,17 @@ class FixpointSpec extends AnyFunSuite {
       val s = spark
       import s.implicits._
       onPath {
-        // fails while the plan is built, after a compaction
+        // fails while a plan is built: the local path builds the step's
+        // plan once, so there on the first call (the per-round fallback
+        // calls it again, and that call throws); the checkpoint path
+        // builds one per round, so there on the 11th, after a compaction
         leavesSessionClean { keep =>
           var calls = 0
+          val failAt = if (path == "local") 1 else 11
           intercept[IllegalStateException] {
             Fixpoint.unionDistinct(Seq(0L).toDF("n"), { d =>
               calls += 1
-              if (calls > 10) throw new IllegalStateException("boom")
+              if (calls >= failAt) throw new IllegalStateException("boom")
               keep(d).select((col("n") + 1).as("n"))
             }, -1)
           }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Union}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,14 +160,37 @@ class LocalEvalSpec extends AnyFunSuite {
     import s.implicits._
     val theta = (0 until n).toDF("x").join((0 until n).toDF("y"),
       col("x") + 1 === col("y") || col("x") > col("y") + (n - 2))
-    val (outcome, work) = LocalEval.evaluate(theta, cap = 1000000L, LocalEval.MaxWork)
+    val plan = LocalEval.compile(theta).get
+    def evaluate(maxWork: Long) = LocalEval.evaluate(plan, Map.empty, cap = 1000000L, maxWork)
+    val (outcome, work) = evaluate(LocalEval.MaxWork)
     assert(outcome == LocalEval.Declined)
     // it stops at the budget: it does not check all n^2 pairs first
     assert(work <= LocalEval.MaxWork + n)
     // inputs whose rows alone pass the budget are declined before any work
-    assert(LocalEval.evaluate(theta, cap = 1000000L, maxWork = n) == (LocalEval.Declined, 0L))
+    assert(evaluate(maxWork = n) == (LocalEval.Declined, 0L))
     // and under an unbounded budget it agrees with Spark
-    val (all, _) = LocalEval.evaluate(theta, cap = 1000000L, Long.MaxValue)
+    val (all, _) = evaluate(Long.MaxValue)
     assert(multiset(rows(all, theta.queryExecution.optimizedPlan)) == multiset(theta.collect()))
+  }
+
+  test("a round input bound twice through a self-join agrees with Spark") {
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("lbl", IntegerType)))
+    // a pointer jump, as dedup_clusters' rounds take it: each id's label's label
+    def jump(l: DataFrame): DataFrame = l
+      .join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
+      .select(col("id"), col("jlbl").as("lbl"))
+    val (input, id) = GraftBridge.roundInput(spark, schema)
+    val plan = LocalEval.compile(jump(input)).get
+    val inputs = plan.plan.collectLeaves().collect { case r: GraftBridge.RoundInput => r }
+    assert(inputs.size == 2 && inputs.map(_.id).distinct == Seq(id))
+    assert(inputs.map(_.output.head.exprId).distinct.size == 2)
+    // one plan, rebound: each binding agrees with Spark over a LocalRelation
+    for (bound <- Seq(
+        Seq(Row(1, 1), Row(2, 1), Row(3, 2), Row(4, 3), Row(5, null)),
+        Seq(Row(7, 8), Row(8, 9), Row(9, 9)))) {
+      val local = rows(LocalEval.run(plan, Map(id -> bound), cap), plan.plan)
+      val expected = multiset(jump(frame(schema, bound: _*)).collect())
+      assert(expected.nonEmpty && multiset(local) == expected)
+    }
   }
 }
