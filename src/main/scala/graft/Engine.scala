@@ -33,6 +33,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    alone, +1–3% with both);
   *  - Spark's TIME type on: fn_time_type needs it, and turning it on inside
   *    one query's build changed the session for every later query;
+  *  - parquet TIMESTAMP(NANOS) read as a nano long: events' `ts` reads no
+  *    other way, and setting it on the first read of `events` left every
+  *    later query's conf depending on which query ran first;
   *  - the ContextCleaner's periodic GC every 5 min: finished queries'
   *    broadcast/shuffle state is freed only by a GC, which a large driver
   *    heap rarely runs.
@@ -57,6 +60,7 @@ object Engine {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.timeType.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // Codegen working set (local[4], sf0.01): 311 distinct classes per
       // tpch_sql pass, plus the variants other query orders generate. A
@@ -155,8 +159,9 @@ object Tables {
   }
 
   /** Raw read of the events parquet, tolerant of BOTH fixture generations:
-    * TIMESTAMP(NANOS) `ts` (read as a nano long via the legacy flag) and
-    * TIMESTAMP(MICROS) `ts` (read as a timestamp directly). Parquet schema
+    * TIMESTAMP(NANOS) `ts` (read as a nano long via the legacy flag that
+    * [[Engine.session]] sets) and TIMESTAMP(MICROS) `ts` (read as a
+    * timestamp directly). Parquet schema
     * inference consults SQLConf.get — the THREAD-ACTIVE session's conf,
     * not necessarily `spark`'s — so `spark` is pinned active for the read
     * (a caller thread with a different session active would otherwise
@@ -164,7 +169,6 @@ object Tables {
     * streaming schema probes call this once per batch otherwise. */
   def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
     cacheOf(spark).rawEvents.computeIfAbsent(sfDir, { _ =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val prevActive = SparkSession.getActiveSession
       SparkSession.setActiveSession(spark)
       try spark.read.parquet(s"$sfDir/events.parquet")

@@ -45,7 +45,6 @@ object StreamOps {
     // TIMESTAMP(NANOS) read as nano long, TIMESTAMP(MICROS) read natively.
     val tsIsNanoLong =
       graft.Tables.eventsRaw(spark, sfDir).schema("ts").dataType == LongType
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsField =
       if (tsIsNanoLong) StructField("ts", LongType)
       else StructField("ts", org.apache.spark.sql.types.TimestampNTZType)

@@ -22,17 +22,13 @@ import org.apache.spark.sql.functions._
   * measured exponent should be ~1; the measured points live in SCALING.md
   * next to the minhash calibration.
   *
-  * Usage: runMain graft.tools.RecursiveScale [sfDir] [wide|bucketed]
+  * Usage: runMain graft.tools.RecursiveScale [sfDir]
   */
 object RecursiveScale {
 
-  /** (start_k, node) pairs of the orders key-chain closure.
-    * `mode`: "wide" (the default loop, [[graft.Fixpoint.unionDistinct]])
-    * or "bucketed" (r17: the bucketed-accumulator loop — co-partitioned
-    * anti-join chain instead of except-against-acc). */
-  def closure(spark: SparkSession, dir: String, mode: String): DataFrame = {
-    require(Set("wide", "bucketed")(mode),
-      s"unknown mode '$mode' (wide | bucketed)")
+  /** (start_k, node) pairs of the orders key-chain closure, computed by
+    * the engine's one fixpoint loop, [[graft.Fixpoint.unionDistinct]]. */
+  def closure(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.t(spark, dir, "orders").select(col("o_orderkey").as("k"))
     val edges = orders.where(pmod(col("k"), lit(10)) =!= 0)
       .select(col("k").as("src"), (col("k") - 1).as("dst"))
@@ -41,20 +37,19 @@ object RecursiveScale {
     val res = Recursive.repeatUnion(seed, d =>
       d.alias("r").join(edges.alias("e"), col("r.node") === col("e.src"))
         .select(col("r.start_k").as("start_k"), col("e.dst").as("node")),
-      maxIter = 12, tag = "recursive_scale", bucketAcc = mode == "bucketed")
+      maxIter = 12, tag = "recursive_scale")
     graft.Checkpoints.release(edges)
     res
   }
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val mode = args.lift(1).getOrElse("wide")
     val spark = Engine.session("graft-recursive-scale")
     val t0 = System.nanoTime()
-    val n = closure(spark, dir, mode).count()
+    val n = closure(spark, dir).count()
     val wall = (System.nanoTime() - t0) / 1e9
     graft.Checkpoints.releaseAll(spark)
-    println(f"""{"recursive_scale":"$dir","mode":"$mode","rows":$n,"wall_s":$wall%.1f}""")
+    println(f"""{"recursive_scale":"$dir","rows":$n,"wall_s":$wall%.1f}""")
     spark.stop()
   }
 }

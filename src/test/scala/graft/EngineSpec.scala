@@ -41,12 +41,15 @@ class EngineSpec extends AnyFunSuite {
 
   for (d <- SparkEntry.allDefs) {
     test(s"query ${d.name} executes at sf0.001") {
+      val confBefore = spark.conf.getAll
       val df = d.fn(spark, sfDir)
       val cols = df.columns
       assert(cols.distinct.length == cols.length, s"duplicate columns: ${cols.mkString(",")}")
       // count() both smoke-runs the plan and checks determinism of re-execution
       val n = df.count()
       assert(n >= 0)
+      // no query leaves the session conf changed for the queries after it
+      assert(spark.conf.getAll == confBefore)
     }
   }
 

@@ -9,9 +9,9 @@ import graft.pipeline.Dedup
 import scala.jdk.CollectionConverters._
 
 /** The minhash verify phase's scratch planner (r13, VERDICT #2): the
-  * in-bucket pair mass — formerly a GRAFT_LSH_DEBUG-only statistic —
-  * now drives the verify topology automatically. This spec pins the
-  * decision boundary of [[Dedup.verifyPasses]] and, the part that
+  * in-bucket pair mass, computed by `planStats`, drives the verify
+  * topology automatically. This spec pins the decision boundary of
+  * [[Dedup.verifyPasses]] and, the part that
   * matters, that a multi-pass verify returns EXACTLY the single-pass
   * pairs (band-partitioning only changes when candidates hit the disk,
   * never which candidates exist). */
