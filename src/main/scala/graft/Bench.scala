@@ -170,7 +170,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = Engine.session("graft-bench", s"local[$cpus]", cpus.toInt)
+    val spark = Engine.session("graft-bench", s"local[$cpus]")
     // Optional local-iteration filter; the driver leaves this unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val defs = only match {

@@ -17,9 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tools and the test suites' shared session all build here, so they run
   * with the same fixed settings, each for a measured reason:
   *  - AQE on (runtime re-plan, skew-join splitting), broadcast threshold
-  *    left to Spark's default, shuffle partitions sized for local[32] but
-  *    overridable — on a 1000-executor cluster this is the one knob that
-  *    must change (or be left to AQE coalescing);
+  *    left to Spark's default, shuffle partitions equal to the context's
+  *    `defaultParallelism` (its cores): a fixed 32 ran seq_next_value in
+  *    33-task stages on `local[4]`, where 5 tasks do the same work;
   *  - a codegen cache of 1000 classes: one tpch_sql pass generates 311
   *    distinct classes, one iterative_build pass 144 (local[4], sf0.01).
   *    Spark's default of 100 evicted each before it repeated, so every pass
@@ -43,13 +43,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Engine {
   def session(
       appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = 32): SparkSession = {
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions())
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // Shuffle codec knob (SCALING.md r12): zstd roughly halves shuffle
@@ -87,6 +85,8 @@ object Engine {
       .config("spark.cleaner.periodicGC.interval", "5min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the core count is known only once the context exists
+    spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toString)
     spark
   }
 

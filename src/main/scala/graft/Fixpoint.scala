@@ -25,8 +25,9 @@ import scala.util.control.NonFatal
   *    passes [[LocalEval.MaxWork]] (where a Spark job is the faster). A
   *    step it cannot compile is built once per round over a
   *    `LocalRelation` of the round's rows (see [[unionDistinct]]); a round
-  *    it declines (and a seed read from files) is collected with a
-  *    bounded `limit(cap + 1).collect()`, one job. A round LocalEval finds
+  *    it declines (and a seed read from files) is collected by one job
+  *    over all its partitions, each capped at `cap + 1` rows and the job
+  *    cancelled once the total passes `cap`. A round LocalEval finds
   *    over the cap goes straight to the large path;
   *  - '''large''' — anything over the cap: `localCheckpoint`ed at the
   *    session's own parallelism, the only form that holds what the driver
@@ -279,7 +280,7 @@ object Fixpoint {
   }
 
   /** The rows when there are at most `cap`: evaluated on the driver by
-    * [[LocalEval]], or, where it declines, by `limit(cap + 1).collect()`. */
+    * [[LocalEval]], or, where it declines, by [[boundedCollect]]. */
   private def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None else rowsOf(LocalEval.collect(df, cap), df, cap)
 
@@ -288,8 +289,15 @@ object Fixpoint {
       cap: Long): Option[Array[Row]] = outcome match {
     case LocalEval.Rows(rows) => Some(rows)
     case LocalEval.OverCap => None
-    case LocalEval.Declined => Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+    case LocalEval.Declined => boundedCollect(df, cap)
   }
+
+  /** `df`'s rows when there are at most `cap`, else `None`: one job over
+    * every partition, each stopping after `cap + 1` rows, cancelled once
+    * the rows the driver has received pass `cap`. */
+  private[graft] def boundedCollect(df: DataFrame, cap: Long): Option[Array[Row]] =
+    org.apache.spark.sql.GraftBridge.collectWithin(df, cap)(_ => 1L)
+      .map(org.apache.spark.sql.GraftBridge.toRows(df, _))
 
   private def localRound(spark: SparkSession, schema: StructType,
       rows: IndexedSeq[Row]): Round = new Round(frame(spark, schema, rows), Some(rows))

@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Engine.session("graft-plandump", "local[8]", 8)
+    val spark = Engine.session("graft-plandump", "local[8]")
     val names = Seq(
       "agg_tpch_q1", "tpch_q7", "tpch_q18", "dedup_ngram_jaccard",
       "sim_ann_lsh_topk", "sim_ann_ivf_topk", "asof_join_events",

@@ -7,7 +7,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session("graft-verify", s"local[$cpus]", cpus.toInt)
+    val spark = Engine.session("graft-verify", s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -40,27 +40,12 @@ case class EqualByteCount(left: Expression, right: Expression)
   override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "equal_byte_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length)
-      throw EqualByteCount.lengthMismatch(x.length, y.length)
-    var i = 0; var c = 0
-    while (i < x.length) { if (x(i) == y(i)) c += 1; i += 1 }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    EqualByteCount.equalBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val c = ctx.freshName("c")
-      s"""
-         |if ($a.length != $b.length)
-         |  throw graft.functions.EqualByteCount.lengthMismatch($a.length, $b.length);
-         |int $i = 0; int $c = 0;
-         |while ($i < $a.length) { if ($a[$i] == $b[$i]) $c++; $i++; }
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.EqualByteCount.equalBytes($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -74,7 +59,16 @@ object EqualByteCount {
     GraftBridge.column(
       EqualByteCount(GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  /** Called from generated code too — must be public and Java-friendly. */
+  /** Positions where `x` and `y` hold the same byte; unequal lengths
+    * throw. Called from interpreted eval, generated code and the
+    * broadcast-gram tasks. */
+  def equalBytes(x: Array[Byte], y: Array[Byte]): Int = {
+    if (x.length != y.length) throw lengthMismatch(x.length, y.length)
+    var i = 0; var c = 0
+    while (i < x.length) { if (x(i) == y(i)) c += 1; i += 1 }
+    c
+  }
+
   def lengthMismatch(a: Int, b: Int): IllegalArgumentException =
     new IllegalArgumentException(
       s"equal_byte_count: signature widths differ ($a vs $b bytes); " +

@@ -40,9 +40,24 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
   override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "intersect_size_sorted"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntersectSizeSorted.intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.IntersectSizeSorted.intersectSize($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntersectSizeSorted {
+  import org.apache.spark.sql.GraftBridge
+
+  /** The merge scan: |x ∩ y| of two ascending, distinct arrays. Called
+    * from interpreted eval, generated code and the broadcast-gram tasks. */
+  def intersectSize(x: ArrayData, y: ArrayData): Int = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var c = 0
     while (i < nx && j < ny) {
@@ -53,35 +68,6 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntersectSizeSorted {
-  import org.apache.spark.sql.GraftBridge
   /** Column-level API: `intersect_size_sorted(a, b)`. */
   def intersect_size_sorted(a: Column, b: Column): Column =
     GraftBridge.column(

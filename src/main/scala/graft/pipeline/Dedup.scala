@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import graft.{QDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
+import graft.functions.MinHash
 
 /** Deduplication suite for large-scale corpus curation — exact,
   * n-gram-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
@@ -367,31 +369,53 @@ object Dedup {
     docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Source-blocked n-gram-Jaccard near-dup pairs (id_a, id_b, jac).
+  /** Source-blocked n-gram-Jaccard near-dup pairs (id_a, id_b, jac):
+    * every pair of documents with one `source`, `id_a < id_b` and
+    * `jac >= 0.6`, where `jac = |A∩B| / (|A| + |B| − |A∩B|)` over the two
+    * documents' trigram sets.
     *
-    * Scale design: grams are SORTED 64-bit hashes (same cardinalities and
-    * intersections as the string sets, collision odds ~1e-15 per doc), so
-    * the pairwise kernel is the codegen'd merge scan IntersectSizeSorted —
-    * no per-pair hash set or materialized intersection. The self-join is
-    * SALTED: the blocking key (source) has far fewer distinct values than
-    * the cluster has cores, so the left side is salted and the right
-    * replicated S×, splitting every block into S independent work units
-    * with each pair appearing exactly once. A length-ratio prefilter
-    * (jac >= t forces min/max gram counts >= t) sits IN the join condition
-    * and skips the merge scan for most candidate pairs. */
+    * Grams are SORTED 64-bit hashes (ShingleHashes: a bijection on
+    * trigrams, so cardinalities and intersections equal the string-set
+    * values exactly), so the pairwise kernel is the merge scan
+    * IntersectSizeSorted — no per-pair hash set or materialized
+    * intersection. A length-ratio prefilter (jac >= t forces min/max gram
+    * counts >= t; here 3/5) skips the merge scan for most pairs.
+    *
+    * Two plans, one pair set; the corpus's ids and gram arrays (8 bytes
+    * each) against Spark's `autoBroadcastJoinThreshold` pick one:
+    *  - '''broadcast''' (they fit): collected once, broadcast, and paired by
+    *    one job of `defaultParallelism` tasks, each taking every n-th left
+    *    row of each source block (see [[BroadcastGrams]]). The result is
+    *    checkpointed, released by the next invocation, and read by
+    *    dedup_clusters and dedup_ngram_jaccard alike;
+    *  - '''shuffled''' (they do not, or the threshold is -1): a SALTED
+    *    self-join. The blocking key (source) has far fewer distinct values
+    *    than the cluster has cores, so the left side is salted and the
+    *    right replicated S×, splitting every block into S independent work
+    *    units with each pair appearing exactly once; the ratio prefilter
+    *    sits IN the join condition. */
   def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    // codegen'd one-pass shingling
+    val grams = graft.functions.ShingleHashes.shingle_hashes(col("text"))
+    BroadcastGrams.gather(docs, grams, bySource = true) match {
+      case Some(corpus) =>
+        val schema = BroadcastGrams.pairSchema(docs.schema("doc_id").nullable)
+        BroadcastGrams.run(s, "ngram-pairs", corpus, schema)(
+          (c, task, tasks) => BroadcastGrams.ngramTask(c, task, tasks, 0.6))
+      case None => shuffledNgramPairs(s, docs, grams)
+    }
+  }
+
+  private def shuffledNgramPairs(s: SparkSession, docs: DataFrame, grams: Column): DataFrame = {
     val S = 8 // salt fan-out
     // per-invocation evictable persist, NOT localCheckpoint: a pinned
     // checkpoint accumulates across bench reps (the r7 clusters growth);
     // the superseding persist gives this invocation's two join sides one
     // shared materialization and releases the previous invocation's
-    val g = materialized(t(s, dir, "documents"), "ngram-tri")(
-      t(s, dir, "documents").where(length(col("text")) >= 3)
-        .select(col("doc_id"), col("source"),
-          // codegen'd one-pass shingling; the hash is a bijection on
-          // trigrams, so |gs| and intersections equal the string-set values
-          // EXACTLY (collision-free), matching the string-based oracle
-          graft.functions.ShingleHashes.shingle_hashes(col("text")).as("gs"))
+    val g = materialized(docs, "ngram-tri")(
+      docs.where(length(col("text")) >= 3)
+        .select(col("doc_id"), col("source"), grams.as("gs"))
         .withColumn("n", size(col("gs")))
         .repartition(s.sparkContext.defaultParallelism))
     val a = g.select(col("doc_id").as("id_a"), col("source").as("src_a"),
@@ -516,9 +540,25 @@ object Dedup {
     }
 
   /** MinHash+LSH candidate generation + exact verification. Returns verified
-    * near-dup pairs (id_a < id_b, jac >= threshold).
+    * near-dup pairs (id_a < id_b, jac >= threshold): the pairs that share
+    * at least one band bucket of 2..100 documents, pass the size-ratio
+    * bound and the signature prefilter, and verify exactly.
     *
-    * Shuffle discipline (what survives 100 TB):
+    * Two plans, one pair set; the corpus's ids and gram arrays (8 bytes
+    * each) against Spark's `autoBroadcastJoinThreshold` pick one:
+    *  - '''broadcast''' (they fit): the ids and grams are collected once
+    *    and broadcast, and ONE job of `defaultParallelism` tasks computes
+    *    the bands, enumerates the buckets each task owns, and keeps a pair
+    *    only at the first band where its documents share a capped bucket —
+    *    so no distinct, no shuffle and no verify join (see
+    *    [[BroadcastGrams.minhashTask]]). No session conf changes;
+    *  - '''shuffled''' (they do not, or the threshold is -1): the plan
+    *    below, with its scratch planner and multi-pass verify, run with
+    *    AQE off for the operator and the setting restored after.
+    * Either way the result is checkpointed eagerly and released by the
+    * next invocation.
+    *
+    * Shuffle discipline of the shuffled plan (what survives 100 TB):
     *  - the bucket self-join carries ONLY (doc_id, signature) — never the
     *    shingle arrays; candidate rows are ~100 bytes, not ~10 KB;
     *  - candidates are pre-filtered by a 64-byte signature ESTIMATE of
@@ -546,8 +586,9 @@ object Dedup {
     * the cut and are dropped before the heavy join.
     * MinhashSigPrefilterSpec pins filtered == unfiltered on fixture data.
     *
-    * `scratchBudgetBytes` overrides the scratch planner's auto-detected
-    * disk budget (None = usable space of the shuffle scratch volume);
+    * `scratchBudgetBytes` (shuffled plan only) overrides the scratch
+    * planner's auto-detected disk budget (None = usable space of the
+    * shuffle scratch volume);
     * the planner decides the number of band-partitioned verify passes —
     * see [[verifyPasses]]. MinhashScratchPlanSpec pins the decision
     * boundary and the multi-pass == single-pass result identity.
@@ -556,11 +597,9 @@ object Dedup {
       numHashes: Int = 768, bands: Int = 96, portable: Boolean = false,
       sigPrefilter: Boolean = true,
       scratchBudgetBytes: Option[Long] = None): DataFrame = {
-    val rowsPerBand = numHashes / bands // r=8: a 0.45 noise floor collides at 0.45^8 ~ 0.002
-    // ONE materialization carries the sorted gram hashes — shared by the
-    // signature kernel and the merge-scan verify step. The codegen'd
-    // one-pass shingling kernel replaces the interpreted
-    // substr-per-window projection (the former pipeline bottleneck).
+    // The sorted gram hashes: the codegen'd one-pass shingling kernel
+    // replaces the interpreted substr-per-window projection (the former
+    // pipeline bottleneck).
     //
     // `portable` swaps BOTH hash functions for DuckDB-recomputable
     // mod-1000003 polynomials (gram hash = the simhash token polynomial
@@ -576,6 +615,26 @@ object Dedup {
         sequence(lit(1), length(col("text")) - 2),
         i => graft.functions.TokenPolyHash.token_poly_hash(
           col("text").substr(i, lit(3))))))
+    // the prefilter's cut: signatures with fewer equal bytes are dropped
+    val minEq =
+      if (!sigPrefilter || portable) -1
+      else math.ceil(MinHash.SignatureBins * math.max(0.0, threshold - 0.25)).toInt
+    BroadcastGrams.gather(docs, gramHashes, bySource = false) match {
+      case Some(corpus) =>
+        // the shuffled plan's ids come from a primitive-typed encoder
+        val schema = BroadcastGrams.pairSchema(idNullable = false)
+        BroadcastGrams.run(docs.sparkSession, s"minhash-result-$portable", corpus, schema)(
+          (c, task, tasks) => BroadcastGrams.minhashTask(c, task, tasks,
+            numHashes, bands, portable, threshold, minEq))
+      case None => shuffledMinhashPairs(docs, gramHashes, threshold, numHashes, bands,
+        portable, minEq, scratchBudgetBytes)
+    }
+  }
+
+  private def shuffledMinhashPairs(docs: DataFrame, gramHashes: Column, threshold: Double,
+      numHashes: Int, bands: Int, portable: Boolean, minEq: Int,
+      scratchBudgetBytes: Option[Long]): DataFrame = {
+    val rowsPerBand = numHashes / bands // r=8: a 0.45 noise floor collides at 0.45^8 ~ 0.002
     // AQE off for the whole operator: the topology is hand-planned — the
     // one exchange per relation is placed explicitly, the partitioning is
     // reused by construction, and every join strategy is pinned (hints /
@@ -617,19 +676,12 @@ object Dedup {
         .where(length(col("text")) >= 3)
         .select(col("doc_id"), gramHashes.as("gs")))
     val g = phase("grams")(mat.select(col("doc_id"), col("gs")))
-    // One-Permutation Hashing (Li/Owen/Zhang 2012) with rotation
-    // densification (Shrivastava/Li DOPH): ONE hash per shingle lands in
-    // bin h mod k keeping the bin-min; empty bins borrow the next filled
-    // bin clockwise. Cost per document is O(|shingles| + k) instead of the
-    // classic k-function family's O(|shingles| × k) — at corpus scale this
-    // is the difference between the signature pass being free and being
-    // the pipeline bottleneck (~500× less kernel work at k=768). Bin-min
-    // agreement between two documents still estimates Jaccard, so the
-    // banding math (r=8: noise floor 0.45^8 ≈ 0.002) is unchanged, and
-    // the exact-Jaccard verify step keeps precision at 1 regardless.
-    // The signature is a pure function of the shingle SET (min is
-    // commutative, densification deterministic), so any partitioning and
-    // any row order produce identical bands.
+    // One-Permutation Hashing with rotation densification
+    // (graft.functions.MinHash): O(|shingles| + k) per document instead of
+    // the classic k-function family's O(|shingles| × k), ~500× less kernel
+    // work at k=768. Bin-min agreement still estimates Jaccard, so the
+    // banding math (r=8: noise floor 0.45^8 ≈ 0.002) holds, and the
+    // exact-Jaccard verify keeps precision at 1 regardless.
     val spark2 = docs.sparkSession
     import spark2.implicits._
     val nh = numHashes
@@ -640,33 +692,9 @@ object Dedup {
       .as[(Long, Array[Long])]   // primitive-array encoder: no per-element boxing
       .mapPartitions { it =>
         it.flatMap { case (id, a) =>
-          val mins = Array.fill(nh)(Long.MaxValue)
-          var j = 0
-          while (j < a.length) {
-            val h = a(j)
-            val b = java.lang.Math.floorMod(h, nh)
-            if (h < mins(b)) mins(b) = h
-            j += 1
-          }
-          // rotation densification: empty bin i takes the value of the
-          // next filled bin clockwise, offset by the hop distance so runs
-          // of empties don't produce identical coordinates
-          var i = 0
-          while (i < nh) {
-            if (mins(i) == Long.MaxValue) {
-              var hop = 1
-              while (mins((i + hop) % nh) == Long.MaxValue) hop += 1
-              mins(i) = mins((i + hop) % nh) + hop
-            }
-            i += 1
-          }
+          val mins = MinHash.binMins(UnsafeArrayData.fromPrimitiveArray(a), nh)
           (0 until nb).iterator.map { bi =>
-            var h = if (port) 0L else 1125899906842597L
-            var k = bi * rpb
-            while (k < (bi + 1) * rpb) {
-              h = if (port) (h * 31 + mins(k)) % 1000003L else h * 31 + mins(k)
-              k += 1
-            }
+            val h = MinHash.bandHash(mins, bi, rpb, port)
             (id, a.length, bi, h) // carry |grams|: the verify prefilter key
           }
         }
@@ -696,10 +724,7 @@ object Dedup {
     // bucket sizes: pure codegen count aggregate, reusing the persisted
     // partitioning (no exchange). Feeds the scratch planner AND the
     // adaptive sig-join sizing below in ONE action.
-    // Σ n over a bucket's rows: every doc sits in one bucket per band, so
-    // the total over buckets is bands × the corpus' gram count
-    val sizes = banded.groupBy(col("b"), col("h"))
-      .agg(count(lit(1)).as("c"), sum(col("n")).as("grams"))
+    val sizes = banded.groupBy(col("b"), col("h")).agg(count(lit(1)).as("c"))
     // ---- scratch planning (r13, VERDICT #2): the in-bucket pair mass --
     // the debug-only estimate promoted to a PRE-VERIFY PLANNING STEP —
     // now drives the verify topology automatically. Estimated peak
@@ -717,15 +742,9 @@ object Dedup {
     val planStats = sizes.agg(
       coalesce(sum(when(col("c").between(2, 100),
         col("c") * (col("c") - 1) / 2)), lit(0.0)).as("pm"),
-      coalesce(sum(col("c")), lit(0L)).as("rows"),
-      coalesce(sum(col("grams")), lit(0L)).as("grams")).first()
+      coalesce(sum(col("c")), lit(0L)).as("rows")).first()
     val pairMass = planStats.getDouble(0)
     val nDocs = planStats.getLong(1) / bands
-    // the gram arrays' measured payload: the verify joins broadcast them
-    // when it fits the session's broadcast threshold (never at -1)
-    val gramBytes = planStats.getLong(2) / bands * java.lang.Long.BYTES
-    val gramsFit =
-      gramBytes <= docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val budget = scratchBudgetBytes.getOrElse(usableScratchBytes(docs.sparkSession))
     val numPasses = verifyPasses(pairMass, budget, bands)
     // the decision line is the scale-calibration instrument (SCALING.md
@@ -788,11 +807,7 @@ object Dedup {
           least(col("na"), col("nb")).cast("double") >=
             thr * greatest(col("na"), col("nb")))
         .select(col("id_a"), col("id_b"))
-      // under a broadcast verify the distinct's exchange is the result's
-      // partitioning: place it at the session's parallelism, as every
-      // other exchange here is (the shuffled verify re-partitions on id_a)
-      (if (gramsFit) pairs.repartition(spark2.sparkContext.defaultParallelism,
-        col("id_a"), col("id_b")) else pairs).distinct()
+      pairs.distinct()
     }
     val cands = phase("cands+distinct")(candsFor(banded))
     // signature-estimate prefilter (see scaladoc): the distinct pair list
@@ -812,37 +827,14 @@ object Dedup {
     // sides), so one evictable persist halves the signature pass
     lazy val sigs = materialized(docs, s"minhash-sigs-$portable") {
       val sigDf = g.as[(Long, Array[Long])].mapPartitions { it =>
-        it.map { case (id, a) =>
-          val mins = Array.fill(64)(Long.MaxValue)
-          var j = 0
-          while (j < a.length) {
-            val h = a(j)
-            val b = java.lang.Math.floorMod(h, 64)
-            if (h < mins(b)) mins(b) = h
-            j += 1
-          }
-          var i = 0
-          while (i < 64) {
-            if (mins(i) == Long.MaxValue) {
-              var hop = 1
-              while (mins((i + hop) % 64) == Long.MaxValue) hop += 1
-              mins(i) = mins((i + hop) % 64) + hop
-            }
-            i += 1
-          }
-          val bytes = new Array[Byte](64)
-          i = 0
-          while (i < 64) { bytes(i) = mins(i).toByte; i += 1 }
-          (id, bytes)
-        }
+        it.map { case (id, a) => (id, MinHash.signature(UnsafeArrayData.fromPrimitiveArray(a))) }
       }.toDF("doc_id", "sig")
       sigDf
     }
     val sigsFit = nDocs * 90L < MinhashSigBroadcastBytes
     def prefilter(c: DataFrame): DataFrame =
-      if (!sigPrefilter || portable) c
+      if (minEq < 0) c
       else {
-        val minEq = math.ceil(64.0 * math.max(0.0, threshold - 0.25)).toInt
         def side(s: DataFrame): DataFrame =
           if (sigsFit) broadcast(s) else s.hint("shuffle_hash")
         c.join(side(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))), "id_a")
@@ -868,7 +860,7 @@ object Dedup {
     // the per-invocation materialization discipline (Checkpoints). The
     // multi-pass path keeps its checkpoint + shuffle-reclaim discipline —
     // its whole point is bounding scratch, not rep latency.
-    if (phaseTimer && sigPrefilter && !portable) phase("sigs")(sigs)
+    if (phaseTimer && minEq >= 0) phase("sigs")(sigs)
     val survivors =
       if (numPasses == 1) phase("prefilter")(prefilter(cands))
       else {
@@ -897,14 +889,9 @@ object Dedup {
     // the per-partition hash from the corpus side, which is small by
     // construction (docs/partitions rows); g's persisted doc_id
     // hash-partitioning is reused, so the gram arrays never re-shuffle.
-    // When the measured gram bytes fit the broadcast threshold, g is
-    // broadcast instead: then no gram array rides the pair shuffles at
-    // all (at sf0.01, ~85 k survivors × two ~2.4 KB arrays per pair).
-    def gramSide(side: DataFrame): DataFrame =
-      if (gramsFit) broadcast(side) else side.hint("shuffle_hash")
     def verifyJoin(pairs: DataFrame): DataFrame = pairs
-      .join(gramSide(g.select(col("doc_id").as("id_a"), col("gs").as("gs_a"))), "id_a")
-      .join(gramSide(g.select(col("doc_id").as("id_b"), col("gs").as("gs_b"))), "id_b")
+      .join(g.select(col("doc_id").as("id_a"), col("gs").as("gs_a")).hint("shuffle_hash"), "id_a")
+      .join(g.select(col("doc_id").as("id_b"), col("gs").as("gs_b")).hint("shuffle_hash"), "id_b")
       .select(col("id_a"), col("id_b"),
         graft.functions.IntersectSizeSorted
           .intersect_size_sorted(col("gs_a"), col("gs_b")).as("ni"),

@@ -1,14 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.concurrent.atomic.AtomicLong
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Access bridge for extension libraries: Column ↔ Expression conversion
   * is `private[sql]` in Spark 4 (classic.ExpressionUtils); this re-exports
@@ -73,6 +77,80 @@ object GraftBridge {
     val id = roundInputIds.incrementAndGet()
     val size = math.max(1L, session.sessionState.conf.autoBroadcastJoinThreshold)
     (classic.Dataset.ofRows(session, RoundInput(DataTypeUtils.toAttributes(schema), id, size)), id)
+  }
+
+  private val collectIds = new AtomicLong()
+
+  /** The rows of `df` when their total `weight` is at most `budget`, else
+    * `None`; one job over all partitions, in partition order. Each task
+    * ships its partition's rows, or only the fact that their weight passed
+    * `budget`; the driver cancels the job, and drops what it holds, once
+    * the running total passes `budget`. So the driver holds at most twice
+    * `budget` at once, where `limit(n).collect()` runs partition 0 first
+    * and the rest as a second job. The rows are copied `UnsafeRow`s. */
+  def collectWithin(df: DataFrame, budget: Long)(
+      weight: InternalRow => Long): Option[Array[InternalRow]] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val sc = ds.sparkSession.sparkContext
+    val numFields = df.schema.length
+    SQLExecution.withNewExecutionId(ds.queryExecution, Some("collectWithin")) {
+      val rdd = ds.queryExecution.toRdd
+      val chunks = rdd.mapPartitions { it =>
+        val bytes = new ByteArrayOutputStream()
+        val out = new DataOutputStream(bytes)
+        val buf = new Array[Byte](4096)
+        var w = 0L
+        while (w <= budget && it.hasNext) {
+          val row = it.next()
+          w += weight(row)
+          val u = row.asInstanceOf[UnsafeRow]
+          out.writeInt(u.getSizeInBytes)
+          u.writeToStream(out, buf)
+        }
+        out.flush()
+        Iterator.single((w, if (w <= budget) bytes.toByteArray else null))
+      }
+      val parts = new Array[Array[Byte]](rdd.getNumPartitions)
+      val tag = s"graft-collect-within-${collectIds.incrementAndGet()}"
+      // the handler runs under the job waiter's lock, one result at a time
+      var total = 0L
+      @volatile var over = false
+      def take(i: Int, chunk: (Long, Array[Byte])): Unit = if (!over) {
+        total += chunk._1
+        if (chunk._2 == null || total > budget) {
+          over = true
+          parts.indices.foreach(parts(_) = null)
+          sc.cancelJobsWithTag(tag)
+        } else parts(i) = chunk._2
+      }
+      sc.addJobTag(tag)
+      val job = try sc.submitJob(chunks, (it: Iterator[(Long, Array[Byte])]) => it.next(),
+        parts.indices, take, ())
+      finally sc.removeJobTag(tag)
+      val done = Await.ready(job, Duration.Inf).value.get
+      if (over) None
+      else {
+        done.get // rethrows a failed job's error
+        Some(parts.flatMap { p =>
+          val in = new DataInputStream(new java.io.ByteArrayInputStream(p))
+          Iterator.continually(in.available() > 0).takeWhile(identity).map { _ =>
+            val b = new Array[Byte](in.readInt())
+            in.readFully(b)
+            val row = new UnsafeRow(numFields)
+            row.pointTo(b, b.length)
+            row: InternalRow
+          }
+        })
+      }
+    }
+  }
+
+  /** `rows` of `df`'s row type as external `Row`s, as `collect` returns them. */
+  def toRows(df: DataFrame, rows: Array[InternalRow]): Array[Row] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val toRow = ds.exprEnc.resolveAndBind(ds.queryExecution.analyzed.output,
+      ds.sparkSession.sessionState.analyzer).createDeserializer()
+    rows.map(toRow)
   }
 
   /** Returns once Spark's listener bus has delivered every event posted so

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = Engine.session("graft-test", "local[4]", 4)
+  lazy val spark: SparkSession = Engine.session("graft-test", "local[4]")
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -25,7 +25,7 @@ object LocalEvalCrossover {
   def main(args: Array[String]): Unit = {
     val cpus = args.lift(0).map(_.toInt).getOrElse(4)
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = Engine.session("local-eval-crossover", s"local[$cpus]", cpus)
+    val spark = Engine.session("local-eval-crossover", s"local[$cpus]")
     import spark.implicits._
 
     // A round step, `single`: as the steps built it for one single-task

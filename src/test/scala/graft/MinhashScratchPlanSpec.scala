@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.execution.{BinaryExecNode, QueryExecution, SparkPlan}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Dedup
-
-import scala.jdk.CollectionConverters._
 
 /** The minhash verify phase's scratch planner (r13, VERDICT #2): the
   * in-bucket pair mass, computed by `planStats`, drives the verify
@@ -66,6 +61,15 @@ class MinhashScratchPlanSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("multi-pass verify returns exactly the single-pass pairs") {
+    // the scratch planner is on the shuffled path only: threshold -1 forces it
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try multiPassEqualsSinglePass()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def multiPassEqualsSinglePass(): Unit = {
     val docs = Tables.t(spark, sfDir, "documents")
     // 64×8 banding keeps the default r=8 selectivity with an 8-pass cap,
     // so the forced maximum split stays cheap at fixture scale
@@ -78,43 +82,5 @@ class MinhashScratchPlanSpec extends AnyFunSuite {
       s"band-partitioned verify diverged: ${(sliced diff single).take(3)} extra, " +
         s"${(single diff sliced).take(3)} missing")
     assert(single.nonEmpty || docs.limit(1).count() == 0)
-  }
-
-  test("broadcast verify returns exactly the shuffled verify's pairs") {
-    val docs = Tables.t(spark, sfDir, "documents")
-    /** The pairs, their partition count, and the join that reads the
-      * gram arrays (the checkpointed result hides its plan, so the
-      * checkpoint action's plan is read from a listener). */
-    def run(): (Set[(Long, Long)], Int, Seq[String]) = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        val result = Dedup.minhashPairs(docs, threshold = 0.6, numHashes = 64, bands = 8)
-        // collected before the next invocation releases its checkpoint
-        val out = (collect(result), result.rdd.getNumPartitions)
-        GraftBridge.drainListenerBus(spark)
-        val verify = plans.asScala.toSeq.flatMap(_.collect {
-          case j: BinaryExecNode if j.right.output.exists(_.name == "gs_a") => j.nodeName
-        })
-        (out._1, out._2, verify)
-      } finally spark.listenerManager.unregister(listener)
-    }
-    // the fixture's gram arrays fit the broadcast threshold: g is broadcast
-    val (broadcastVerify, partitions, broadcastJoins) = run()
-    assert(broadcastVerify.nonEmpty)
-    assert(broadcastJoins == Seq("BroadcastHashJoin"))
-    assert(partitions == spark.sparkContext.defaultParallelism)
-    // a threshold of -1 keeps the shuffled verify
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(threshold)
-    spark.conf.set(threshold, "-1")
-    val (shuffledVerify, _, shuffledJoins) =
-      try run() finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
-    assert(shuffledJoins == Seq("ShuffledHashJoin"))
-    assert(shuffledVerify == broadcastVerify)
   }
 }
