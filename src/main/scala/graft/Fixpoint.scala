@@ -6,9 +6,14 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** Driver-loop fixpoint iteration, modelled on Spark 4.1's `UnionLoopExec`
-  * (the engine's own RepeatUnion; reference:
-  * adapter/enumerable/EnumerableRepeatUnion.java:39).
+/** Driver-loop fixpoint iteration for the engine's two recursive loops,
+  * both shaped like the reference's RepeatUnion
+  * (adapter/enumerable/EnumerableRepeatUnion.java:39):
+  *  - the library's UNION-distinct `Recursive.repeatUnion` and state
+  *    iteration (`Dedup.clusters`): [[unionDistinct]] and [[iterate]];
+  *  - Spark's native `WITH RECURSIVE` (UNION ALL): its `UnionLoop` is
+  *    planned as `GraftUnionLoopExec`, which runs [[unionAll]] and hands
+  *    anything the driver cannot finish to Spark's own `UnionLoopExec`.
   *
   * Each round applies a step to the previous round's materialized
   * result, and the module picks how that result is held:
@@ -185,6 +190,82 @@ object Fixpoint {
     accFrame
   }
 
+  /** What [[unionAll]] evaluated: every level's rows in order, anchor
+    * first; the anchor's row count; and the number of non-empty levels.
+    * `UnionLoopExec` reports the last two as `numAnchorOutputRows` and
+    * `numIterations`. */
+  final case class Levels(rows: IndexedSeq[Row], anchorRows: Long, iterations: Long)
+
+  /** Spark's native recursion on the driver: `UnionLoopExec`'s UNION ALL
+    * contract, which is the anchor, then the recursion applied to each
+    * level's rows until a level is empty. `recursion` reads the previous
+    * level through the transient input `input`. [[LocalEval]] compiles it
+    * once, and each level binds its rows into that plan, so a level runs
+    * no analysis, no optimization and no job. The anchor is collected as
+    * a seed is ([[collectUpTo]]).
+    *
+    * The loop stops where `UnionLoopExec` stops. A pushed-down `limit`
+    * ends it once the total reaches the limit, and caps each level at
+    * what remains. It returns `Left(reason)` wherever it could not finish
+    * exactly as Spark would; the caller then runs Spark's own loop:
+    *  - where Spark raises an error: a non-empty level past `levelLimit`,
+    *    and, with no `limit`, a total of `rowLimit` rows or more (-1
+    *    turns either check off);
+    *  - a recursion LocalEval cannot compile, or one whose row types are
+    *    not the anchor's;
+    *  - an anchor, a level or a total past [[localRowCap]] (a broadcast
+    *    threshold of -1 turns the driver path off);
+    *  - a level LocalEval declines, such as one past [[LocalEval.MaxWork]].
+    * There is no large path: Spark's loop is the large path. */
+  def unionAll(anchor: DataFrame, recursion: DataFrame, input: Long, limit: Option[Int],
+      levelLimit: Int, rowLimit: Int): Either[String, Levels] = {
+    val cap = localRowCap(anchor)
+    if (cap <= 0) return Left("broadcast threshold off")
+    val plan = LocalEval.compile(recursion) match {
+      case Some(c) if sameTypes(c.schema, anchor.schema) => c
+      case Some(_) => return Left("recursion changes the row type")
+      case None => return Left("recursion not driver-evaluable")
+    }
+    // UnionLoopExec's countdown: the pushed limit, else the row limit
+    var remaining = limit.getOrElse(rowLimit)
+    val counted = remaining != -1
+    def capped(rows: Array[Row]): IndexedSeq[Row] =
+      if (limit.exists(_ >= 0)) rows.toIndexedSeq.take(math.max(remaining, 0)) else rows.toIndexedSeq
+    var level = collectUpTo(anchor, cap) match {
+      case Some(rows) => capped(rows)
+      case None => return Left("anchor over the broadcast threshold")
+    }
+    val anchorRows = level.size.toLong
+    val out = IndexedSeq.newBuilder[Row]
+    var total = 0L
+    var iterations = 0L
+    var depth = 1
+    var limitReached = false
+    while (level.nonEmpty && !limitReached) {
+      if (levelLimit != -1 && depth > levelLimit) return Left("level limit")
+      out ++= level
+      total += level.size
+      iterations += 1
+      if (total > cap) return Left("result over the broadcast threshold")
+      if (counted) {
+        remaining -= level.size
+        if (remaining <= 0) {
+          if (limit.isDefined) limitReached = true
+          else return Left("row limit")
+        }
+      }
+      if (!limitReached) {
+        level = LocalEval.run(plan, Map(input -> level), cap) match {
+          case LocalEval.Rows(rows) => capped(rows)
+          case LocalEval.OverCap => return Left("level over the broadcast threshold")
+          case LocalEval.Declined => return Left("level declined")
+        }
+        depth += 1
+      }
+    }
+    Right(Levels(out.result(), anchorRows, iterations))
+  }
+
   /** A step compiled over a transient input: the plan and the input's id. */
   private final case class StepPlan(compiled: LocalEval.Compiled, input: Long) {
     def schema: StructType = compiled.schema
@@ -281,7 +362,7 @@ object Fixpoint {
 
   /** The rows when there are at most `cap`: evaluated on the driver by
     * [[LocalEval]], or, where it declines, by [[boundedCollect]]. */
-  private def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
+  def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None else rowsOf(LocalEval.collect(df, cap), df, cap)
 
   /** The rows of a LocalEval outcome; a declined one runs `df` as one job. */

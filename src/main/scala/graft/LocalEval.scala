@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.ControlThrowable
 
 /** Driver-side evaluation of a small optimized plan whose leaves are all
-  * `LocalRelation`s or `RoundInput`s: no physical planning, no job, no
+  * `LocalRelation`s, `RoundInput`s or `OneRowRelation`s (one empty row, the
+  * leaf of a `SELECT <literals>`): no physical planning, no job, no
   * codegen. [[compile]] optimizes a plan once; [[run]] evaluates it with
   * each round input bound to rows, so a fixpoint step pays analysis and
   * optimization once, not every round. It extends the idea of Spark's
@@ -80,15 +81,12 @@ object LocalEval {
     def schema: StructType = plan.schema
   }
 
-  /** `df`'s optimized plan when every leaf is a `LocalRelation` or a
-    * `RoundInput` and every operator is supported; `None` otherwise. */
+  /** `df`'s optimized plan when every leaf is a `LocalRelation`, a
+    * `RoundInput` or a `OneRowRelation` and every operator is supported;
+    * `None` otherwise. */
   def compile(df: DataFrame): Option[Compiled] = {
     // a plan that reads files or checkpoints is declined before it is optimized
-    val driverLeaves = df.queryExecution.analyzed.collectLeaves().forall {
-      case _: LocalRelation | _: RoundInput => true
-      case _ => false
-    }
-    if (!driverLeaves) None
+    if (!driverLocal(df.queryExecution.analyzed)) None
     else Some(df.queryExecution.optimizedPlan).filter(supported)
       .map(Compiled(_, df.sparkSession.sessionState.conf))
   }
@@ -110,6 +108,7 @@ object LocalEval {
     val leafRows = c.plan.collectLeaves().map {
       case r: LocalRelation => r.data.size.toLong
       case r: RoundInput => bindings(r.id).size.toLong
+      case _: OneRowRelation => 1L
     }.sum
     if (leafRows > maxWork) (Declined, 0L)
     else SQLConf.withExistingConf(c.conf) {
@@ -124,10 +123,16 @@ object LocalEval {
     }
   }
 
+  /** Whether every leaf of `p` is one [[compile]] accepts. */
+  def driverLocal(p: LogicalPlan): Boolean = p.collectLeaves().forall {
+    case _: LocalRelation | _: RoundInput | _: OneRowRelation => true
+    case _ => false
+  }
+
   private final case class Stop(outcome: Outcome) extends ControlThrowable
 
   private def supported(p: LogicalPlan): Boolean = (p match {
-    case _: LocalRelation | _: RoundInput => true
+    case _: LocalRelation | _: RoundInput | _: OneRowRelation => true
     case Project(list, _) => list.forall(evaluable)
     case Filter(cond, _) => evaluable(cond)
     case Join(_, _, Inner | Cross, cond, _) => cond.forall(evaluable)
@@ -199,6 +204,7 @@ object LocalEval {
     private def eval(p: LogicalPlan, atRoot: Boolean): IndexedSeq[InternalRow] = p match {
       case r: LocalRelation => bounded(r.data.iterator, atRoot)
       case r: RoundInput => bounded(input(r).iterator, atRoot)
+      case _: OneRowRelation => bounded(Iterator.single(InternalRow.empty), atRoot)
       case Project(list, child) =>
         val es = bind(list, child.output)
         bounded(eval(child, atRoot).iterator.map(project(es)), atRoot)

@@ -70,6 +70,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // deferred NEXT VALUE FOR: SequenceAssignPlan → SequenceAssignExec
     e.injectPlannerStrategy(session =>
       new graft.plans.SequenceStrategy(session))
+    // native WITH RECURSIVE: UnionLoop → GraftUnionLoopExec, its recursion
+    // planned once and each level evaluated on the driver
+    e.injectPlannerStrategy(_ => new org.apache.spark.sql.GraftUnionLoopStrategy)
   }
 }
 

@@ -12,14 +12,19 @@ import org.apache.spark.sql.functions._
   *
   * Spark's native recursion (`UnionLoop`) accepts only UNION ALL
   * (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`), so the UNION-DISTINCT form is
-  * a driver loop: [[graft.Fixpoint.unionDistinct]], one level per round,
-  * modelled on `UnionLoopExec`. While a level's rows fit Spark's broadcast
-  * size they live on the driver, and the step (filters, projections,
-  * joins against other driver-local inputs) is planned once over a
-  * transient input, the reference's TransientTable scan; each level binds
-  * its rows into that plan and is evaluated on the driver with no job. A
-  * larger level is checkpointed and deduplicated with `except` at the
-  * session's own parallelism. The loop changes no session conf.
+  * a driver loop: [[graft.Fixpoint.unionDistinct]], one level per round.
+  * While a level's rows fit Spark's broadcast size they live on the
+  * driver, and the step (filters, projections, joins against other
+  * driver-local inputs) is planned once over a transient input, the
+  * reference's TransientTable scan; each level binds its rows into that
+  * plan and is evaluated on the driver with no job. A larger level is
+  * checkpointed and deduplicated with `except` at the session's own
+  * parallelism. The loop changes no session conf.
+  *
+  * The native UNION ALL form runs the same way: the engine plans Spark's
+  * `UnionLoop` as `GraftUnionLoopExec`, which compiles the recursion once
+  * and evaluates each level on the driver ([[graft.Fixpoint.unionAll]]),
+  * and hands a loop it cannot finish that way to Spark's `UnionLoopExec`.
   */
 object Recursive {
 
@@ -57,8 +62,8 @@ object Recursive {
         |SELECT n, n * n AS n_sq FROM r""") { (s, dir) =>
       import s.implicits._
       val seed = Seq(1).toDF("n")
-      // every level is one row on the driver: the step folds into the next
-      // LocalRelation in the optimizer, so the 100 rounds launch no job
+      // every level is one row on the driver: the step is compiled once and
+      // each level's row is bound into it, so the 100 rounds launch no job
       repeatUnion(seed, d => d.where(col("n") < 100).select((col("n") + 1).as("n")),
         tag = "recursive_series")
         .select(col("n"), (col("n") * col("n")).as("n_sq"))
@@ -97,11 +102,13 @@ object Recursive {
     },
 
     // ---- NATIVE recursion: the same fixpoints as ONE dual-engine SQL ------
-    // Spark 4.1 executes WITH RECURSIVE natively (UnionLoop — the engine's
-    // own RepeatUnion analogue), so the reference's recursive surface also
-    // runs as plain SQL text shared verbatim with the oracle. The
-    // driver-loop repeatUnion above remains the LIBRARY path: UNION
-    // (distinct) semantics, which native recursion rejects, and
+    // Spark 4.1 parses WITH RECURSIVE into a UnionLoop (its RepeatUnion
+    // analogue), so the reference's recursive surface also runs as plain SQL
+    // text shared verbatim with the oracle. The engine plans the UnionLoop as
+    // GraftUnionLoopExec: the recursion is compiled once and every level is
+    // evaluated on the driver (Fixpoint.unionAll), with Spark's UnionLoopExec
+    // as the fallback. The driver-loop repeatUnion above remains the LIBRARY
+    // path: UNION (distinct) semantics, which native recursion rejects, and
     // programmatic step functions.
     QDef.common("recursive_series_native",
       """WITH RECURSIVE r(n) AS (

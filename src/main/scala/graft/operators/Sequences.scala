@@ -45,42 +45,50 @@ object Sequences {
     def started: Boolean = next.get() != start
   }
 
-  private val catalog = new ConcurrentHashMap[String, SeqState]()
+  /** (session, name) → state: each session has its own sequences, as
+    * TableDdlSql keys its tables, so two sessions may each have a `seq`
+    * of their own. A stopped session's sequences are swept on create. */
+  private val catalog = new ConcurrentHashMap[(SparkSession, String), SeqState]()
 
-  def create(name: String, startWith: Long = 1L, incrementBy: Long = 1L,
+  private def sweep(): Unit = catalog.keySet.removeIf(_._1.sparkContext.isStopped)
+
+  def create(spark: SparkSession, name: String, startWith: Long = 1L, incrementBy: Long = 1L,
       replace: Boolean = false): Unit = {
+    sweep()
     val st = SeqState(startWith, incrementBy, new AtomicLong(startWith))
-    if (replace) catalog.put(name, st)
-    else if (catalog.putIfAbsent(name, st) != null)
+    if (replace) catalog.put((spark, name), st)
+    else if (catalog.putIfAbsent((spark, name), st) != null)
       throw new IllegalArgumentException(s"Sequence '$name' already exists")
   }
 
   /** CREATE SEQUENCE IF NOT EXISTS — atomic put-if-absent (a
-    * check-then-create would race two concurrent sessions into the
+    * check-then-create would race two concurrent callers into the
     * "already exists" error the clause is meant to suppress). */
-  def createIfNotExists(name: String, startWith: Long = 1L,
-      incrementBy: Long = 1L): Unit =
-    catalog.putIfAbsent(name,
+  def createIfNotExists(spark: SparkSession, name: String, startWith: Long = 1L,
+      incrementBy: Long = 1L): Unit = {
+    sweep()
+    catalog.putIfAbsent((spark, name),
       SeqState(startWith, incrementBy, new AtomicLong(startWith)))
+  }
 
-  def drop(name: String): Boolean = catalog.remove(name) != null
+  def drop(spark: SparkSession, name: String): Boolean = catalog.remove((spark, name)) != null
 
-  def exists(name: String): Boolean = catalog.containsKey(name)
+  def exists(spark: SparkSession, name: String): Boolean = catalog.containsKey((spark, name))
 
   /** Whether the sequence has handed out any value yet (diagnostic; the
     * deferred-reservation spec pins parse/EXPLAIN purity with it). */
-  def started(name: String): Boolean = state(name).started
+  def started(spark: SparkSession, name: String): Boolean = state(spark, name).started
 
-  private def state(name: String): SeqState = {
-    val st = catalog.get(name)
+  private def state(spark: SparkSession, name: String): SeqState = {
+    val st = catalog.get((spark, name))
     if (st == null)
       throw new IllegalArgumentException(s"Table '$name' not found")
     st
   }
 
   /** CURRENT VALUE FOR — the last value handed out, without advancing. */
-  def currentValue(name: String): Long = {
-    val st = state(name)
+  def currentValue(spark: SparkSession, name: String): Long = {
+    val st = state(spark, name)
     if (!st.started)
       throw new IllegalStateException(
         s"Sequence '$name' has not yet generated a value")
@@ -92,7 +100,7 @@ object Sequences {
     * count. With `orderCols` the values follow that global order
     * deterministically (range partition + in-partition sort); without,
     * they follow the DataFrame's existing partition/row order — unique
-    * and gap-free either way.
+    * and gap-free either way. The sequence is `df`'s session's.
     *
     * Cost: one extra pass to count rows per partition (the price of
     * gap-free blocks); the data itself is never globally re-sorted
@@ -102,8 +110,8 @@ object Sequences {
     */
   def nextValueFor(df: DataFrame, name: String, as: String,
       orderCols: Seq[Column] = Nil): DataFrame = {
-    val st = state(name)
     val spark = df.sparkSession
+    val st = state(spark, name)
     val parted =
       if (orderCols.nonEmpty) df.repartitionByRange(orderCols: _*)
       else df
@@ -144,7 +152,7 @@ object Sequences {
       """SELECT o_orderkey,
         |  1000 + (row_number() OVER (ORDER BY o_orderkey) - 1) * 5 AS seqval
         |FROM orders""") { (s, dir) =>
-      create("q_seq", startWith = 1000L, incrementBy = 5L, replace = true)
+      create(s, "q_seq", startWith = 1000L, incrementBy = 5L, replace = true)
       nextValueFor(t(s, dir, "orders").select(col("o_orderkey")),
         "q_seq", "seqval", Seq(col("o_orderkey")))
     }

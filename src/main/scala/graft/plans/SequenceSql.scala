@@ -30,6 +30,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the same contract as re-issuing the statement. Within one execution
   * the block is reserved once on the driver, so task retries and
   * partition recomputes replay the same values.
+  * Sequences belong to the session that parses the statement: two
+  * sessions may each create their own sequence of the same name.
   * Sequence EXISTENCE is still checked at parse time (a catalog error,
   * mirroring the reference validator's "Table not found").
   * CURRENT VALUE is a parse-time constant by semantics
@@ -53,12 +55,12 @@ object SequenceSql {
     case CreateRe(ifNotExists, name, start, inc) =>
       val startWith = Option(start).map(_.toLong).getOrElse(1L)
       val incBy = Option(inc).map(_.toLong).getOrElse(1L)
-      if (ifNotExists == null) Sequences.create(name, startWith, incBy)
-      else Sequences.createIfNotExists(name, startWith, incBy)
+      if (ifNotExists == null) Sequences.create(spark, name, startWith, incBy)
+      else Sequences.createIfNotExists(spark, name, startWith, incBy)
       Some(delegate.parsePlan(
         s"SELECT 'created' AS status, '$name' AS sequence"))
     case DropRe(ifExists, name) =>
-      val dropped = Sequences.drop(name)
+      val dropped = Sequences.drop(spark, name)
       if (!dropped && ifExists == null)
         throw new IllegalArgumentException(s"Table '$name' not found")
       Some(delegate.parsePlan(
@@ -68,7 +70,7 @@ object SequenceSql {
       // validator; the RESERVATION is deferred — the plan carries an
       // unexecuted assignment and the counter advances only when an
       // action executes it (SequenceAssignPlan/-Exec)
-      if (!Sequences.exists(name))
+      if (!Sequences.exists(spark, name))
         throw new IllegalArgumentException(s"Table '$name' not found")
       val src = spark.sql(s"SELECT * FROM $source")
       val node = SequenceAssignPlan(src.queryExecution.analyzed, name, alias,
@@ -76,7 +78,7 @@ object SequenceSql {
       Some(org.apache.spark.sql.catalyst.plans.logical.Project(
         Seq(node.outAttr), node))
     case CurrentRe(name, alias, source) =>
-      val cur = Sequences.currentValue(name)
+      val cur = Sequences.currentValue(spark, name)
       Some(delegate.parsePlan(
         s"SELECT CAST($cur AS BIGINT) AS $alias FROM $source"))
     case _ => None

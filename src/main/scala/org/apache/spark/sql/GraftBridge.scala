@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
@@ -73,11 +73,19 @@ object GraftBridge {
   /** A frame over a new [[RoundInput]] of `schema`, and the id that binds
     * its rows. */
   def roundInput(spark: SparkSession, schema: StructType): (DataFrame, Long) = {
-    val session = spark.asInstanceOf[classic.SparkSession]
-    val id = roundInputIds.incrementAndGet()
-    val size = math.max(1L, session.sessionState.conf.autoBroadcastJoinThreshold)
-    (classic.Dataset.ofRows(session, RoundInput(DataTypeUtils.toAttributes(schema), id, size)), id)
+    val in = roundInput(spark, DataTypeUtils.toAttributes(schema))
+    (frame(spark, in), in.id)
   }
+
+  /** A new [[RoundInput]] whose output is `output`, attributes a plan
+    * already refers to. */
+  def roundInput(spark: SparkSession, output: Seq[Attribute]): RoundInput = RoundInput(output,
+    roundInputIds.incrementAndGet(),
+    math.max(1L, spark.sessionState.conf.autoBroadcastJoinThreshold))
+
+  /** A frame over an analyzed or optimized plan. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   private val collectIds = new AtomicLong()
 

@@ -64,7 +64,7 @@ class SequencesSpec extends AnyFunSuite {
   }
 
   test("distributed: unordered assignment is unique and gap-free across 8 partitions") {
-    operators.Sequences.create("bulk_seq", startWith = 1L, incrementBy = 1L,
+    operators.Sequences.create(spark, "bulk_seq", startWith = 1L, incrementBy = 1L,
       replace = true)
     val df = spark.range(0, 1000).toDF("id").repartition(8)
     val vals = operators.Sequences.nextValueFor(df, "bulk_seq", "v")
@@ -72,11 +72,11 @@ class SequencesSpec extends AnyFunSuite {
     assert(vals.length == 1000)
     assert(vals.distinct.length == 1000, "values must be unique")
     assert(vals.min == 1L && vals.max == 1000L, "block must be gap-free")
-    assert(operators.Sequences.currentValue("bulk_seq") == 1000L)
+    assert(operators.Sequences.currentValue(spark, "bulk_seq") == 1000L)
   }
 
   test("distributed: ordered assignment equals rank arithmetic deterministically") {
-    operators.Sequences.create("ord_seq", startWith = 1000L, incrementBy = 5L,
+    operators.Sequences.create(spark, "ord_seq", startWith = 1000L, incrementBy = 5L,
       replace = true)
     val df = spark.range(0, 500).toDF("id")
       .withColumn("k", col("id") * 37 % 501) // a permutation, shuffled order
@@ -96,21 +96,39 @@ class SequencesSpec extends AnyFunSuite {
     spark.sql("CREATE SEQUENCE lazy_seq")
     // parse alone (no action) must not reserve
     val held = spark.sql("SELECT NEXT VALUE FOR lazy_seq AS c FROM (VALUES 1, 2)")
-    assert(!operators.Sequences.started("lazy_seq"),
+    assert(!operators.Sequences.started(spark, "lazy_seq"),
       "parsePlan must not advance the sequence")
     // EXPLAIN renders the deferred plan without reserving
     held.explain()
-    assert(!operators.Sequences.started("lazy_seq"),
+    assert(!operators.Sequences.started(spark, "lazy_seq"),
       "EXPLAIN must not advance the sequence")
     // the first executed action reserves the block
     assert(held.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    assert(operators.Sequences.currentValue("lazy_seq") == 2L)
+    assert(operators.Sequences.currentValue(spark, "lazy_seq") == 2L)
     // re-collecting the SAME DataFrame replays its reserved block (Spark
     // memoizes the executed RDD) — values are stable under re-reads ...
     assert(held.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    assert(operators.Sequences.currentValue("lazy_seq") == 2L)
+    assert(operators.Sequences.currentValue(spark, "lazy_seq") == 2L)
     // ... while re-issuing the statement reserves a fresh block
     val again = spark.sql("SELECT NEXT VALUE FOR lazy_seq AS c FROM (VALUES 1, 2)")
     assert(again.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+  }
+
+  test("each session has its own sequences: same name, independent counters") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    a.sql("CREATE SEQUENCE shared_name START WITH 10")
+    b.sql("CREATE SEQUENCE shared_name START WITH 500 INCREMENT BY 5")
+    def next(s: org.apache.spark.sql.SparkSession): Seq[Long] =
+      s.sql("SELECT NEXT VALUE FOR shared_name AS c FROM range(2)")
+        .collect().map(_.getLong(0)).sorted.toSeq
+    assert(next(a) == Seq(10L, 11L))
+    assert(next(b) == Seq(500L, 505L))
+    assert(next(a) == Seq(12L, 13L))
+    assert(operators.Sequences.currentValue(b, "shared_name") == 505L)
+    // the shared session sees neither
+    assert(!operators.Sequences.exists(spark, "shared_name"))
+    a.sql("DROP SEQUENCE shared_name")
+    assert(next(b) == Seq(510L, 515L))
   }
 }

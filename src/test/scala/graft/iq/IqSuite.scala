@@ -158,7 +158,7 @@ object IqFixtures {
     * resets the counter so the suite's stateful NEXT/CURRENT VALUE
     * block pair sees a fresh sequence on every run. */
   def registerSeq(spark: SparkSession): Unit =
-    graft.operators.Sequences.create("my_seq", replace = true)
+    graft.operators.Sequences.create(spark, "my_seq", replace = true)
 
   /** Registered as `iq_orders`, NOT `orders`: the bare name is a TPC-H
     * fixture view (Tables.registerAll is memoized, so shadowing it would
