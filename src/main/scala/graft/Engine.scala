@@ -100,7 +100,6 @@ object Engine {
     if (streaming.StreamSql.isStreamQuery(query))
       return streaming.StreamSql.sql(spark, sfDir, query)
     Tables.registerAll(spark, sfDir)
-    functions.GraftExtensions.register(spark)
     spark.sql(query)
   }
 

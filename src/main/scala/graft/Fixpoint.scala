@@ -6,17 +6,19 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** Driver-loop fixpoint iteration for the engine's two recursive loops,
-  * both shaped like the reference's RepeatUnion
+/** Driver-loop fixpoint iteration for the engine's recursive loops, each
+  * shaped like the reference's RepeatUnion
   * (adapter/enumerable/EnumerableRepeatUnion.java:39):
-  *  - the library's UNION-distinct `Recursive.repeatUnion` and state
-  *    iteration (`Dedup.clusters`): [[unionDistinct]] and [[iterate]];
+  *  - the library's UNION-distinct `Recursive.repeatUnion`: [[unionDistinct]];
   *  - Spark's native `WITH RECURSIVE` (UNION ALL): its `UnionLoop` is
   *    planned as `GraftUnionLoopExec`, which runs [[unionAll]] and hands
-  *    anything the driver cannot finish to Spark's own `UnionLoopExec`.
+  *    anything the driver cannot finish to Spark's own `UnionLoopExec`;
+  *  - state iteration over checkpoints: [[iterate]]. Its one caller,
+  *    `Dedup.clusters`, takes it only for an edge set past [[localRowCap]];
+  *    one that fits is labelled on the driver by one union-find pass.
   *
-  * Each round applies a step to the previous round's materialized
-  * result, and the module picks how that result is held:
+  * Each round of [[unionDistinct]] applies a step to the previous round's
+  * materialized result, and the module picks how that result is held:
   *  - '''small''' — at most [[localRowCap]] rows, held on the driver.
   *    The step's plan is built and optimized once, over a transient input
   *    (the reference's TransientTable scan), and each round binds its rows
@@ -45,85 +47,51 @@ import scala.util.control.NonFatal
   */
 object Fixpoint {
 
-  /** One materialized round: `rows` is defined iff it lives on the driver
-    * (then `df` is a `LocalRelation` over them, built on first use). The
-    * transient round a step's plan is built over has no rows of its own:
-    * reading them there throws, and the loop falls back to a plan per
-    * round. */
-  final class Round private[Fixpoint] (
-      frame: => DataFrame, held: Option[IndexedSeq[Row]], transient: Boolean = false) {
+  /** One materialized relation: `rows` is defined iff it lives on the
+    * driver (then `df` is a `LocalRelation` over them, built on first
+    * use); otherwise `df` is a local checkpoint. */
+  final class Round private[Fixpoint] (frame: => DataFrame, val rows: Option[IndexedSeq[Row]]) {
     lazy val df: DataFrame = frame
-    def rows: Option[IndexedSeq[Row]] =
-      if (transient) throw new IllegalStateException("a step builds its plan from df, not rows")
-      else held
-    def local: Boolean = transient || held.isDefined
+    def local: Boolean = rows.isDefined
   }
 
   /** Largest row count a round may hold on the driver: Spark's
     * `spark.sql.autoBroadcastJoinThreshold` (the size Spark itself ships
     * to every task as a broadcast) over the row's estimated size. A
     * threshold of -1 turns the local path off. */
-  def localRowCap(df: DataFrame): Long = localRowCap(df.sparkSession, df.schema)
-
-  private def localRowCap(spark: SparkSession, schema: StructType): Long = {
-    val bytes = spark.sessionState.conf.autoBroadcastJoinThreshold
-    math.min(math.max(0L, bytes / math.max(1, schema.defaultSize)), Int.MaxValue - 1L)
+  def localRowCap(df: DataFrame): Long = {
+    val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    math.min(math.max(0L, bytes / math.max(1, df.schema.defaultSize)), Int.MaxValue - 1L)
   }
 
   /** Materializes `df` on the driver when it has at most [[localRowCap]]
-    * rows (and `tryLocal`), else as a local checkpoint. */
-  def materialize(df: DataFrame, tryLocal: Boolean = true): Round = {
-    val rows = if (tryLocal) collectUpTo(df, localRowCap(df)) else None
-    rows match {
-      case Some(rs) => localRound(df.sparkSession, df.schema, rs)
-      case None => checkpointRound(df)
-    }
+    * rows, else as a local checkpoint. */
+  def materialize(df: DataFrame): Round = collectUpTo(df, localRowCap(df)) match {
+    case Some(rows) => new Round(frame(df.sparkSession, df.schema, rows), Some(rows))
+    case None => new Round(checkpoint(df)._1, None)
   }
 
   /** Frees a round's pinned blocks (a local round holds none). */
   def release(r: Round): Unit = if (!r.local) Checkpoints.release(r.df)
 
-  /** State fixpoint: `state = step(state)` until `measure` of the state
-    * stops changing, or after `maxIter` rounds (`maxIter < 0`: unbounded).
-    * `measure` must change whenever the state does (a row-set fingerprint,
-    * or a monotone quantity). Each superseded state is released; the
-    * returned round is the caller's to release.
-    *
-    * While the state is on the driver, `step` builds a plan, not a round:
-    * it is called once on a transient round and every local round binds
-    * its state's rows into that plan (the step contract and its fallback
-    * are [[unionDistinct]]'s). */
-  def iterate(init: DataFrame, maxIter: Int = -1)(step: Round => DataFrame)
-      (measure: Round => Any): Round = {
-    val spark = init.sparkSession
-    val plans = new StepPlans(spark, in => step(new Round(in, None, transient = true)))
-    var state = materialize(init)
-    var schema = init.schema
+  /** State fixpoint over checkpoints: `state = step(state)` until
+    * `done(state)` holds. Each state is `localCheckpoint`ed at the
+    * session's own parallelism, and the state it supersedes is released;
+    * on a throwing step or test, so is the state the loop holds. The
+    * returned state's blocks are the caller's to release. There is no
+    * driver path: a state that fits on the driver has a direct solution
+    * cheaper than rounds (`Dedup.clusters`' union-find). */
+  def iterate(init: DataFrame)(step: DataFrame => DataFrame)
+      (done: DataFrame => Boolean): DataFrame = {
+    var state = checkpoint(init)._1
     try {
-      var m = measure(state)
-      var i = 0
-      var done = false
-      while (!done && (maxIter < 0 || i < maxIter)) {
-        val prev = state
-        lazy val df = step(prev)
-        val (next, nextSchema) = prev.rows.flatMap(rows => plans(schema).map(_ -> rows)) match {
-          case Some((plan, rows)) =>
-            runRound(plan, rows, localRowCap(spark, plan.schema), df) match {
-              case Some(rs) => (localRound(spark, plan.schema, rs), plan.schema)
-              case None => (checkpointRound(df), df.schema)
-            }
-          case None => (materialize(df, tryLocal = prev.local), df.schema)
-        }
-        release(prev)
+      while (!done(state)) {
+        val next = checkpoint(step(state))._1
+        Checkpoints.release(state)
         state = next
-        schema = nextSchema
-        val m2 = measure(state)
-        done = m2 == m
-        m = m2
-        i += 1
       }
       state
-    } catch { case e: Throwable => release(state); throw e }
+    } catch { case e: Throwable => Checkpoints.release(state); throw e }
   }
 
   /** UNION-distinct fixpoint (RepeatUnion's contract):
@@ -379,15 +347,6 @@ object Fixpoint {
   private[graft] def boundedCollect(df: DataFrame, cap: Long): Option[Array[Row]] =
     org.apache.spark.sql.GraftBridge.collectWithin(df, cap)(_ => 1L)
       .map(org.apache.spark.sql.GraftBridge.toRows(df, _))
-
-  private def localRound(spark: SparkSession, schema: StructType,
-      rows: IndexedSeq[Row]): Round = new Round(frame(spark, schema, rows), Some(rows))
-
-  /** A round checkpointed now (only a local round's frame is deferred). */
-  private def checkpointRound(df: DataFrame): Round = {
-    val ckpt = checkpoint(df)._1
-    new Round(ckpt, None)
-  }
 
   private def checkpoint(df: DataFrame): (DataFrame, Long) =
     org.apache.spark.sql.GraftBridge.localCheckpoint(df)

@@ -1,15 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension pack — the analogue of the reference's model-file
   * function registration (reference: core/src/main/java/org/apache/calcite/
   * model/ModelHandler.java addFunctions; operator table plugging via
-  * SqlOperatorTable). Injected with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` or at runtime via
-  * [[GraftExtensions.register]].
+  * SqlOperatorTable). `Engine.session` injects it into every session it
+  * builds; a session built elsewhere can take it with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -73,25 +73,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // native WITH RECURSIVE: UnionLoop → GraftUnionLoopExec, its recursion
     // planned once and each level evaluated on the driver
     e.injectPlannerStrategy(_ => new org.apache.spark.sql.GraftUnionLoopStrategy)
-  }
-}
-
-object GraftExtensions {
-  /** Runtime registration for sessions built without the extensions conf. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongDotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_l2", exprs => SquaredL2(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_size_sorted",
-      exprs => IntersectSizeSorted(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "weighted_avg", exprs => WeightedAvg(exprs.head, exprs(1)), "built-in")
-    for ((name, fn) <- graft.operators.GeoSql.registry)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, ColumnBridge.builder(fn), "built-in")
   }
 }

@@ -1,12 +1,16 @@
 package graft.pipeline
 
 import graft.{QDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 import graft.functions.MinHash
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication suite for large-scale corpus curation — exact,
   * n-gram-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
@@ -438,63 +442,104 @@ object Dedup {
   }
 
   /** Consolidate verified near-dup pairs into duplicate CLUSTERS —
-    * connected components via iterative min-label propagation (each round:
-    * every node takes the min label among itself and its neighbors; the
-    * fixpoint labels each component by its smallest doc_id). This is the
-    * step after pair generation in a real corpus-dedup pipeline: clusters,
-    * not pairs, decide which single representative survives.
+    * connected components, each doc_id labelled with the smallest doc_id
+    * of its component. This is the step after pair generation in a real
+    * corpus-dedup pipeline: clusters, not pairs, decide which single
+    * representative survives.
     *
-    * The rounds run through [[graft.Fixpoint.iterate]]: per round one
-    * labels⋈edges join, one pointer-jump self-join and one min-aggregate;
-    * rounds = O(log diameter) (near-dup components are shallow). While the
-    * label state and the edges fit Spark's broadcast size they live on the
-    * driver, and each round is evaluated there with no job (see
-    * [[graft.Fixpoint]]). Larger states are checkpointed and shuffle on
-    * node id at the session's own parallelism. No session conf is changed.
-    */
+    * `pairs` holds two ids of one type, `id_a` and `id_b`. It is
+    * materialized once ([[graft.Fixpoint.materialize]]), and where it is
+    * held picks one of two paths to the same labels:
+    *  - at most [[graft.Fixpoint.localRowCap]] pairs (every registry
+    *    fixture) are collected to the driver, and one union-find pass
+    *    labels them ([[components]]) with no job;
+    *  - more pairs (or a broadcast threshold of -1) are checkpointed, and
+    *    min-label propagation rounds run over them through
+    *    [[graft.Fixpoint.iterate]] ([[propagate]]).
+    * No session conf is changed. */
   def clusters(pairs: DataFrame): DataFrame = {
+    val held = graft.Fixpoint.materialize(pairs.select(col("id_a"), col("id_b")))
+    // only the label frame backs the returned plan; the NEXT invocation
+    // releases it
+    try graft.Checkpoints.superseding("dedup_clusters", held.rows match {
+      case Some(rows) => components(held.df, rows)
+      case None => propagate(held.df)
+    }) finally graft.Fixpoint.release(held)
+  }
+
+  /** The components of `pairs`, whose rows the driver holds, by one
+    * union-find pass: each id with the smallest id of its component, the
+    * labels min-label propagation converges to. Ids compare as Spark's
+    * `min` and join equality compare them, on their Catalyst values. A
+    * NULL id, which no join matches, links nothing: it takes the smallest
+    * label among its neighbours, or NULL if it has none. */
+  private def components(pairs: DataFrame, rows: IndexedSeq[Row]): DataFrame = {
+    val idType = pairs.schema.head.dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    // the distinct ids, smallest first: every union keeps the smaller
+    // root, so a component's root is its smallest id
+    val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).filter(_ != null)
+      .map(v => (toCatalyst(v), v)).toArray.distinctBy(_._1)
+      .sortBy(_._1)(TypeUtils.getInterpretedOrdering(idType))
+    val index = ids.iterator.map(_._1).zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(v: Any): Int = {
+      var x = index(toCatalyst(v))
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val (a, b) = (find(r.get(0)), find(r.get(1)))
+      parent(a.max(b)) = a.min(b)
+    }
+    val labels = ids.iterator.map { case (_, v) => Row(v, ids(find(v))._2) }.toIndexedSeq
+    val withNull = rows.filter(r => r.isNullAt(0) || r.isNullAt(1))
+    val nullLabel = if (withNull.isEmpty) None else Some(Row(null,
+      withNull.flatMap(r => Seq(r.get(0), r.get(1))).filter(_ != null).map(find)
+        .minOption.map(ids(_)._2).orNull))
+    val schema = StructType(Seq(
+      StructField("doc_id", idType, pairs.schema.exists(_.nullable)),
+      StructField("cluster_id", idType)))
+    pairs.sparkSession.createDataFrame((labels ++ nullLabel).asJava, schema)
+  }
+
+  /** Min-label propagation over checkpointed rounds
+    * ([[graft.Fixpoint.iterate]]): each round, every node takes the
+    * smallest label among its own, its neighbours' and its label's label.
+    * One labels⋈edges join, one pointer-jump self-join and one
+    * min-aggregate a round, O(log diameter) rounds; the state shuffles on
+    * node id at the session's own parallelism. */
+  private def propagate(pairs: DataFrame): DataFrame = {
     // both directions from ONE pass over the pairs (a union would
-    // compute the pair join twice)
-    val edges = graft.Fixpoint.materialize(pairs.select(explode(array(
+    // read them twice)
+    val edges = pairs.select(explode(array(
       struct(col("id_a").as("src"), col("id_b").as("dst")),
-      struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e")).select("e.*"))
-    try {
-      val init = edges.df.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl"))
-      val labels = graft.Fixpoint.iterate(init) { state =>
-        val l = state.df
-        // Candidate labels per node, min-folded in ONE aggregation:
-        //  - its own label,
-        //  - its neighbors' labels (edge propagation),
-        //  - its label's label (pointer jump / path halving — labels are
-        //    node ids, so following lbl one more hop is a join back onto
-        //    the label table).
-        // The jump turns convergence from O(diameter) into O(log diameter)
-        // rounds on chain-shaped duplicate clusters.
-        val jump = l
-          .join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
-          .select(col("id"), col("jlbl").as("lbl"))
-        l.alias("l")
-          .join(edges.df.alias("e"), col("l.id") === col("e.src"))
-          .select(col("e.dst").as("id"), col("l.lbl").as("lbl"))
-          .unionByName(l)
-          .unionByName(jump)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-      } { state =>
-        // Convergence: every candidate set includes the node's own label,
-        // so labels only decrease and Σ lbl changes iff any node changed.
-        // (Decimal sum on the large path: immune to overflow.)
-        state.rows match {
-          case Some(rows) => rows.foldLeft(BigInt(0))(_ + _.getAs[Number](1).longValue)
-          case None => BigInt(state.df.agg(sum(col("lbl").cast(DecimalType(38, 0))))
-            .head().getDecimal(0).toBigInteger)
-        }
-      }
-      // only the final label frame backs the returned plan; the NEXT
-      // invocation releases it
-      graft.Checkpoints.superseding("dedup_clusters",
-        labels.df.select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
-    } finally graft.Fixpoint.release(edges)
+      struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e")).select("e.*")
+    val noLabel = lit(null).cast(edges.schema("src").dataType)
+    val init = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"), lit(true).as("changed"))
+    val labels = graft.Fixpoint.iterate(init) { state =>
+      val l = state.select(col("id"), col("lbl"))
+      // Candidate labels per node, min-folded in ONE aggregation:
+      //  - its own label (also kept as `own`, to tell whether it changed),
+      //  - its neighbors' labels (edge propagation),
+      //  - its label's label (pointer jump / path halving — labels are
+      //    node ids, so following lbl one more hop is a join back onto
+      //    the label table).
+      // The jump turns convergence from O(diameter) into O(log diameter)
+      // rounds on chain-shaped duplicate clusters.
+      val jump = l
+        .join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
+        .select(col("id"), col("jlbl").as("lbl"), noLabel.as("own"))
+      l.alias("l")
+        .join(edges.alias("e"), col("l.id") === col("e.src"))
+        .select(col("e.dst").as("id"), col("l.lbl").as("lbl"), noLabel.as("own"))
+        .unionByName(l.select(col("id"), col("lbl"), col("lbl").as("own")))
+        .unionByName(jump)
+        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"), max(col("own")).as("own"))
+        .select(col("id"), col("lbl"), not(col("lbl") <=> col("own")).as("changed"))
+    }(_.where(col("changed")).isEmpty)
+    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** Calibrated peak-scratch cost per raw in-bucket candidate pair across
@@ -658,24 +703,11 @@ object Dedup {
     // on doc_id, so the persisted partitioning is REUSED by both join
     // sides — the heavy gram arrays never re-shuffle, only the pair list
     // moves (the r11 scale run's plan audit)
-    // GRAFT_LSH_PHASES: guide-§1 instrumentation — force each phase with a
-    // noop sink and print its wall time. Adds actions, so NEVER set during
-    // a timed bench; the unset path builds the identical lazy plan.
-    val phaseTimer = sys.env.contains("GRAFT_LSH_PHASES")
-    def phase[A <: DataFrame](label: String)(df: A): A = {
-      if (phaseTimer) {
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        System.err.println(
-          f"[minhash-phase] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      df
-    }
     val mat = materialized(docs, s"minhash-$numHashes-$portable")(
       docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
         .where(length(col("text")) >= 3)
         .select(col("doc_id"), gramHashes.as("gs")))
-    val g = phase("grams")(mat.select(col("doc_id"), col("gs")))
+    val g = mat.select(col("doc_id"), col("gs"))
     // One-Permutation Hashing with rotation densification
     // (graft.functions.MinHash): O(|shingles| + k) per document instead of
     // the classic k-function family's O(|shingles| × k), ~500× less kernel
@@ -717,10 +749,8 @@ object Dedup {
     // buckets sit far below the cap, so the guard costs no recall while
     // bounding worst-case skew; the cap also bounds the self-join's
     // matched-group buffer.
-    val banded = phase("banding")(
-      materialized(docs, s"minhash-banded-$numHashes-$bands-$portable")(
-        banded0.repartition(
-          spark2.sparkContext.defaultParallelism, col("b"), col("h"))))
+    val banded = materialized(docs, s"minhash-banded-$numHashes-$bands-$portable")(
+      banded0.repartition(spark2.sparkContext.defaultParallelism, col("b"), col("h")))
     // bucket sizes: pure codegen count aggregate, reusing the persisted
     // partitioning (no exchange). Feeds the scratch planner AND the
     // adaptive sig-join sizing below in ONE action.
@@ -809,7 +839,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"))
       pairs.distinct()
     }
-    val cands = phase("cands+distinct")(candsFor(banded))
+    val cands = candsFor(banded)
     // signature-estimate prefilter (see scaladoc): the distinct pair list
     // is still BARE (16 bytes/row) here — attach 64-byte signatures, not
     // gram arrays, and cut everything whose estimated Jaccard sits more
@@ -860,9 +890,8 @@ object Dedup {
     // the per-invocation materialization discipline (Checkpoints). The
     // multi-pass path keeps its checkpoint + shuffle-reclaim discipline —
     // its whole point is bounding scratch, not rep latency.
-    if (phaseTimer && minEq >= 0) phase("sigs")(sigs)
     val survivors =
-      if (numPasses == 1) phase("prefilter")(prefilter(cands))
+      if (numPasses == 1) prefilter(cands)
       else {
         val passes = (0 until numPasses).map { i =>
           val pre = prefilter(candsFor(

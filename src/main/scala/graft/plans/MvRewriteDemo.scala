@@ -39,11 +39,7 @@ object MvRewriteDemo {
     MaterializedViews.clear()
     MaterializedViews.install(spark)
     val path = s"/tmp/graft_mv_demo/$name"
-    val t0 = System.nanoTime()
     MaterializedViews.create(spark, name, definition, path)
-    if (sys.env.contains("GRAFT_MV_PHASES"))
-      System.err.println(
-        f"[mv-demo] $name tile build: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     try {
       val df = query
       val plan = df.queryExecution.executedPlan.toString

@@ -15,7 +15,6 @@ object GeoCodegenBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val spark = Engine.session("graft-geo-bench")
-    graft.functions.GraftExtensions.register(spark)
     // coprime moduli so the (lon, lat) grid is dense (no CRT correlation)
     spark.range(rows)
       .selectExpr("cast(id % 3601 as double) / 10 - 180 as lon",

@@ -1,7 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 object SparkTestSession {
   lazy val spark: SparkSession = Engine.session("graft-test", "local[4]")
@@ -51,6 +56,21 @@ class EngineSpec extends AnyFunSuite {
       // no query leaves the session conf changed for the queries after it
       assert(spark.conf.getAll == confBefore)
     }
+  }
+
+  test("operators, pipelines and plans read no environment variable") {
+    // a query depends on its arguments and its session alone: a flag read
+    // from the environment is a second code path that no test runs
+    val dirs = Seq("operators", "pipeline", "plans").map(d => Paths.get("src/main/scala/graft", d))
+    assert(dirs.forall(Files.isDirectory(_)), s"missing one of $dirs")
+    val hits = for {
+      dir <- dirs
+      file <- Using.resource(Files.walk(dir))(_.iterator.asScala.toList)
+      if file.toString.endsWith(".scala")
+      (line, n) <- Files.readAllLines(file).asScala.zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv")
+    } yield s"$file:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("context functions answer through the SQL entry (SURVEY §2.4)") {

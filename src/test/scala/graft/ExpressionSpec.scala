@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotProduct, GraftExtensions}
+import graft.functions.DotProduct
 import graft.pipeline.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,7 +39,6 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("dot_product registered for SQL via GraftExtensions") {
-    GraftExtensions.register(spark)
     val v = spark.sql("SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head().getDouble(0)
     assert(v == 11.0)
@@ -97,7 +96,6 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("long_dot and squared_l2 registered for SQL via GraftExtensions") {
-    GraftExtensions.register(spark)
     assert(spark.sql("SELECT long_dot(array(2L, 3L), array(5L, 7L)) AS d")
       .head().getLong(0) == 31L)
     assert(spark.sql("SELECT squared_l2(array(1.0D, 2.0D), array(4.0D, 6.0D)) AS d")

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The fixpoint module's contract: UNION-distinct semantics with
   * `except`'s row equality, the iteration limit, identical results on the
   * driver-local and the checkpoint path, a step's plan built once on the
-  * driver path (and once per round where it cannot be), and a session
-  * left as it was found — same conf, no pinned blocks — after success and
-  * after a throwing step. */
+  * driver path (and once per round where it cannot be), dedup_clusters'
+  * union-find equal to its checkpoint rounds, and a session left as it
+  * was found — same conf, no pinned blocks — after success and after a
+  * throwing step. */
 class FixpointSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -173,32 +174,45 @@ class FixpointSpec extends AnyFunSuite {
   test("iterate: label propagation agrees on both paths") {
     val s = spark
     import s.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 7L), (9L, 3L))
+    /** The union-find's labels, after asserting that it runs no job and
+      * that the checkpoint rounds give the same rows. */
+    def labels(pairs: DataFrame): Seq[String] = {
+      val (local, jobs) = jobsDuring(rows(pipeline.Dedup.clusters(pairs)))
+      val ckpt = onCheckpointPath(rows(pipeline.Dedup.clusters(pairs)))
+      assert(local == ckpt, "union-find and checkpoint rounds disagree")
+      assert(jobs == 0)
+      local
+    }
+    def expect(labelled: (Long, Long)*): Seq[String] =
+      labelled.map { case (a, b) => Row(a, b).toString }.sorted
+    def longs(ps: (Long, Long)*): DataFrame = ps.toDF("id_a", "id_b")
+    assert(labels(longs((1L, 2L), (2L, 3L), (5L, 4L), (7L, 7L), (9L, 3L))) ==
+      expect((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (7L, 7L), (9L, 1L)))
+    // a chain listed from its far end: 20 → 19 → … → 1
+    assert(labels(longs((20L to 2L by -1L).map(n => (n, n - 1)): _*)) ==
+      expect((1L to 20L).map(n => (n, 1L)): _*))
+    // a star whose hub is its largest id
+    assert(labels(longs((1L to 9L).map(n => (10L, n)): _*)) ==
+      expect((1L to 10L).map(n => (n, 1L)): _*))
+    // a cycle, entered away from its smallest id
+    assert(labels(longs((6L, 7L), (7L, 8L), (8L, 5L), (5L, 6L))) ==
+      expect((5L to 8L).map(n => (n, 5L)): _*))
+    // a self-pair beside two disjoint components
+    assert(labels(longs((4L, 4L), (3L, 2L), (9L, 8L), (8L, 7L))) ==
+      expect((2L, 2L), (3L, 2L), (4L, 4L), (7L, 7L), (8L, 7L), (9L, 7L)))
+    // STRING ids compare as strings: "10" < "9"
+    assert(labels(Seq(("9", "b"), ("b", "10"), ("x", "y")).toDF("id_a", "id_b")) ==
+      Seq(("10", "10"), ("9", "10"), ("b", "10"), ("x", "x"), ("y", "x"))
+        .map { case (a, b) => Row(a, b).toString }.sorted)
+    // a NULL id links nothing: it takes its neighbours' smallest label
+    val nullable = Seq[(Option[Long], Option[Long])](
+      (None, Some(5L)), (Some(8L), None), (Some(5L), Some(3L)), (Some(8L), Some(9L)))
       .toDF("id_a", "id_b")
-    val local = rows(pipeline.Dedup.clusters(pairs))
-    val ckpt = onCheckpointPath(rows(pipeline.Dedup.clusters(pairs)))
-    assert(local == ckpt)
-    assert(local == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
-      (7L, 7L), (9L, 1L)).map { case (a, b) => Row(a, b).toString })
-  }
-
-  test("iterate builds a self-joining step's plan once") {
-    val s = spark
-    import s.implicits._
-    // pointer jumping, as dedup_clusters' rounds do: each id takes its
-    // label's label, so the input is joined to itself
-    val labels = Seq((1L, 2L), (2L, 3L), (3L, 3L), (4L, 4L)).toDF("id", "lbl")
-    var calls = 0
-    val (state, jobs) = jobsDuring(Fixpoint.iterate(labels) { r =>
-      calls += 1
-      val l = r.df
-      l.join(l.select(col("id").as("jid"), col("lbl").as("jlbl")), col("lbl") === col("jid"))
-        .select(col("id"), col("jlbl").as("lbl"))
-    }(_.rows.get.map(_.getLong(1)).sum))
-    assert(calls == 1)
-    assert(jobs == 0)
-    assert(state.rows.get.map(r => (r.getLong(0), r.getLong(1))).sorted ==
-      Seq((1L, 3L), (2L, 3L), (3L, 3L), (4L, 4L)))
+    assert(labels(nullable) == (expect((3L, 3L), (5L, 3L), (8L, 8L), (9L, 8L)) :+
+      Row(null, 3L).toString).sorted)
+    // a pair of NULLs alone: one NULL id, with no label
+    assert(labels(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b")) ==
+      Seq(Row(null, null).toString))
   }
 
   /** Asserts that `f` leaves the session conf as it found it and adds no
@@ -235,10 +249,9 @@ class FixpointSpec extends AnyFunSuite {
           Checkpoints.release(series)
           rows(Fixpoint.unionDistinct(seed, d => reachStep(edges)(keep(d)), -1))
           val state = Fixpoint.iterate(Seq(10L).toDF("n"))(
-            r => keep(r.df).select(greatest(col("n") - 1, lit(0L)).as("n")))(
-            r => r.df.head().getLong(0))
-          assert(state.df.head().getLong(0) == 0L)
-          Fixpoint.release(state)
+            d => keep(d).select((col("n") - 1).as("n")))(_.head().getLong(0) == 0L)
+          assert(state.head().getLong(0) == 0L)
+          Checkpoints.release(state)
         }
       }
     }
@@ -262,10 +275,10 @@ class FixpointSpec extends AnyFunSuite {
             }, -1)
           }
           intercept[IllegalStateException] {
-            Fixpoint.iterate(Seq(0L).toDF("n"))({ r =>
-              if (r.df.head().getLong(0) > 3) throw new IllegalStateException("boom")
-              keep(r.df).select((col("n") + 1).as("n"))
-            })(_.df.head().getLong(0))
+            Fixpoint.iterate(Seq(0L).toDF("n"))({ d =>
+              if (d.head().getLong(0) > 3) throw new IllegalStateException("boom")
+              keep(d).select((col("n") + 1).as("n"))
+            })(_ => false)
           }
         }
         // fails while a round executes
@@ -274,7 +287,7 @@ class FixpointSpec extends AnyFunSuite {
             when(col("n") > 10, raise_error(lit("boom"))).otherwise(col("n") + 1).as("n"))
           intercept[Exception](Fixpoint.unionDistinct(Seq(0L).toDF("n"), failing, -1))
           intercept[Exception] {
-            Fixpoint.iterate(Seq(0L).toDF("n"))(r => failing(r.df))(_.df.head().getLong(0))
+            Fixpoint.iterate(Seq(0L).toDF("n"))(failing)(_ => false)
           }
         }
       }
