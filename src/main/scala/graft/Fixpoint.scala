@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -42,34 +45,55 @@ import scala.util.control.NonFatal
   * A loop that has gone large stays large, so a large input pays the
   * collect attempt once, not every round.
   *
+  * The same small/large choice holds one-shot relations the engine owns,
+  * through [[materialize]] (or [[collectInternal]] for rows only): the
+  * pairs of `BroadcastGrams.run`, the rows of `TableDdlSql`'s tables, and
+  * the input of `Sequences.nextValueFor`.
+  *
   * The module releases every checkpoint a round supersedes, and on a
   * throwing step everything the loop still holds. It sets no session conf.
   */
 object Fixpoint {
 
-  /** One materialized relation: `rows` is defined iff it lives on the
-    * driver (then `df` is a `LocalRelation` over them, built on first
-    * use); otherwise `df` is a local checkpoint. */
-  final class Round private[Fixpoint] (frame: => DataFrame, val rows: Option[IndexedSeq[Row]]) {
+  /** One materialized relation of `count` rows: `internal` holds them in
+    * Catalyst form iff they live on the driver (then `df` is one
+    * `LocalRelation` over them, built on first use); otherwise `df` is a
+    * local checkpoint. */
+  final class Round private[Fixpoint] (frame: => DataFrame, val schema: StructType,
+      val internal: Option[IndexedSeq[InternalRow]], val count: Long) {
     lazy val df: DataFrame = frame
-    def local: Boolean = rows.isDefined
+    /** The driver rows as external `Row`s, converted on first use. */
+    lazy val rows: Option[IndexedSeq[Row]] = internal.map { rs =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      rs.map(toRow(_).asInstanceOf[Row])
+    }
+    def local: Boolean = internal.isDefined
   }
 
   /** Largest row count a round may hold on the driver: Spark's
     * `spark.sql.autoBroadcastJoinThreshold` (the size Spark itself ships
     * to every task as a broadcast) over the row's estimated size. A
     * threshold of -1 turns the local path off. */
-  def localRowCap(df: DataFrame): Long = {
-    val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    math.min(math.max(0L, bytes / math.max(1, df.schema.defaultSize)), Int.MaxValue - 1L)
+  def localRowCap(df: DataFrame): Long = localRowCap(df.sparkSession.sessionState.conf, df.schema)
+
+  /** [[localRowCap]] for rows of `schema` under `conf`. */
+  def localRowCap(conf: SQLConf, schema: StructType): Long = {
+    val bytes = conf.autoBroadcastJoinThreshold
+    math.min(math.max(0L, bytes / math.max(1, schema.defaultSize)), Int.MaxValue - 1L)
   }
 
   /** Materializes `df` on the driver when it has at most [[localRowCap]]
     * rows, else as a local checkpoint. */
-  def materialize(df: DataFrame): Round = collectUpTo(df, localRowCap(df)) match {
-    case Some(rows) => new Round(frame(df.sparkSession, df.schema, rows), Some(rows))
-    case None => new Round(checkpoint(df)._1, None)
+  def materialize(df: DataFrame): Round = collectInternal(df, localRowCap(df)) match {
+    case Some(rows) => local(df.sparkSession, df.schema, rows)
+    case None =>
+      val (ckpt, n) = checkpoint(df)
+      new Round(ckpt, df.schema, None, n)
   }
+
+  /** A round of `rows` of `schema` held on the driver. */
+  def local(spark: SparkSession, schema: StructType, rows: IndexedSeq[InternalRow]): Round =
+    new Round(GraftBridge.localFrame(spark, schema, rows), schema, Some(rows), rows.size)
 
   /** Frees a round's pinned blocks (a local round holds none). */
   def release(r: Round): Unit = if (!r.local) Checkpoints.release(r.df)
@@ -254,7 +278,7 @@ object Fixpoint {
     }
 
     private def compile(schema: StructType): Option[StepPlan] = {
-      val (input, id) = org.apache.spark.sql.GraftBridge.roundInput(spark, schema)
+      val (input, id) = GraftBridge.roundInput(spark, schema)
       try {
         val out = step(input)
         if (sameTypes(out.schema, schema)) LocalEval.compile(out).map(StepPlan(_, id))
@@ -333,6 +357,17 @@ object Fixpoint {
   def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None else rowsOf(LocalEval.collect(df, cap), df, cap)
 
+  /** [[collectUpTo]]'s rows in Catalyst form, with no conversion: what
+    * LocalEval evaluates, or the bounded job's copied `UnsafeRow`s. */
+  def collectInternal(df: DataFrame, cap: Long): Option[IndexedSeq[InternalRow]] =
+    if (cap <= 0) None
+    else LocalEval.collectInternal(df, cap) match {
+      case Right(rows) => Some(rows)
+      case Left(LocalEval.OverCap) => None
+      case Left(_) =>
+        GraftBridge.collectWithin(df, cap)(_ => 1L).map(ArraySeq.unsafeWrapArray(_))
+    }
+
   /** The rows of a LocalEval outcome; a declined one runs `df` as one job. */
   private def rowsOf(outcome: LocalEval.Outcome, df: => DataFrame,
       cap: Long): Option[Array[Row]] = outcome match {
@@ -345,11 +380,11 @@ object Fixpoint {
     * every partition, each stopping after `cap + 1` rows, cancelled once
     * the rows the driver has received pass `cap`. */
   private[graft] def boundedCollect(df: DataFrame, cap: Long): Option[Array[Row]] =
-    org.apache.spark.sql.GraftBridge.collectWithin(df, cap)(_ => 1L)
-      .map(org.apache.spark.sql.GraftBridge.toRows(df, _))
+    GraftBridge.collectWithin(df, cap)(_ => 1L)
+      .map(GraftBridge.toRows(df, _))
 
   private def checkpoint(df: DataFrame): (DataFrame, Long) =
-    org.apache.spark.sql.GraftBridge.localCheckpoint(df)
+    GraftBridge.localCheckpoint(df)
 
   private def frame(spark: SparkSession, schema: StructType,
       rows: IndexedSeq[Row]): DataFrame =

@@ -8,19 +8,23 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Declarativ
 import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalAggregation}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.{Left, Right}
 import scala.util.control.ControlThrowable
 
 /** Driver-side evaluation of a small optimized plan whose leaves are all
-  * `LocalRelation`s, `RoundInput`s or `OneRowRelation`s (one empty row, the
-  * leaf of a `SELECT <literals>`): no physical planning, no job, no
-  * codegen. [[compile]] optimizes a plan once; [[run]] evaluates it with
-  * each round input bound to rows, so a fixpoint step pays analysis and
-  * optimization once, not every round. It extends the idea of Spark's
+  * `LocalRelation`s, `RoundInput`s, scans of `GraftBridge.DriverRows` or
+  * `OneRowRelation`s (one empty row, the leaf of a `SELECT <literals>`):
+  * no physical planning, no job, no codegen. [[compile]] optimizes a plan
+  * once; [[run]] evaluates it with each round input bound to rows, so a
+  * fixpoint step pays analysis and optimization once, not every round. It extends the idea of Spark's
   * `ConvertToLocalRelation` (which already folds `Project`/`Filter` over
   * a `LocalRelation`) to joins, unions and aggregates, and mirrors the
   * reference's row interpreter for small plans (interpreter/Interpreter.java;
@@ -81,9 +85,8 @@ object LocalEval {
     def schema: StructType = plan.schema
   }
 
-  /** `df`'s optimized plan when every leaf is a `LocalRelation`, a
-    * `RoundInput` or a `OneRowRelation` and every operator is supported;
-    * `None` otherwise. */
+  /** `df`'s optimized plan when every leaf is one the driver holds (see
+    * [[driverLocal]]) and every operator is supported; `None` otherwise. */
   def compile(df: DataFrame): Option[Compiled] = {
     // a plan that reads files or checkpoints is declined before it is optimized
     if (!driverLocal(df.queryExecution.analyzed)) None
@@ -100,39 +103,76 @@ object LocalEval {
   def collect(df: DataFrame, cap: Long): Outcome =
     compile(df).fold[Outcome](Declined)(run(_, Map.empty, cap))
 
+  /** [[collect]]'s rows in Catalyst form, unconverted: `Right(rows)`, or
+    * `Left` of [[OverCap]] or [[Declined]]. */
+  def collectInternal(df: DataFrame, cap: Long): Either[Outcome, IndexedSeq[InternalRow]] =
+    compile(df).fold[Either[Outcome, IndexedSeq[InternalRow]]](Left(Declined))(
+      evaluateInternal(_, Map.empty, cap, MaxWork)._1)
+
   /** [[run]] under the budget `maxWork`, with the work it did (up to where
     * it stopped). */
   private[graft] def evaluate(c: Compiled, bindings: Map[Long, Seq[Row]], cap: Long,
       maxWork: Long): (Outcome, Long) = {
+    val (outcome, work) = evaluateInternal(c, bindings, cap, maxWork)
+    val toRow = CatalystTypeConverters.createToScalaConverter(c.schema)
+    (outcome.fold(identity, rows => Rows(rows.map(toRow(_).asInstanceOf[Row]).toArray)), work)
+  }
+
+  private def evaluateInternal(c: Compiled, bindings: Map[Long, Seq[Row]], cap: Long,
+      maxWork: Long): (Either[Outcome, IndexedSeq[InternalRow]], Long) = {
     // every leaf row is output once, so their count alone can pass the budget
     val leafRows = c.plan.collectLeaves().map {
       case r: LocalRelation => r.data.size.toLong
       case r: RoundInput => bindings(r.id).size.toLong
+      case DriverRowsScan(rows) => rows.size.toLong
       case _: OneRowRelation => 1L
     }.sum
-    if (leafRows > maxWork) (Declined, 0L)
+    if (leafRows > maxWork) (Left(Declined), 0L)
     else SQLConf.withExistingConf(c.conf) {
       val eval = new Eval(cap, maxWork, bindings)
       val outcome =
-        try {
-          val rows = eval.root(c.plan)
-          val toRow = CatalystTypeConverters.createToScalaConverter(c.schema)
-          Rows(rows.map(toRow(_).asInstanceOf[Row]).toArray)
-        } catch { case Stop(o) => o }
+        try Right(eval.root(c.plan))
+        catch { case Stop(o) => Left(o) }
       (outcome, eval.work)
     }
   }
 
+  /** `rows` of a relation whose output is `input`, stably sorted by
+    * `order` with Spark's interpreted ordering: NULLS FIRST/LAST as
+    * declared, NaN above every other value, -0.0 equal to 0.0. The
+    * expressions must pass [[sortable]]. */
+  def sortRows(rows: Seq[InternalRow], order: Seq[SortOrder],
+      input: Seq[Attribute]): IndexedSeq[InternalRow] = {
+    val ordering = new InterpretedOrdering(
+      BindReferences.bindReferences(order, input))
+    rows.toIndexedSeq.sorted(ordering)
+  }
+
+  /** Whether [[sortRows]] can evaluate `order` on the driver: no
+    * non-deterministic, subquery or unevaluable expression. */
+  def sortable(order: Seq[SortOrder]): Boolean = order.forall(o => evaluable(o.child))
+
   /** Whether every leaf of `p` is one [[compile]] accepts. */
   def driverLocal(p: LogicalPlan): Boolean = p.collectLeaves().forall {
-    case _: LocalRelation | _: RoundInput | _: OneRowRelation => true
+    case _: LocalRelation | _: RoundInput | _: OneRowRelation | DriverRowsScan(_) => true
     case _ => false
+  }
+
+  /** A scan of rows the driver holds as a `GraftBridge.DriverRows` RDD. */
+  private object DriverRowsScan {
+    def unapply(p: LogicalPlan): Option[IndexedSeq[InternalRow]] = p match {
+      case r: LogicalRDD => r.rdd match {
+        case d: GraftBridge.DriverRows => Some(d.rows)
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   private final case class Stop(outcome: Outcome) extends ControlThrowable
 
   private def supported(p: LogicalPlan): Boolean = (p match {
-    case _: LocalRelation | _: RoundInput | _: OneRowRelation => true
+    case _: LocalRelation | _: RoundInput | _: OneRowRelation | DriverRowsScan(_) => true
     case Project(list, _) => list.forall(evaluable)
     case Filter(cond, _) => evaluable(cond)
     case Join(_, _, Inner | Cross, cond, _) => cond.forall(evaluable)
@@ -204,6 +244,7 @@ object LocalEval {
     private def eval(p: LogicalPlan, atRoot: Boolean): IndexedSeq[InternalRow] = p match {
       case r: LocalRelation => bounded(r.data.iterator, atRoot)
       case r: RoundInput => bounded(input(r).iterator, atRoot)
+      case DriverRowsScan(rows) => bounded(rows.iterator, atRoot)
       case _: OneRowRelation => bounded(Iterator.single(InternalRow.empty), atRoot)
       case Project(list, child) =>
         val es = bind(list, child.output)
@@ -284,5 +325,27 @@ object LocalEval {
         project(result)(new JoinedRow(k, project(evaluate)(new GenericInternalRow(buf))))
       }, atRoot)
     }
+  }
+}
+
+/** Folds a global `Sort` over a batch `LocalRelation` into the relation
+  * with its rows sorted on the driver ([[LocalEval.sortRows]]). Spark's
+  * `ConvertToLocalRelation` folds `Project`, `Filter` and `Limit` over a
+  * `LocalRelation` but not `Sort`; this adds that case, so an ORDER BY
+  * over VALUES or over a table the driver holds plans no sort. It folds
+  * only a deterministic, evaluable ordering over at most
+  * [[Fixpoint.localRowCap]] rows, and nothing when the broadcast
+  * threshold is -1. `GraftExtensions` injects it. */
+object FoldLocalSort extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsAllPatterns(SORT, LOCAL_RELATION)) {
+      case Sort(order, true, r @ LocalRelation(output, data, false, _), _)
+          if LocalEval.sortable(order) && fits(data.size, r.schema) =>
+        r.copy(data = LocalEval.sortRows(data, order, output))
+    }
+
+  private def fits(rows: Int, schema: StructType): Boolean = {
+    val cap = Fixpoint.localRowCap(conf, schema)
+    cap > 0 && rows <= cap
   }
 }

@@ -73,5 +73,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // native WITH RECURSIVE: UnionLoop → GraftUnionLoopExec, its recursion
     // planned once and each level evaluated on the driver
     e.injectPlannerStrategy(_ => new org.apache.spark.sql.GraftUnionLoopStrategy)
+    // ORDER BY over a driver-held LocalRelation: sorted on the driver
+    e.injectOptimizerRule(_ => graft.FoldLocalSort)
   }
 }

@@ -3,10 +3,14 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.{QDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{Checkpoints, Fixpoint, LocalEval, QDef, Tables}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** SQL sequences — NEXT VALUE FOR / CURRENT VALUE FOR
   * (reference: core/.../sql/fun/SqlStdOperatorTable.java:2206
@@ -16,20 +20,19 @@ import org.apache.spark.sql.functions._
   * last generated value without advancing, an unknown sequence is a
   * "Table not found" error).
   *
-  * Scale design — a sequence is an inherently global serialization
-  * point, so a naive distributed implementation (global row_number)
-  * collapses the data to one partition. This one does what production
-  * engines do instead: BLOCK RESERVATION. One tiny aggregation counts
-  * rows per partition (one row per partition on the driver), the
-  * driver atomically advances the counter by the total once, and each
-  * partition stamps its contiguous block with a partition-local
-  * row_number — no global window ever touches the data. The per-
-  * partition offset prefix-sum runs over at most `numPartitions` rows
-  * by construction (bounded input, the documented unpartitioned-window
-  * exemption). Values are gap-free and unique; with explicit order
-  * columns the assignment is additionally DETERMINISTIC (range
-  * partitioning + in-partition sort define a total order), which is
-  * what the oracle query pins.
+  * Two paths, one contract. An input the driver can hold (at most
+  * [[graft.Fixpoint.localRowCap]] rows, the size Spark broadcasts) is
+  * collected once, ordered and stamped on the driver, as the reference
+  * evaluates row at a time. A larger one would collapse to one partition
+  * under a global row_number, so it takes BLOCK RESERVATION, as
+  * production engines do: one tiny aggregation counts rows per partition,
+  * the driver atomically advances the counter by the total once, and
+  * each partition stamps its contiguous block with a partition-local
+  * row_number — no global window ever touches the data. Values are
+  * gap-free and unique on both paths; with explicit order columns the
+  * assignment is additionally DETERMINISTIC (a driver sort, or range
+  * partitioning + in-partition sort), which is what the oracle query
+  * pins. SequencesSpec runs each case on both paths.
   */
 object Sequences {
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.t(s, dir, n)
@@ -98,29 +101,71 @@ object Sequences {
   /** NEXT VALUE FOR over a DataFrame: appends column `as` holding
     * consecutive sequence values and advances the counter by the row
     * count. With `orderCols` the values follow that global order
-    * deterministically (range partition + in-partition sort); without,
-    * they follow the DataFrame's existing partition/row order — unique
-    * and gap-free either way. The sequence is `df`'s session's.
+    * deterministically; without, they follow the DataFrame's existing
+    * partition/row order — unique and gap-free either way. The sequence
+    * is `df`'s session's. The counter advances once, when this is called.
     *
-    * Cost: one extra pass to count rows per partition (the price of
-    * gap-free blocks); the data itself is never globally re-sorted
-    * beyond what `orderCols` asks for. The input stays persisted until
-    * the session evicts it — the count and assignment passes must see
-    * the same (sampled) range-partition layout.
+    * Where the input, with the appended BIGINT, has at most
+    * [[graft.Fixpoint.localRowCap]] rows, it is collected once
+    * ([[graft.Fixpoint.collectInternal]]: no job for a driver-held input,
+    * one bounded job otherwise), sorted on the driver by `orderCols`
+    * ([[graft.LocalEval.sortRows]]), stamped in Catalyst form and
+    * returned as `GraftBridge.DriverRows`, packed for the tasks that read
+    * it. A larger input (or a broadcast threshold of -1) takes
+    * [[inBlocks]].
     */
   def nextValueFor(df: DataFrame, name: String, as: String,
       orderCols: Seq[Column] = Nil): DataFrame = {
+    val st = state(df.sparkSession, name)
+    val schema = df.schema.add(StructField(as, LongType, nullable = false))
+    val cap = Fixpoint.localRowCap(df.sparkSession.sessionState.conf, schema)
+    val onDriver = for {
+      order <- if (orderCols.isEmpty) Some(Nil) else sortOrder(df, orderCols)
+      rows <- Fixpoint.collectInternal(df, cap)
+    } yield {
+      val input = df.queryExecution.analyzed.output
+      val sorted = if (order.isEmpty) rows else LocalEval.sortRows(rows, order, input)
+      val types = input.map(_.dataType)
+      val base = st.reserve(sorted.size)
+      val stamped = sorted.iterator.zipWithIndex.map { case (r, i) =>
+        new GenericInternalRow((r.toSeq(types) :+ (base + i * st.incrementBy)).toArray): InternalRow
+      }.toIndexedSeq
+      GraftBridge.driverFrame(df.sparkSession, schema, stamped)
+    }
+    onDriver.getOrElse(inBlocks(df, st, as, orderCols))
+  }
+
+  /** `orderCols` resolved against `df`'s output, as its `Sort` holds them;
+    * `None` where the driver cannot evaluate them. */
+  private def sortOrder(df: DataFrame, orderCols: Seq[Column]): Option[Seq[SortOrder]] =
+    df.sort(orderCols: _*).queryExecution.analyzed match {
+      case Sort(order, true, child, _)
+          if child.output == df.queryExecution.analyzed.output && LocalEval.sortable(order) =>
+        Some(order)
+      case _ => None
+    }
+
+  /** NEXT VALUE FOR by BLOCK RESERVATION, for an input too large for the
+    * driver: one aggregation counts rows per partition (one row per
+    * partition reaches the driver), the counter advances by the total
+    * once, and each partition stamps its contiguous block with a
+    * partition-local row_number. With `orderCols` the input is
+    * range-partitioned and each partition sorted, a total order.
+    *
+    * The counting and the stamping pass must see the same partition
+    * layout (range partitioning samples its bounds per evaluation), so
+    * the partitioned input is persisted through
+    * [[graft.Checkpoints.persisted]]: the next invocation, or the
+    * harness's `releaseAll`, releases it.
+    */
+  private def inBlocks(df: DataFrame, st: SeqState, as: String,
+      orderCols: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
-    val st = state(spark, name)
     val parted =
       if (orderCols.nonEmpty) df.repartitionByRange(orderCols: _*)
       else df
-    // Persisted for the lifetime of the two passes: range partitioning
-    // samples its boundaries per evaluation, so the count pass and the
-    // assignment pass MUST observe the same partition layout or blocks
-    // could overlap. The pin also makes the count pass the only extra
-    // scan (the price of gap-free blocks).
-    val withPid = parted.withColumn("__pid", spark_partition_id()).persist()
+    val withPid = Checkpoints.persisted("next_value_for",
+      parted.withColumn("__pid", spark_partition_id()))
     // one tiny collect: one row per partition → offsets computed on the
     // driver (no window anywhere near the data)
     val counts = withPid.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{EqualByteCount, IntersectSizeSorted, MinHash}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
@@ -13,8 +13,9 @@ import scala.collection.mutable.ArrayBuffer
   * corpus's ids and gram arrays fit Spark's broadcast threshold, they are
   * collected once, broadcast, and the pairs are built by ONE job of
   * `defaultParallelism` tasks over the broadcast — no self-join, no
-  * shuffle, no distinct, no verify joins. The result is checkpointed and
-  * the broadcast destroyed before the caller sees it.
+  * shuffle, no distinct, no verify joins. The pairs come back to the
+  * driver when they fit it (a checkpoint holds them otherwise) and the
+  * broadcast is destroyed before the caller sees them.
   *
   * Each path yields exactly the pair set of the shuffled plan it stands
   * in for (MinhashBroadcastSpec pins it), with `doc_id` as the corpus key.
@@ -72,8 +73,13 @@ private[graft] object BroadcastGrams {
     StructField("jac", DoubleType)))
 
   /** `task(corpus, t, tasks)` for t in 0 until `defaultParallelism`, as
-    * one job over the broadcast corpus; the rows are checkpointed under
-    * `key` (released by the next invocation) and the broadcast destroyed. */
+    * one job over the broadcast corpus. At most
+    * [[graft.Fixpoint.localRowCap]] pairs come back to the driver from
+    * that job ([[graft.Fixpoint.collectInternal]]) and are returned as
+    * `GraftBridge.DriverRows`, which `Dedup.clusters` reads with no
+    * further job; more are checkpointed under `key`, released by the next
+    * invocation, by running the pair job again. The broadcast is
+    * destroyed before the caller sees the result. */
   def run(spark: SparkSession, key: String, corpus: Corpus, schema: StructType)(
       task: (Corpus, Int, Int) => Iterator[Row]): DataFrame = {
     val sc = spark.sparkContext
@@ -82,7 +88,10 @@ private[graft] object BroadcastGrams {
     try {
       val rows = sc.parallelize(0 until tasks, tasks)
         .mapPartitions(_.flatMap(t => task(bc.value, t, tasks)))
-      graft.Checkpoints.superseding(key, spark.createDataFrame(rows, schema).localCheckpoint(true))
+      val pairs = spark.createDataFrame(rows, schema)
+      graft.Checkpoints.superseding(key,
+        graft.Fixpoint.collectInternal(pairs, graft.Fixpoint.localRowCap(pairs))
+          .fold(pairs.localCheckpoint(true))(GraftBridge.driverFrame(spark, schema, _)))
     } finally bc.destroy()
   }
 

@@ -389,9 +389,10 @@ object Dedup {
     * each) against Spark's `autoBroadcastJoinThreshold` pick one:
     *  - '''broadcast''' (they fit): collected once, broadcast, and paired by
     *    one job of `defaultParallelism` tasks, each taking every n-th left
-    *    row of each source block (see [[BroadcastGrams]]). The result is
-    *    checkpointed, released by the next invocation, and read by
-    *    dedup_clusters and dedup_ngram_jaccard alike;
+    *    row of each source block (see [[BroadcastGrams]]). Pairs within
+    *    [[graft.Fixpoint.localRowCap]] come back as driver rows, so
+    *    dedup_clusters labels them with no further job; more are
+    *    checkpointed and released by the next invocation;
     *  - '''shuffled''' (they do not, or the threshold is -1): a SALTED
     *    self-join. The blocking key (source) has far fewer distinct values
     *    than the cluster has cores, so the left side is salted and the
@@ -462,19 +463,20 @@ object Dedup {
     // only the label frame backs the returned plan; the NEXT invocation
     // releases it
     try graft.Checkpoints.superseding("dedup_clusters", held.rows match {
-      case Some(rows) => components(held.df, rows)
+      case Some(rows) => components(pairs.sparkSession, held.schema, rows)
       case None => propagate(held.df)
     }) finally graft.Fixpoint.release(held)
   }
 
-  /** The components of `pairs`, whose rows the driver holds, by one
-    * union-find pass: each id with the smallest id of its component, the
+  /** The components of `rows`, the pairs (of row type `pairs`) the
+    * driver holds, by one union-find pass: each id with the smallest id of its component, the
     * labels min-label propagation converges to. Ids compare as Spark's
     * `min` and join equality compare them, on their Catalyst values. A
     * NULL id, which no join matches, links nothing: it takes the smallest
     * label among its neighbours, or NULL if it has none. */
-  private def components(pairs: DataFrame, rows: IndexedSeq[Row]): DataFrame = {
-    val idType = pairs.schema.head.dataType
+  private def components(spark: SparkSession, pairs: StructType,
+      rows: IndexedSeq[Row]): DataFrame = {
+    val idType = pairs.head.dataType
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
     // the distinct ids, smallest first: every union keeps the smaller
     // root, so a component's root is its smallest id
@@ -498,9 +500,9 @@ object Dedup {
       withNull.flatMap(r => Seq(r.get(0), r.get(1))).filter(_ != null).map(find)
         .minOption.map(ids(_)._2).orNull))
     val schema = StructType(Seq(
-      StructField("doc_id", idType, pairs.schema.exists(_.nullable)),
+      StructField("doc_id", idType, pairs.exists(_.nullable)),
       StructField("cluster_id", idType)))
-    pairs.sparkSession.createDataFrame((labels ++ nullLabel).asJava, schema)
+    spark.createDataFrame((labels ++ nullLabel).asJava, schema)
   }
 
   /** Min-label propagation over checkpointed rounds
@@ -600,8 +602,9 @@ object Dedup {
     *  - '''shuffled''' (they do not, or the threshold is -1): the plan
     *    below, with its scratch planner and multi-pass verify, run with
     *    AQE off for the operator and the setting restored after.
-    * Either way the result is checkpointed eagerly and released by the
-    * next invocation.
+    * Either way the result is materialized eagerly: broadcast pairs that
+    * fit [[graft.Fixpoint.localRowCap]] come back as driver rows, and
+    * anything else is checkpointed and released by the next invocation.
     *
     * Shuffle discipline of the shuffled plan (what survives 100 TB):
     *  - the bucket self-join carries ONLY (doc_id, signature) — never the

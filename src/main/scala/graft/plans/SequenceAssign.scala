@@ -28,10 +28,10 @@ import org.apache.spark.sql.types.LongType
   * plan and reserves a fresh block (reference: sequence.iq re-query
   * semantics).
   *
-  * The reservation itself stays the scale-correct block design of
-  * [[graft.operators.Sequences.nextValueFor]]: one per-partition count
-  * pass, one atomic driver-side block grab, partition-local stamping —
-  * no global window, no single-partition collapse.
+  * The reservation itself is [[graft.operators.Sequences.nextValueFor]]'s:
+  * one atomic driver-side block grab, over rows the driver collected and
+  * stamped when they fit it, else over partition-local blocks — no global
+  * window, no single-partition collapse.
   */
 case class SequenceAssignPlan(
     source: LogicalPlan,

@@ -22,9 +22,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * shape) rather than arbitrary expression nesting. NEXT VALUE lowers
   * onto [[SequenceAssignPlan]], a custom LogicalPlan planned by
   * [[SequenceStrategy]] into [[SequenceAssignExec]], whose doExecute
-  * runs [[Sequences.nextValueFor]] — the distributed block-reservation
-  * assignment, in the source's row order like the reference's row-at-a-
-  * time evaluation. Reservation is an EXECUTION-time effect: parsing
+  * runs [[Sequences.nextValueFor]] — driver stamping for a source the
+  * driver can hold, block reservation past it — in the source's row
+  * order like the reference's row-at-a-time evaluation. Reservation is an EXECUTION-time effect: parsing
   * (and EXPLAIN, and any tool replaying the statement text) is pure and
   * advances nothing; each executed action reserves a fresh block —
   * the same contract as re-issuing the statement. Within one execution

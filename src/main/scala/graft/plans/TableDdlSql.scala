@@ -1,8 +1,11 @@
 package graft.plans
 
+import graft.Fixpoint
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** CREATE TABLE with DEFAULT-expression and VIRTUAL generated columns —
   * the server module's table DDL surface
@@ -22,20 +25,36 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DEFAULT) plus INSERT/DROP on tables it created; everything else —
   * including plain CREATE TABLE — falls through to Spark untouched.
   *
-  * Storage is session-scoped copy-on-write like [[graft.operators.TableModify]]:
-  * base (stored) columns live in a union-grown DataFrame; the table is
-  * exposed as a temp view PROJECTING the virtual columns, so every read
-  * path (SQL, DataFrame, rel2sql) sees them computed — the same shape as
-  * the reference's EnumerableCalc over the scan in table.iq's !plan. At
-  * scale the same design writes base columns to parquet and computes
-  * virtual columns in the scan projection: generated columns cost zero
-  * storage and one codegen'd expression per read.
+  * Storage is session-scoped and holds rows, as the reference's
+  * `MutableArrayTable` holds an `ArrayList` of them. Each CREATE TABLE,
+  * CTAS and INSERT materializes its rows once, when the statement runs
+  * ([[graft.Fixpoint.materialize]]), so a read neither scans the source
+  * again nor re-evaluates it: an INSERT of `current_timestamp()` reads
+  * back the same instant every time (snapshot semantics), and
+  * `rows_modified` is the count of the materialized rows. A table of at
+  * most [[graft.Fixpoint.localRowCap]] rows is one `LocalRelation` (CREATE
+  * builds it empty straight from the declared types), which Spark folds
+  * projections, filters and limits into and [[graft.FoldLocalSort]] folds
+  * ORDER BY into, so a read runs no job before its sink. Past the cap,
+  * each further INSERT adds a part the table owns as a local checkpoint,
+  * and DROP TABLE releases them. The table is exposed as a temp view
+  * PROJECTING the virtual columns, so every read path (SQL, DataFrame,
+  * rel2sql) sees them computed — the same shape as the reference's
+  * EnumerableCalc over the scan in table.iq's !plan: generated columns
+  * cost no storage and one expression per read.
   */
 object TableDdlSql {
 
   final case class ColDef(name: String, dataType: String, notNull: Boolean,
       default: Option[String], virtual: Option[String])
-  final case class TableDef(name: String, cols: Seq[ColDef], var data: DataFrame)
+
+  /** A table's stored columns, as `parts` materialized when the statement
+    * that wrote them ran. `schema` is the stored columns', every field
+    * nullable. */
+  final case class TableDef(name: String, cols: Seq[ColDef], schema: StructType,
+      var parts: Vector[Fixpoint.Round]) {
+    def data: DataFrame = parts.map(_.df).reduceLeft(_ unionByName _)
+  }
 
   /** (session, lowercased name) → definition; session-keyed like
     * Engine.Tables so suites never see each other's tables, swept on
@@ -178,7 +197,7 @@ object TableDdlSql {
           fields.mkString("STRUCT<", ", ", ">")
         } else resolveType(spark, b)
       // reject unknown spellings now, not at first use
-      org.apache.spark.sql.types.DataType.fromDDL(sparkType)
+      DataType.fromDDL(sparkType)
       types.put((spark, name.toLowerCase), sparkType)
       Some(delegate.parsePlan(s"SELECT 'created' AS status, '$name' AS type_name"))
 
@@ -212,9 +231,9 @@ object TableDdlSql {
           ColDef(n, t.map(resolveType(spark, _)).getOrElse(f.dataType.sql),
             notNull = false, None, None)
         }
-        val data = df0.toDF(cols.map(_.name): _*).selectExpr(cols.map(c =>
-          s"CAST(${c.name} AS ${c.dataType}) AS ${c.name}"): _*)
-        val td = TableDef(name, cols, data)
+        val data = Fixpoint.materialize(df0.toDF(cols.map(_.name): _*).selectExpr(cols.map(c =>
+          s"CAST(${c.name} AS ${c.dataType}) AS ${c.name}"): _*))
+        val td = TableDef(name, cols, nullable(data.schema), Vector(data))
         tables.put(key, td)
         registerView(spark, td)
         Some(delegate.parsePlan(
@@ -239,11 +258,12 @@ object TableDdlSql {
               throw new IllegalArgumentException(s"Table '$name' already exists")
             // IF NOT EXISTS: keep the ORIGINAL definition (table.iq: no K)
           } else {
-            val stored = cols.filter(_.virtual.isEmpty)
-            val empty = spark.sql(
-              stored.map(c => s"CAST(NULL AS ${c.dataType}) AS ${c.name}")
-                .mkString("SELECT ", ", ", " WHERE 1 = 0"))
-            val td = TableDef(name, cols, empty)
+            // each declared type as a CAST to it types the result: CHAR
+            // and VARCHAR read as STRING
+            val schema = StructType(cols.filter(_.virtual.isEmpty).map(c => StructField(c.name,
+              CharVarcharUtils.replaceCharVarcharWithString(DataType.fromDDL(c.dataType)))))
+            val td = TableDef(name, cols, schema,
+              Vector(Fixpoint.local(spark, schema, IndexedSeq.empty)))
             tables.put(key, td)
             registerView(spark, td)
           }
@@ -256,6 +276,7 @@ object TableDdlSql {
       val removed = tables.remove((spark, name.toLowerCase))
       if (removed != null) {
         spark.catalog.dropTempView(name)
+        removed.parts.foreach(Fixpoint.release)
         SqlAdvisor.invalidate(spark)
         Some(delegate.parsePlan(s"SELECT 'dropped' AS status, '$name' AS table_name"))
       } else None // not ours — Spark's DROP TABLE (its IF EXISTS no-op, its error)
@@ -353,11 +374,29 @@ object TableDdlSql {
         case None => s"CAST(NULL AS ${c.dataType}) AS ${c.name}"
       }
     }: _*)
-    val n = completed.count()
-    td.data = td.data.unionByName(completed)
+    val added = Fixpoint.materialize(completed)
+    append(spark, td, added)
     registerView(spark, td)
-    delegate.parsePlan(s"SELECT CAST($n AS BIGINT) AS rows_modified")
+    delegate.parsePlan(s"SELECT CAST(${added.count} AS BIGINT) AS rows_modified")
   }
+
+  /** Adds `added` to the table: into its last part when both are held on
+    * the driver, have the same types and together fit
+    * [[Fixpoint.localRowCap]], so a table under the cap stays one
+    * `LocalRelation`; as a part of its own otherwise. */
+  private def append(spark: SparkSession, td: TableDef, added: Fixpoint.Round): Unit = {
+    val last = td.parts.last
+    val merged = for {
+      held <- last.internal
+      rows <- added.internal
+      if added.schema.map(_.dataType) == td.schema.map(_.dataType) &&
+        held.size + rows.size <= Fixpoint.localRowCap(spark.sessionState.conf, td.schema)
+    } yield Fixpoint.local(spark, td.schema, held ++ rows)
+    td.parts = merged.fold(td.parts :+ added)(td.parts.init :+ _)
+  }
+
+  private def nullable(schema: StructType): StructType =
+    StructType(schema.map(_.copy(nullable = true)))
 
   /** Expose the table as a temp view projecting virtual columns in
     * declared order — the reference's Calc-over-scan read shape. */

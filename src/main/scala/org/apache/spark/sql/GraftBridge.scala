@@ -1,10 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
@@ -87,6 +89,48 @@ object GraftBridge {
   def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A frame over `rows` of `schema` held on the driver: one
+    * `LocalRelation`, with no conversion of the rows. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    frame(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Rows the driver holds, as an RDD: each partition is one byte array
+    * of packed rows ([[pack]]) that its task unpacks, and the driver reads
+    * `rows` with no job ([[graft.LocalEval]] evaluates plans over it). It
+    * stands in for a `LocalRelation` where the rows go on to tasks:
+    * Catalyst maps over a `LocalRelation`'s rows in every rule that
+    * rewrites its expressions, and `LocalTableScanExec` Java-serializes
+    * each row object into its task. Writing 150,000 two-BIGINT rows to
+    * the `noop` sink took 0.25–0.45 s as a `LocalRelation` (about 0.23 s
+    * of it analysis and optimization) and 0.05–0.07 s packed (local[4],
+    * 4-core VM). */
+  final class DriverRows private[GraftBridge] (sc: SparkContext,
+      @transient packed: Seq[Array[Byte]], numFields: Int,
+      @transient val rows: IndexedSeq[InternalRow]) extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      packed.indices.map(i => new DriverRowsPartition(i, packed(i))).toArray
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      unpack(split.asInstanceOf[DriverRowsPartition].bytes, numFields)
+  }
+
+  private final class DriverRowsPartition(val index: Int, val bytes: Array[Byte])
+      extends Partition
+
+  /** A frame over `rows` of `schema` held on the driver, as [[DriverRows]]
+    * split into the session's leaf parallelism. */
+  def driverFrame(spark: SparkSession, schema: StructType, rows: IndexedSeq[InternalRow]): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val toUnsafe = UnsafeProjection.create(schema)
+    val n = rows.size
+    val slices = math.max(1, math.min(n, session.leafNodeDefaultParallelism))
+    val packed = (0 until slices).map(i =>
+      pack(rows.iterator.slice(i * n / slices, (i + 1) * n / slices).map(toUnsafe)))
+    val rdd = new DriverRows(session.sparkContext, packed, schema.length, rows)
+    val stats = Statistics(
+      sizeInBytes = BigInt(n) * math.max(1, schema.defaultSize), rowCount = Some(n))
+    frame(spark, LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(session, Some(stats), None))
+  }
+
   private val collectIds = new AtomicLong()
 
   /** The rows of `df` when their total `weight` is at most `budget`, else
@@ -104,19 +148,9 @@ object GraftBridge {
     SQLExecution.withNewExecutionId(ds.queryExecution, Some("collectWithin")) {
       val rdd = ds.queryExecution.toRdd
       val chunks = rdd.mapPartitions { it =>
-        val bytes = new ByteArrayOutputStream()
-        val out = new DataOutputStream(bytes)
-        val buf = new Array[Byte](4096)
         var w = 0L
-        while (w <= budget && it.hasNext) {
-          val row = it.next()
-          w += weight(row)
-          val u = row.asInstanceOf[UnsafeRow]
-          out.writeInt(u.getSizeInBytes)
-          u.writeToStream(out, buf)
-        }
-        out.flush()
-        Iterator.single((w, if (w <= budget) bytes.toByteArray else null))
+        val bytes = pack(it.takeWhile(_ => w <= budget).map { row => w += weight(row); row })
+        Iterator.single((w, if (w <= budget) bytes else null))
       }
       val parts = new Array[Array[Byte]](rdd.getNumPartitions)
       val tag = s"graft-collect-within-${collectIds.incrementAndGet()}"
@@ -139,17 +173,36 @@ object GraftBridge {
       if (over) None
       else {
         done.get // rethrows a failed job's error
-        Some(parts.flatMap { p =>
-          val in = new DataInputStream(new java.io.ByteArrayInputStream(p))
-          Iterator.continually(in.available() > 0).takeWhile(identity).map { _ =>
-            val b = new Array[Byte](in.readInt())
-            in.readFully(b)
-            val row = new UnsafeRow(numFields)
-            row.pointTo(b, b.length)
-            row: InternalRow
-          }
-        })
+        Some(parts.flatMap(unpack(_, numFields)))
       }
+    }
+  }
+
+  /** `rows` (`UnsafeRow`s) packed into one byte array, each as its size
+    * and its bytes: the form rows cross between the driver and tasks in,
+    * one array per partition instead of one serialized object per row. */
+  private def pack(rows: Iterator[InternalRow]): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    val buf = new Array[Byte](4096)
+    rows.foreach { row =>
+      val u = row.asInstanceOf[UnsafeRow]
+      out.writeInt(u.getSizeInBytes)
+      u.writeToStream(out, buf)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  /** The rows of `numFields` fields that [[pack]] wrote into `bytes`. */
+  private def unpack(bytes: Array[Byte], numFields: Int): Iterator[InternalRow] = {
+    val in = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    Iterator.continually(in.available() > 0).takeWhile(identity).map { _ =>
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      val row = new UnsafeRow(numFields)
+      row.pointTo(b, b.length)
+      row: InternalRow
     }
   }
 

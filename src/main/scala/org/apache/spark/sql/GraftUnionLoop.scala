@@ -159,8 +159,8 @@ case class GraftUnionLoopExec(
       case p if !overCap && !p.exists(_.isInstanceOf[UnionLoopRef]) &&
           !LocalEval.driverLocal(p) =>
         val df = GraftBridge.frame(session, p)
-        Fixpoint.collectUpTo(df, Fixpoint.localRowCap(df)) match {
-          case Some(rows) => LocalRelation.fromExternalRows(p.output, rows.toIndexedSeq)
+        Fixpoint.collectInternal(df, Fixpoint.localRowCap(df)) match {
+          case Some(rows) => LocalRelation(p.output, rows)
           case None => overCap = true; p
         }
     }

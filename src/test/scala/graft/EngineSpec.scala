@@ -73,6 +73,21 @@ class EngineSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("only Checkpoints persists or caches a relation") {
+    // a persist nothing releases stays in the block store for the life of
+    // the session; Checkpoints ties every one to the next invocation or
+    // to releaseAll
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing $root")
+    val hits = for {
+      file <- Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+      if file.toString.endsWith(".scala") && file.getFileName.toString != "Checkpoints.scala"
+      (line, n) <- Files.readAllLines(file).asScala.zipWithIndex
+      if line.contains(".persist(") || line.contains(".cache()")
+    } yield s"$file:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("context functions answer through the SQL entry (SURVEY §2.4)") {
     // reference: sql/fun/SqlStdOperatorTable.java:1783-1831 — USER,
     // CURRENT_USER, SESSION_USER, CURRENT_CATALOG/SCHEMA. Values are

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * NEXT VALUE FOR hands out consecutive values in row order, CURRENT
   * VALUE FOR reads without advancing, unknown sequences are "Table not
   * found" errors — plus the distributed properties the reference never
-  * needed to state: block reservation keeps values unique and gap-free
-  * across partitions, and ordered assignment is deterministic.
+  * needed to state: the driver path and block reservation (a broadcast
+  * threshold of -1) hand out the same values, unique and gap-free across
+  * partitions, and ordered assignment is deterministic.
   */
 class SequencesSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -63,31 +65,103 @@ class SequencesSpec extends AnyFunSuite {
     spark.sql("DROP SEQUENCE IF EXISTS ddl_seq") // no error
   }
 
-  test("distributed: unordered assignment is unique and gap-free across 8 partitions") {
-    operators.Sequences.create(spark, "bulk_seq", startWith = 1L, incrementBy = 1L,
-      replace = true)
-    val df = spark.range(0, 1000).toDF("id").repartition(8)
-    val vals = operators.Sequences.nextValueFor(df, "bulk_seq", "v")
-      .select("v").collect().map(_.getLong(0))
-    assert(vals.length == 1000)
-    assert(vals.distinct.length == 1000, "values must be unique")
-    assert(vals.min == 1L && vals.max == 1000L, "block must be gap-free")
-    assert(operators.Sequences.currentValue(spark, "bulk_seq") == 1000L)
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `f` with the broadcast threshold at -1, which turns the driver path
+    * off; the session's setting is restored afterwards. */
+  private def inBlocks[T](f: => T): T = {
+    val prev = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try f finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
 
-  test("distributed: ordered assignment equals rank arithmetic deterministically") {
-    operators.Sequences.create(spark, "ord_seq", startWith = 1000L, incrementBy = 5L,
+  /** `(k, v)` for each row of NEXT VALUE FOR over `df`'s `k` on a fresh
+    * sequence, the Spark jobs the invocation ran, and whether it took the
+    * driver path (a result the driver holds). */
+  private def stamp(df: DataFrame, order: Seq[Column], start: Long,
+      inc: Long): (Seq[(Long, Long)], Long, Boolean) = {
+    operators.Sequences.create(spark, "diff_seq", startWith = start, incrementBy = inc,
       replace = true)
-    val df = spark.range(0, 500).toDF("id")
-      .withColumn("k", col("id") * 37 % 501) // a permutation, shuffled order
-      .repartition(8)
-    val got = operators.Sequences
-      .nextValueFor(df.select(col("k")), "ord_seq", "v", Seq(col("k")))
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    // k values are distinct, so ordered assignment is v = 1000 + rank(k)*5
-    val ks = got.keySet.toSeq.sorted
-    ks.zipWithIndex.foreach { case (k, i) =>
-      assert(got(k) == 1000L + i * 5L, s"k=$k")
+    val jobs = new Bench.JobCounter(spark)
+    val out = try operators.Sequences.nextValueFor(df.select(col("k")), "diff_seq", "v", order)
+      finally jobs.close()
+    val n = jobs.count
+    val onDriver = LocalEval.driverLocal(out.queryExecution.analyzed)
+    (out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq, n, onDriver)
+  }
+
+  /** Both paths' `(k, v)` rows, after asserting which path each took.
+    * Every "distributed" case below runs on both. */
+  private def bothPaths(df: => DataFrame, order: Seq[Column], start: Long = 1L,
+      inc: Long = 1L): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    val (driver, _, local) = stamp(df, order, start, inc)
+    assert(local, "the default threshold did not take the driver path")
+    val (blocks, _, blockLocal) = inBlocks(stamp(df, order, start, inc))
+    assert(!blockLocal, "a threshold of -1 took the driver path")
+    (driver, blocks)
+  }
+
+  /** 500 distinct keys, `id * 37 % 501` (a permutation), over `partitions`. */
+  private def shuffledKeys(partitions: Int): DataFrame =
+    spark.range(0, 500).select((col("id") * 37 % 501).as("k")).repartition(partitions)
+
+  test("distributed: ordered assignment equals rank arithmetic deterministically") {
+    val (driver, blocks) = bothPaths(shuffledKeys(8), Seq(col("k")), start = 1000L, inc = 5L)
+    val expected = driver.map(_._1).sorted.zipWithIndex.map { case (k, i) => (k, 1000L + i * 5L) }
+    assert(driver.sortBy(_._1) == expected)
+    assert(blocks.sortBy(_._1) == expected)
+    assert(operators.Sequences.currentValue(spark, "diff_seq") == 1000L + 499 * 5L)
+  }
+
+  test("distributed: unordered assignment is unique and gap-free across 8 partitions") {
+    val (driver, blocks) = bothPaths(spark.range(0, 1000).select(col("id").as("k"))
+      .repartition(8), Nil)
+    for (vals <- Seq(driver, blocks).map(_.map(_._2)))
+      assert(vals.sorted == (1L to 1000L), "values must be unique and gap-free")
+    assert(driver.map(_._1).sorted == blocks.map(_._1).sorted)
+    assert(operators.Sequences.currentValue(spark, "diff_seq") == 1000L)
+  }
+
+  test("distributed: a descending order with ties and INCREMENT BY") {
+    val keys = spark.range(0, 300).select((col("id") % 7).as("k"), col("id"))
+      .repartition(3)
+    val (driver, blocks) = bothPaths(keys, Seq(col("k").desc), start = -10L, inc = -3L)
+    // ties take any order among themselves, so compare each key's values
+    def byKey(rows: Seq[(Long, Long)]) = rows.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    assert(byKey(driver) == byKey(blocks))
+    val ks = driver.sortBy(-_._2).map(_._1)
+    assert(ks == ks.sorted.reverse, "values must follow k descending")
+    assert(driver.map(_._2).sorted == (0 until 300).map(i => -10L - 3L * i).sorted)
+  }
+
+  test("distributed: an empty input reserves nothing") {
+    val (driver, blocks) = bothPaths(shuffledKeys(4).where(col("k") < 0), Seq(col("k")))
+    assert(driver.isEmpty && blocks.isEmpty)
+    assert(!operators.Sequences.started(spark, "diff_seq"))
+  }
+
+  test("the driver path collects its input with one job and stamps it with none") {
+    val (rows, jobs, local) = stamp(spark.range(0, 100, 1, 4).select((col("id") * 7 % 101).as("k")),
+      Seq(col("k")), 1L, 1L)
+    assert(local)
+    assert(jobs == 1)
+    assert(rows.sortBy(_._2).map(_._1) == rows.map(_._1).sorted)
+  }
+
+  test("the counter advances once per invocation, by the row count") {
+    for (path <- Seq("driver", "blocks")) {
+      def run[T](f: => T): T = if (path == "blocks") inBlocks(f) else f
+      operators.Sequences.create(spark, "once_seq", startWith = 10L, incrementBy = 2L,
+        replace = true)
+      val df = shuffledKeys(4)
+      val first = run(operators.Sequences.nextValueFor(df, "once_seq", "v", Seq(col("k"))))
+      assert(operators.Sequences.currentValue(spark, "once_seq") == 10L + 499 * 2L, path)
+      val second = run(operators.Sequences.nextValueFor(df, "once_seq", "v"))
+      assert(operators.Sequences.currentValue(spark, "once_seq") == 10L + 999 * 2L, path)
+      // reading the results again reserves nothing more
+      val vals = (first.collect() ++ second.collect()).map(_.getLong(1)).sorted.toSeq
+      assert(vals == (0 until 1000).map(10L + 2L * _), path)
+      assert(operators.Sequences.currentValue(spark, "once_seq") == 10L + 999 * 2L, path)
     }
   }
 

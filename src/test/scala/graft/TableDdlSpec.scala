@@ -108,4 +108,81 @@ class TableDdlSpec extends AnyFunSuite {
       Seq(Seq(1, 10), Seq(2, 20), Seq(3, 30)))
     sql("drop table tm")
   }
+
+  /** `f`'s result and the Spark jobs it started. */
+  private def jobsDuring[T](f: => T): (T, Long) = {
+    val jobs = new Bench.JobCounter(spark)
+    try {
+      val out = f
+      (out, jobs.count)
+    } finally jobs.close()
+  }
+
+  test("INSERT stores a snapshot: current_timestamp() reads back the same instant") {
+    sql("create table tsnap (k int, ts timestamp, d int default 0)")
+    sql("insert into tsnap (k, ts) select 1, current_timestamp()")
+    val first = rows("select ts from tsnap")
+    Thread.sleep(100)
+    assert(rows("select ts from tsnap") == first)
+    sql("drop table tsnap")
+  }
+
+  test("rows_modified counts the rows each INSERT materialized") {
+    sql("create table tcount (i bigint, j bigint default i * 2)")
+    def insert(q: String): Long = sql(q).collect().head.getLong(0)
+    assert(insert("insert into tcount (i) select id from range(37)") == 37L)
+    assert(insert("insert into tcount (i) select id from range(5) where id > 10") == 0L)
+    assert(insert("insert into tcount (i) values (100), (101)") == 2L)
+    assert(rows("select count(*) from tcount") == Seq(Seq(39L)))
+    sql("drop table tcount")
+  }
+
+  test("CTAS and INSERT ... VALUES read back what Spark's own query returns") {
+    Tables.registerAll(spark, sfDir)
+    val query = "select n_nationkey, n_name, n_regionkey from nation where n_regionkey < 3"
+    sql(s"create table tctas (k int, nm varchar(25), r bigint) as $query")
+    val expected = rows(s"select cast(n_nationkey as int), n_name, n_regionkey from ($query) " +
+      "order by n_nationkey")
+    assert(rows("select * from tctas order by k") == expected)
+    sql("create table tvals (i int, s varchar(5), d decimal(10, 2), e int default i + 1)")
+    sql("insert into tvals (i, s, d) values (2, 'bb', 2.5), (1, 'a', null), (null, null, 7)")
+    assert(rows("select * from tvals order by i nulls last") == rows(
+      """select cast(i as int), cast(s as string), cast(d as decimal(10, 2)), cast(i + 1 as int)
+        |from values (2, 'bb', 2.5), (1, 'a', null), (null, null, 7) as v(i, s, d)
+        |order by i nulls last""".stripMargin))
+    sql("drop table tctas")
+    sql("drop table tvals")
+  }
+
+  test("a table under the cap is read, ordered, with no job") {
+    sql("create table tlocal (i int, j int default i * 10)")
+    sql("insert into tlocal (i) values (3), (1), (2)")
+    val (got, jobs) = jobsDuring(rows("select i, j from tlocal order by i desc"))
+    assert(got == Seq(Seq(3, 30), Seq(2, 20), Seq(1, 10)))
+    assert(jobs == 0)
+    sql("drop table tlocal")
+  }
+
+  test("a table past the cap holds local checkpoints, and DROP TABLE releases them") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(threshold)
+    // 16-byte rows: a cap of 8 (and 16 for the one-column CTAS)
+    spark.conf.set(threshold, "128")
+    try {
+      def pinned = spark.sparkContext.getPersistentRDDs.size
+      val before = pinned
+      sql("create table tbig (i bigint, j bigint default i + 1)")
+      sql("insert into tbig (i) select id from range(100)")
+      sql("insert into tbig (i) values (1000)")
+      sql("insert into tbig (i) select id from range(200, 250)")
+      assert(pinned > before, "no checkpoint held past the cap")
+      assert(rows("select count(*), sum(i), sum(j) from tbig") ==
+        Seq(Seq(151L, 4950L + 1000L + 11225L, 4950L + 1000L + 11225L + 151L)))
+      sql("create table tbigctas (i bigint) as select id from range(40)")
+      assert(rows("select count(*) from tbigctas") == Seq(Seq(40L)))
+      sql("drop table tbig")
+      sql("drop table tbigctas")
+      assert(pinned == before, "DROP TABLE left blocks pinned")
+    } finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
 }

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * subset; this gate makes every expression the registry's own plans
   * produce part of the corpus (r6 VERDICT #6). `mustCycle` pins the
   * queries KNOWN to convert — one of them regressing to "unsupported" is
-  * a failure, while a new query becoming convertible just passes.
+  * a failure, and so is a query that newly converts until it is added.
   */
 class TpchCycleSpec extends AnyFunSuite {
   import SparkTestSession._
