@@ -39,15 +39,14 @@ object Checkpoints {
   private val lastResult = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), DataFrame]()
 
-  /** PER-INVOCATION evictable materializations, keyed by (owner, tag) for
-    * release bookkeeping only; the owner is the source DataFrame instance
-    * ([[materialized]]) or the session ([[persisted]]). A relation an
+  /** PER-INVOCATION evictable materializations, keyed by (source DataFrame
+    * instance, config tag) for release bookkeeping only. A relation an
     * operator references several times in ONE invocation (the minhash gram
     * arrays feed the banding pass, the signature pass and both verify join
     * sides; a planning action executes it a first time before the query
     * even returns) is persisted so that single invocation computes it
-    * once. The persist is NOT a cross-invocation memo: re-requesting an
-    * (owner, tag) UNPERSISTS the previous entry and rebuilds, so every
+    * once. The persist is NOT a cross-invocation memo: re-requesting a
+    * (src, tag) UNPERSISTS the previous entry and rebuilds, so every
     * bench rep and every oracle run recomputes the relation from the
     * parquet scan — a bench statistic must never time a predecessor rep's
     * warm blocks. The previous entry is unpersisted BEFORE the new
@@ -60,31 +59,36 @@ object Checkpoints {
     * session has stopped drop on access (their blocks died with the
     * context). */
   private val matCache =
-    new java.util.concurrent.ConcurrentHashMap[(AnyRef, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(DataFrame, String), DataFrame]()
 
-  def materialized(src: DataFrame, tag: String)(build: => DataFrame): DataFrame =
-    persist(src, tag, build)
-
-  /** `df` persisted for one invocation of the operator named `key` in
-    * `df`'s session: the previous invocation's persist under `key` is
-    * released first, and [[releaseAll]] releases this one. For a relation
-    * one invocation reads twice, when its source is not one DataFrame
-    * instance across invocations (as [[materialized]] needs). */
-  def persisted(key: String, df: DataFrame): DataFrame = persist(df.sparkSession, key, df)
-
-  /** The one place a relation is persisted: under `(owner, tag)`, whose
-    * previous entry is released first. */
-  private def persist(owner: AnyRef, tag: String, build: => DataFrame): DataFrame = {
+  def materialized(src: DataFrame, tag: String)
+      (build: => DataFrame): DataFrame = {
     val it = matCache.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
     }
-    val prev = matCache.remove((owner, tag))
+    val prev = matCache.remove((src, tag))
     if (prev != null) prev.unpersist(blocking = false)
     val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    matCache.put((owner, tag), df)
+    matCache.put((src, tag), df)
     df
+  }
+
+  /** Checkpoints that belong to the result built over them rather than to
+    * an operator, held weakly: only the result decides how long they live.
+    * Once it is unreachable, Spark's ContextCleaner unpersists them (a
+    * local checkpoint registers for that cleanup); [[releaseAll]] releases
+    * the session's at once. A later invocation never releases them, so a
+    * result the caller still holds stays readable. */
+  private val owned = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], org.apache.spark.sql.SparkSession]())
+
+  /** Registers `rdd`, a local checkpoint that `result` reads, as owned by
+    * the result (see [[owned]]); returns `result`. */
+  def ownedBy(result: DataFrame, rdd: org.apache.spark.rdd.RDD[_]): DataFrame = {
+    owned.put(rdd, result.sparkSession)
+    result
   }
 
   /** Release EVERY registered last-result checkpoint of the session.
@@ -109,6 +113,13 @@ object Checkpoints {
       val e = mit.next()
       if (e.getValue.sparkSession eq spark) {
         e.getValue.unpersist(blocking = false); mit.remove()
+      }
+    }
+    owned.synchronized {
+      val oit = owned.entrySet().iterator()
+      while (oit.hasNext) {
+        val e = oit.next()
+        if (e.getValue eq spark) { e.getKey.unpersist(blocking = false); oit.remove() }
       }
     }
   }

@@ -56,17 +56,15 @@ import scala.util.control.NonFatal
 object Fixpoint {
 
   /** One materialized relation of `count` rows: `internal` holds them in
-    * Catalyst form iff they live on the driver (then `df` is one
-    * `LocalRelation` over them, built on first use); otherwise `df` is a
-    * local checkpoint. */
+    * Catalyst form iff they live on the driver (then `df` is a
+    * `GraftBridge.DriverRows` frame over them, built on first use);
+    * otherwise `df` is a local checkpoint. */
   final class Round private[Fixpoint] (frame: => DataFrame, val schema: StructType,
       val internal: Option[IndexedSeq[InternalRow]], val count: Long) {
     lazy val df: DataFrame = frame
     /** The driver rows as external `Row`s, converted on first use. */
-    lazy val rows: Option[IndexedSeq[Row]] = internal.map { rs =>
-      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      rs.map(toRow(_).asInstanceOf[Row])
-    }
+    lazy val rows: Option[IndexedSeq[Row]] =
+      internal.map(rs => ArraySeq.unsafeWrapArray(toRows(schema, rs)))
     def local: Boolean = internal.isDefined
   }
 
@@ -83,17 +81,25 @@ object Fixpoint {
   }
 
   /** Materializes `df` on the driver when it has at most [[localRowCap]]
-    * rows, else as a local checkpoint. */
-  def materialize(df: DataFrame): Round = collectInternal(df, localRowCap(df)) match {
-    case Some(rows) => local(df.sparkSession, df.schema, rows)
-    case None =>
-      val (ckpt, n) = checkpoint(df)
-      new Round(ckpt, df.schema, None, n)
+    * rows, else as a local checkpoint. A plan [[LocalEval]] evaluates runs
+    * no job; any other runs as one job on either side of the cap
+    * (`GraftBridge.materialize`). */
+  def materialize(df: DataFrame): Round = {
+    val spark = df.sparkSession
+    val cap = localRowCap(df)
+    val evaluated = if (cap > 0) LocalEval.collectInternal(df, cap).toOption else None
+    evaluated match {
+      case Some(rows) => local(spark, df.schema, rows)
+      case None => GraftBridge.materialize(df, if (cap > 0) cap else -1) match {
+        case Left(rows) => local(spark, df.schema, ArraySeq.unsafeWrapArray(rows))
+        case Right(pinned) => new Round(pinned.df, df.schema, None, pinned.count)
+      }
+    }
   }
 
   /** A round of `rows` of `schema` held on the driver. */
   def local(spark: SparkSession, schema: StructType, rows: IndexedSeq[InternalRow]): Round =
-    new Round(GraftBridge.localFrame(spark, schema, rows), schema, Some(rows), rows.size)
+    new Round(GraftBridge.driverFrame(spark, schema, rows), schema, Some(rows), rows.size)
 
   /** Frees a round's pinned blocks (a local round holds none). */
   def release(r: Round): Unit = if (!r.local) Checkpoints.release(r.df)
@@ -292,7 +298,8 @@ object Fixpoint {
     * as one bounded job where LocalEval declines the round. */
   private def runRound(plan: StepPlan, rows: IndexedSeq[Row], cap: Long,
       df: => DataFrame): Option[Array[Row]] =
-    rowsOf(LocalEval.run(plan.compiled, Map(plan.input -> rows), cap), df, cap)
+    withinCap(LocalEval.runInternal(plan.compiled, Map(plan.input -> rows), cap), df, cap)
+      .map(toRows(plan.schema, _))
 
   /** Large rounds merge into one checkpoint every this many rounds: a
     * union chain longer than this makes each round's `except` plan deep,
@@ -352,39 +359,36 @@ object Fixpoint {
     }
   }
 
-  /** The rows when there are at most `cap`: evaluated on the driver by
-    * [[LocalEval]], or, where it declines, by [[boundedCollect]]. */
+  /** The rows when there are at most `cap`, as external `Row`s:
+    * [[collectInternal]]'s, converted. */
   def collectUpTo(df: DataFrame, cap: Long): Option[Array[Row]] =
-    if (cap <= 0) None else rowsOf(LocalEval.collect(df, cap), df, cap)
+    collectInternal(df, cap).map(toRows(df.schema, _))
 
-  /** [[collectUpTo]]'s rows in Catalyst form, with no conversion: what
-    * LocalEval evaluates, or the bounded job's copied `UnsafeRow`s. */
+  /** The rows when there are at most `cap`, in Catalyst form: evaluated on
+    * the driver by [[LocalEval]] or, where it declines, by one bounded job. */
   def collectInternal(df: DataFrame, cap: Long): Option[IndexedSeq[InternalRow]] =
-    if (cap <= 0) None
-    else LocalEval.collectInternal(df, cap) match {
-      case Right(rows) => Some(rows)
-      case Left(LocalEval.OverCap) => None
-      case Left(_) =>
-        GraftBridge.collectWithin(df, cap)(_ => 1L).map(ArraySeq.unsafeWrapArray(_))
-    }
+    if (cap <= 0) None else withinCap(LocalEval.collectInternal(df, cap), df, cap)
 
-  /** The rows of a LocalEval outcome; a declined one runs `df` as one job. */
-  private def rowsOf(outcome: LocalEval.Outcome, df: => DataFrame,
-      cap: Long): Option[Array[Row]] = outcome match {
-    case LocalEval.Rows(rows) => Some(rows)
-    case LocalEval.OverCap => None
-    case LocalEval.Declined => boundedCollect(df, cap)
+  /** The one choice between the driver and a job: LocalEval's rows, `None`
+    * past `cap`, or where LocalEval declines, `df` as one job over every
+    * partition, each stopping after `cap + 1` rows, cancelled once the rows
+    * the driver has received pass `cap` (`GraftBridge.collectWithin`). */
+  private def withinCap(evaluated: Either[LocalEval.Outcome, IndexedSeq[InternalRow]],
+      df: => DataFrame, cap: Long): Option[IndexedSeq[InternalRow]] = evaluated match {
+    case Right(rows) => Some(rows)
+    case Left(LocalEval.OverCap) => None
+    case Left(_) => GraftBridge.collectWithin(df, cap)(_ => 1L).map(ArraySeq.unsafeWrapArray(_))
   }
 
-  /** `df`'s rows when there are at most `cap`, else `None`: one job over
-    * every partition, each stopping after `cap + 1` rows, cancelled once
-    * the rows the driver has received pass `cap`. */
-  private[graft] def boundedCollect(df: DataFrame, cap: Long): Option[Array[Row]] =
-    GraftBridge.collectWithin(df, cap)(_ => 1L)
-      .map(GraftBridge.toRows(df, _))
+  private def toRows(schema: StructType, rows: IndexedSeq[InternalRow]): Array[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.iterator.map(toRow(_).asInstanceOf[Row]).toArray
+  }
 
-  private def checkpoint(df: DataFrame): (DataFrame, Long) =
-    GraftBridge.localCheckpoint(df)
+  private def checkpoint(df: DataFrame): (DataFrame, Long) = {
+    val pinned = GraftBridge.localCheckpoint(df)
+    (pinned.df, pinned.count)
+  }
 
   private def frame(spark: SparkSession, schema: StructType,
       rows: IndexedSeq[Row]): DataFrame =

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
-import org.apache.spark.sql.GraftBridge.RoundInput
+import org.apache.spark.sql.GraftBridge.{DriverRowsScan, RoundInput}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, DeclarativeAggregate}
@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -103,11 +102,16 @@ object LocalEval {
   def collect(df: DataFrame, cap: Long): Outcome =
     compile(df).fold[Outcome](Declined)(run(_, Map.empty, cap))
 
-  /** [[collect]]'s rows in Catalyst form, unconverted: `Right(rows)`, or
+  /** [[run]]'s rows in Catalyst form, unconverted: `Right(rows)`, or
     * `Left` of [[OverCap]] or [[Declined]]. */
+  def runInternal(c: Compiled, bindings: Map[Long, Seq[Row]],
+      cap: Long): Either[Outcome, IndexedSeq[InternalRow]] =
+    evaluateInternal(c, bindings, cap, MaxWork)._1
+
+  /** [[collect]]'s rows in Catalyst form, as [[runInternal]] gives them. */
   def collectInternal(df: DataFrame, cap: Long): Either[Outcome, IndexedSeq[InternalRow]] =
     compile(df).fold[Either[Outcome, IndexedSeq[InternalRow]]](Left(Declined))(
-      evaluateInternal(_, Map.empty, cap, MaxWork)._1)
+      runInternal(_, Map.empty, cap))
 
   /** [[run]] under the budget `maxWork`, with the work it did (up to where
     * it stopped). */
@@ -156,17 +160,6 @@ object LocalEval {
   def driverLocal(p: LogicalPlan): Boolean = p.collectLeaves().forall {
     case _: LocalRelation | _: RoundInput | _: OneRowRelation | DriverRowsScan(_) => true
     case _ => false
-  }
-
-  /** A scan of rows the driver holds as a `GraftBridge.DriverRows` RDD. */
-  private object DriverRowsScan {
-    def unapply(p: LogicalPlan): Option[IndexedSeq[InternalRow]] = p match {
-      case r: LogicalRDD => r.rdd match {
-        case d: GraftBridge.DriverRows => Some(d.rows)
-        case _ => None
-      }
-      case _ => None
-    }
   }
 
   private final case class Stop(outcome: Outcome) extends ControlThrowable
@@ -332,7 +325,7 @@ object LocalEval {
   * with its rows sorted on the driver ([[LocalEval.sortRows]]). Spark's
   * `ConvertToLocalRelation` folds `Project`, `Filter` and `Limit` over a
   * `LocalRelation` but not `Sort`; this adds that case, so an ORDER BY
-  * over VALUES or over a table the driver holds plans no sort. It folds
+  * over VALUES plans no sort. It folds
   * only a deterministic, evaluable ordering over at most
   * [[Fixpoint.localRowCap]] rows, and nothing when the broadcast
   * threshold is -1. `GraftExtensions` injects it. */

@@ -6,11 +6,10 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.{Checkpoints, Fixpoint, LocalEval, QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** SQL sequences — NEXT VALUE FOR / CURRENT VALUE FOR
   * (reference: core/.../sql/fun/SqlStdOperatorTable.java:2206
@@ -25,10 +24,10 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * collected once, ordered and stamped on the driver, as the reference
   * evaluates row at a time. A larger one would collapse to one partition
   * under a global row_number, so it takes BLOCK RESERVATION, as
-  * production engines do: one tiny aggregation counts rows per partition,
-  * the driver atomically advances the counter by the total once, and
-  * each partition stamps its contiguous block with a partition-local
-  * row_number — no global window ever touches the data. Values are
+  * production engines do: the job that pins the input counts rows per
+  * partition, the driver atomically advances the counter by the total
+  * once, and each partition stamps its contiguous block by row position
+  * — no global window ever touches the data. Values are
   * gap-free and unique on both paths; with explicit order columns the
   * assignment is additionally DETERMINISTIC (a driver sort, or range
   * partitioning + in-partition sort), which is what the oracle query
@@ -132,7 +131,7 @@ object Sequences {
       }.toIndexedSeq
       GraftBridge.driverFrame(df.sparkSession, schema, stamped)
     }
-    onDriver.getOrElse(inBlocks(df, st, as, orderCols))
+    onDriver.getOrElse(inBlocks(df, st, schema, orderCols))
   }
 
   /** `orderCols` resolved against `df`'s output, as its `Sort` holds them;
@@ -146,43 +145,41 @@ object Sequences {
     }
 
   /** NEXT VALUE FOR by BLOCK RESERVATION, for an input too large for the
-    * driver: one aggregation counts rows per partition (one row per
-    * partition reaches the driver), the counter advances by the total
-    * once, and each partition stamps its contiguous block with a
-    * partition-local row_number. With `orderCols` the input is
-    * range-partitioned and each partition sorted, a total order.
+    * driver. One job pins the input as a local checkpoint and counts each
+    * partition's rows (`GraftBridge.localCheckpoint`); the counter then
+    * advances by the total once, and each partition stamps its contiguous
+    * block by row position, with no window, join or shuffle. With
+    * `orderCols` the input is range-partitioned and each partition sorted
+    * first, a total order.
     *
-    * The counting and the stamping pass must see the same partition
-    * layout (range partitioning samples its bounds per evaluation), so
-    * the partitioned input is persisted through
-    * [[graft.Checkpoints.persisted]]: the next invocation, or the
-    * harness's `releaseAll`, releases it.
+    * The counts hold only for the layout they were taken on (range
+    * partitioning samples its bounds per evaluation), and the pin fixes
+    * that layout for every later read of the result. The pin belongs to
+    * the result ([[graft.Checkpoints.ownedBy]]): a result the caller still
+    * holds stays readable after further invocations, and the pin is
+    * released once the result is unreachable, or by the harness's
+    * `releaseAll`.
     */
-  private def inBlocks(df: DataFrame, st: SeqState, as: String,
+  private def inBlocks(df: DataFrame, st: SeqState, schema: StructType,
       orderCols: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
     val parted =
-      if (orderCols.nonEmpty) df.repartitionByRange(orderCols: _*)
-      else df
-    val withPid = Checkpoints.persisted("next_value_for",
-      parted.withColumn("__pid", spark_partition_id()))
-    // one tiny collect: one row per partition → offsets computed on the
-    // driver (no window anywhere near the data)
-    val counts = withPid.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val base = st.reserve(total)
-    val offsets = counts.map(_._1)
-      .zip(counts.map(_._2).scanLeft(0L)(_ + _).init)
-    val offs = spark.createDataFrame(offsets.toSeq).toDF("__pid", "__off")
-    val localOrder = if (orderCols.nonEmpty) orderCols
-      else Seq(monotonically_increasing_id())
-    val local = row_number()
-      .over(Window.partitionBy(col("__pid")).orderBy(localOrder: _*))
-    withPid.join(broadcast(offs), "__pid")
-      .withColumn(as,
-        lit(base) + (col("__off") + local - lit(1L)) * lit(st.incrementBy))
-      .drop("__pid", "__off")
+      if (orderCols.isEmpty) df
+      else df.repartitionByRange(orderCols: _*).sortWithinPartitions(orderCols: _*)
+    val pinned = GraftBridge.localCheckpoint(parted)
+    val base = st.reserve(pinned.count)
+    val offsets = pinned.counts.scanLeft(0L)(_ + _)
+    val inc = st.incrementBy
+    val stamped = pinned.rdd.mapPartitionsWithIndex { (i, rows) =>
+      val toUnsafe = UnsafeProjection.create(schema)
+      val joined = new JoinedRow
+      val value = new GenericInternalRow(1)
+      rows.zipWithIndex.map { case (row, j) =>
+        value.setLong(0, base + (offsets(i) + j) * inc)
+        toUnsafe(joined(row, value)): InternalRow
+      }
+    }
+    Checkpoints.ownedBy(GraftBridge.rddFrame(df.sparkSession, schema, stamped, pinned.count),
+      pinned.rdd)
   }
 
   // ---- registry queries ----------------------------------------------------

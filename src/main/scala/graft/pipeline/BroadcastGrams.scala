@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{EqualByteCount, IntersectSizeSorted, MinHash}
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
@@ -73,13 +73,13 @@ private[graft] object BroadcastGrams {
     StructField("jac", DoubleType)))
 
   /** `task(corpus, t, tasks)` for t in 0 until `defaultParallelism`, as
-    * one job over the broadcast corpus. At most
-    * [[graft.Fixpoint.localRowCap]] pairs come back to the driver from
-    * that job ([[graft.Fixpoint.collectInternal]]) and are returned as
-    * `GraftBridge.DriverRows`, which `Dedup.clusters` reads with no
-    * further job; more are checkpointed under `key`, released by the next
-    * invocation, by running the pair job again. The broadcast is
-    * destroyed before the caller sees the result. */
+    * ONE job over the broadcast corpus ([[graft.Fixpoint.materialize]]).
+    * At most [[graft.Fixpoint.localRowCap]] pairs come back to the driver
+    * from that job and are returned as `GraftBridge.DriverRows`, which
+    * `Dedup.clusters` reads with no further job; more stay in the job's
+    * local checkpoint, registered under `key` and released by the next
+    * invocation. The broadcast is destroyed before the caller sees the
+    * result. */
   def run(spark: SparkSession, key: String, corpus: Corpus, schema: StructType)(
       task: (Corpus, Int, Int) => Iterator[Row]): DataFrame = {
     val sc = spark.sparkContext
@@ -88,10 +88,8 @@ private[graft] object BroadcastGrams {
     try {
       val rows = sc.parallelize(0 until tasks, tasks)
         .mapPartitions(_.flatMap(t => task(bc.value, t, tasks)))
-      val pairs = spark.createDataFrame(rows, schema)
       graft.Checkpoints.superseding(key,
-        graft.Fixpoint.collectInternal(pairs, graft.Fixpoint.localRowCap(pairs))
-          .fold(pairs.localCheckpoint(true))(GraftBridge.driverFrame(spark, schema, _)))
+        graft.Fixpoint.materialize(spark.createDataFrame(rows, schema)).df)
     } finally bc.destroy()
   }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans._
@@ -617,6 +617,9 @@ object RelToSql {
       // NULLs filtered by WHERE FALSE so the FROM clause — and the column
       // types — survive on engines that require one.
       case lr: LocalRelation => valuesRelation(lr.output, lr.data)
+      // rows the engine holds on the driver (a TableDdlSql table, a
+      // sequence's output) render as the same VALUES
+      case r @ GraftBridge.DriverRowsScan(rows) => valuesRelation(r.output, rows)
 
       // literal-only SELECT with no table (Spark's OneRowRelation; the
       // reference models it as a single-row Values)
@@ -850,7 +853,7 @@ object RelToSql {
       s"SELECT $cols FROM $fromSql GROUP BY GROUPING SETS ($setsSql)"
     }
 
-    /** VALUES rendering for LocalRelation — `(VALUES (…),(…)) tN(c1,…)`,
+    /** VALUES rendering for driver-held rows — `(VALUES (…),(…)) tN(c1,…)`,
       * the aliased-subquery form both Spark and DuckDB/ANSI parse. */
     private def valuesRelation(out: Seq[Attribute],
         data: Seq[org.apache.spark.sql.catalyst.InternalRow]): String = {

@@ -32,10 +32,15 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * again nor re-evaluates it: an INSERT of `current_timestamp()` reads
   * back the same instant every time (snapshot semantics), and
   * `rows_modified` is the count of the materialized rows. A table of at
-  * most [[graft.Fixpoint.localRowCap]] rows is one `LocalRelation` (CREATE
-  * builds it empty straight from the declared types), which Spark folds
-  * projections, filters and limits into and [[graft.FoldLocalSort]] folds
-  * ORDER BY into, so a read runs no job before its sink. Past the cap,
+  * most [[graft.Fixpoint.localRowCap]] rows is held on the driver as one
+  * `GraftBridge.DriverRows` frame (CREATE builds it empty straight from
+  * the declared types): its rows are packed once, a read ships them to
+  * its tasks with no Catalyst cost per row, and a table Spark would scan
+  * as one split is one partition, so an ORDER BY over it sorts in one
+  * task with no exchange. Not a `LocalRelation`: Catalyst maps over a
+  * `LocalRelation`'s rows in every rule that rewrites expressions, which
+  * made reads of a 600,000-row table four to ten times slower than
+  * re-scanning its parquet source (SCALING.md). Past the cap,
   * each further INSERT adds a part the table owns as a local checkpoint,
   * and DROP TABLE releases them. The table is exposed as a temp view
   * PROJECTING the virtual columns, so every read path (SQL, DataFrame,
@@ -382,8 +387,8 @@ object TableDdlSql {
 
   /** Adds `added` to the table: into its last part when both are held on
     * the driver, have the same types and together fit
-    * [[Fixpoint.localRowCap]], so a table under the cap stays one
-    * `LocalRelation`; as a part of its own otherwise. */
+    * [[Fixpoint.localRowCap]], so a table under the cap stays one frame of
+    * driver rows; as a part of its own otherwise. */
   private def append(spark: SparkSession, td: TableDef, added: Fixpoint.Round): Unit = {
     val last = td.parts.last
     val merged = for {

@@ -6,9 +6,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.StructType
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
@@ -29,8 +31,15 @@ object GraftBridge {
     * keys). */
   def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 
-  /** An eager local checkpoint of `df` and its row count, for fixpoint
-    * rounds. It differs from `Dataset.localCheckpoint` in two ways:
+  /** `df` materialized by ONE job that pins each of its partitions as a
+    * local checkpoint and counts its rows. When there are at most `cap`
+    * rows, the same job brings them back (packed, as [[collectWithin]]
+    * ships them): the result is `Left(rows)`, copied `UnsafeRow`s, and the
+    * pins are released. Otherwise it is `Right` of the checkpoint; a `cap`
+    * of -1 always pins. So the plan runs once on either side of the cap,
+    * where a bounded collect that overflows would run it again to
+    * checkpoint it. The checkpoint differs from `Dataset.localCheckpoint`
+    * in two ways:
     *  - it carries none of `df`'s constraints. `LogicalRDD.fromDataset`
     *    maps them onto the new output by attribute equality, which
     *    includes the qualifier, so a constraint on a column the optimizer
@@ -39,21 +48,64 @@ object GraftBridge {
     *    propagation (`key not found` in Union.rewriteConstraints). Its
     *    statistics are the exact row count instead;
     *  - when materializing throws, the blocks already pinned are freed. */
-  def localCheckpoint(df: DataFrame): (DataFrame, Long) = {
+  def materialize(df: DataFrame, cap: Long): Either[Array[InternalRow], Pinned] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val (rdd, n) = SQLExecution.withNewExecutionId(ds.queryExecution, Some("localCheckpoint")) {
-      val rdd = ds.queryExecution.toRdd.map(_.copy())
-      rdd.localCheckpoint()
-      try (rdd, rdd.count())
-      catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
-    }
     val session = ds.sparkSession
-    val stats = Statistics(
-      sizeInBytes = BigInt(n) * math.max(1, df.schema.defaultSize), rowCount = Some(n))
-    val plan = LogicalRDD(ds.queryExecution.analyzed.output.map(_.newInstance()), rdd)(
-      session, Some(stats), None)
-    (classic.Dataset.ofRows(session, plan), n)
+    val numFields = df.schema.length
+    val (rdd, counts, parts) =
+      SQLExecution.withNewExecutionId(ds.queryExecution, Some("materialize")) {
+        val rdd = ds.queryExecution.toRdd.map(_.copy())
+        rdd.localCheckpoint()
+        val counts = new Array[Long](rdd.getNumPartitions)
+        val parts = new Array[Array[Byte]](counts.length)
+        // the handler runs on the scheduler's thread, one result at a time
+        var total = 0L
+        def take(i: Int, part: (Long, Array[Byte])): Unit = {
+          counts(i) = part._1
+          total += part._1
+          if (total <= cap) parts(i) = part._2
+          else parts.indices.foreach(parts(_) = null)
+        }
+        try session.sparkContext.runJob(rdd, (_: TaskContext, it: Iterator[InternalRow]) => {
+          var n = 0L
+          val bytes = pack(it.map { row => n += 1; row }.takeWhile(_ => n <= cap))
+          it.foreach(_ => n += 1)
+          (n, if (n <= cap) bytes else null)
+        }, counts.indices, take _)
+        catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+        (rdd, counts.toIndexedSeq, parts)
+      }
+    if (counts.sum <= cap) {
+      rdd.unpersist(blocking = false)
+      Left(parts.flatMap(unpack(_, numFields)))
+    } else {
+      val output = ds.queryExecution.analyzed.output.map(_.newInstance())
+      Right(Pinned(frame(session, LogicalRDD(output, rdd)(session,
+        Some(statistics(counts.sum, df.schema)), None)), rdd, counts))
+    }
   }
+
+  /** A local checkpoint from [[materialize]]: its frame, its RDD (whose
+    * partition `i` holds `counts(i)` rows) and its row count. */
+  final case class Pinned(df: DataFrame, rdd: RDD[InternalRow], counts: IndexedSeq[Long]) {
+    def count: Long = counts.sum
+  }
+
+  /** An eager local checkpoint of `df`: [[materialize]] with a cap of -1. */
+  def localCheckpoint(df: DataFrame): Pinned = materialize(df, -1).toOption.get
+
+  /** A frame of `schema` over `rdd`, whose rows are `UnsafeRow`s. */
+  def rddFrame(spark: SparkSession, schema: StructType, rdd: RDD[InternalRow],
+      count: Long): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    frame(spark, LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(session,
+      Some(statistics(count, schema)), None))
+  }
+
+  /** Statistics of `rows` rows of `schema`: the exact count, and the
+    * size Spark estimates for it. */
+  private def statistics(rows: Long, schema: StructType): Statistics =
+    Statistics(sizeInBytes = BigInt(rows) * math.max(1, schema.defaultSize), rowCount = Some(rows))
 
   /** A fixpoint round's input as a plan leaf: the scan of a transient
     * table whose rows are bound each time the plan is evaluated
@@ -89,21 +141,17 @@ object GraftBridge {
   def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** A frame over `rows` of `schema` held on the driver: one
-    * `LocalRelation`, with no conversion of the rows. */
-  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
-    frame(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-
   /** Rows the driver holds, as an RDD: each partition is one byte array
     * of packed rows ([[pack]]) that its task unpacks, and the driver reads
     * `rows` with no job ([[graft.LocalEval]] evaluates plans over it). It
-    * stands in for a `LocalRelation` where the rows go on to tasks:
-    * Catalyst maps over a `LocalRelation`'s rows in every rule that
-    * rewrites its expressions, and `LocalTableScanExec` Java-serializes
-    * each row object into its task. Writing 150,000 two-BIGINT rows to
-    * the `noop` sink took 0.25–0.45 s as a `LocalRelation` (about 0.23 s
-    * of it analysis and optimization) and 0.05–0.07 s packed (local[4],
-    * 4-core VM). */
+    * is the one form of every relation the engine holds on the driver
+    * (`graft.Fixpoint.local`: DDL tables, pairs; sequence output), in
+    * place of a `LocalRelation`: Catalyst maps over a `LocalRelation`'s
+    * rows in every rule that rewrites its expressions, and
+    * `LocalTableScanExec` Java-serializes each row object into its task.
+    * Writing 150,000 two-BIGINT rows to the `noop` sink took 0.25–0.45 s
+    * as a `LocalRelation` (about 0.23 s of it analysis and optimization)
+    * and 0.05–0.07 s packed (local[4], 4-core VM). */
   final class DriverRows private[GraftBridge] (sc: SparkContext,
       @transient packed: Seq[Array[Byte]], numFields: Int,
       @transient val rows: IndexedSeq[InternalRow]) extends RDD[InternalRow](sc, Nil) {
@@ -116,19 +164,36 @@ object GraftBridge {
   private final class DriverRowsPartition(val index: Int, val bytes: Array[Byte])
       extends Partition
 
+  /** A scan of rows the driver holds as a [[DriverRows]] RDD: its rows. */
+  object DriverRowsScan {
+    def unapply(p: LogicalPlan): Option[IndexedSeq[InternalRow]] = p match {
+      case r: LogicalRDD => r.rdd match {
+        case d: DriverRows => Some(d.rows)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
   /** A frame over `rows` of `schema` held on the driver, as [[DriverRows]]
-    * split into the session's leaf parallelism. */
+    * cut as Spark cuts a file of the same estimated size into scan splits
+    * (`FilePartition.maxSplitBytes`, from `spark.sql.files.*`): at
+    * Spark's defaults, anything up to 4 MB is one partition. The plan
+    * knows a one-partition relation is one, so a global sort or an
+    * aggregate over it plans no exchange and runs in its one task. */
   def driverFrame(spark: SparkSession, schema: StructType, rows: IndexedSeq[InternalRow]): DataFrame = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val toUnsafe = UnsafeProjection.create(schema)
     val n = rows.size
-    val slices = math.max(1, math.min(n, session.leafNodeDefaultParallelism))
+    val stats = statistics(n, schema)
+    val split = FilePartition.maxSplitBytes(session, stats.sizeInBytes.toLong)
+    val slices = math.max(1, math.min(n, ((stats.sizeInBytes + split - 1) / split).toInt))
     val packed = (0 until slices).map(i =>
       pack(rows.iterator.slice(i * n / slices, (i + 1) * n / slices).map(toUnsafe)))
     val rdd = new DriverRows(session.sparkContext, packed, schema.length, rows)
-    val stats = Statistics(
-      sizeInBytes = BigInt(n) * math.max(1, schema.defaultSize), rowCount = Some(n))
-    frame(spark, LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(session, Some(stats), None))
+    val partitioning = if (slices == 1) SinglePartition else UnknownPartitioning(slices)
+    frame(spark, LogicalRDD(DataTypeUtils.toAttributes(schema), rdd, partitioning)(session,
+      Some(stats), None))
   }
 
   private val collectIds = new AtomicLong()
@@ -204,14 +269,6 @@ object GraftBridge {
       row.pointTo(b, b.length)
       row: InternalRow
     }
-  }
-
-  /** `rows` of `df`'s row type as external `Row`s, as `collect` returns them. */
-  def toRows(df: DataFrame, rows: Array[InternalRow]): Array[Row] = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val toRow = ds.exprEnc.resolveAndBind(ds.queryExecution.analyzed.output,
-      ds.sparkSession.sessionState.analyzer).createDeserializer()
-    rows.map(toRow)
   }
 
   /** Returns once Spark's listener bus has delivered every event posted so

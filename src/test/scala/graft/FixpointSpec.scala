@@ -295,23 +295,26 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("the bounded collect runs one job: over cap, empty and exactly cap rows") {
-    // four partitions of a file-like leaf, which LocalEval declines
+    // four partitions of a file-like leaf, which LocalEval declines, so
+    // collectUpTo takes its bounded job
     val ten = spark.range(0, 10, 1, 4).toDF("v")
     def values(rows: Option[Array[Row]]): Option[Seq[Long]] = rows.map(_.map(_.getLong(0)).toSeq)
-    val (exact, exactJobs) = jobsDuring(Fixpoint.boundedCollect(ten, 10))
+    val (exact, exactJobs) = jobsDuring(Fixpoint.collectUpTo(ten, 10))
     assert(values(exact) == Some(0L until 10) && exactJobs == 1)
-    val (over, overJobs) = jobsDuring(Fixpoint.boundedCollect(ten, 9))
+    val (over, overJobs) = jobsDuring(Fixpoint.collectUpTo(ten, 9))
     assert(over.isEmpty && overJobs == 1)
-    val (empty, emptyJobs) = jobsDuring(Fixpoint.boundedCollect(ten.where(col("v") < 0), 10))
+    val (empty, emptyJobs) = jobsDuring(Fixpoint.collectUpTo(ten.where(col("v") < 0), 10))
     assert(values(empty) == Some(Nil) && emptyJobs == 1)
-    // through materialize: a long row is 8 bytes, so an 80-byte threshold caps a round at 10
+    // through materialize: a long row is 8 bytes, so an 80-byte threshold
+    // caps a round at 10; one job on either side of the cap
     val prev = spark.conf.getOption(threshold)
     spark.conf.set(threshold, "80")
     try {
-      val local = Fixpoint.materialize(ten)
-      assert(local.rows.map(_.map(_.getLong(0))) == Some(0L until 10))
-      val large = Fixpoint.materialize(spark.range(0, 11, 1, 4).toDF("v"))
-      assert(!large.local && large.df.count() == 11)
+      val (local, localJobs) = jobsDuring(Fixpoint.materialize(ten))
+      assert(local.rows.map(_.map(_.getLong(0))) == Some(0L until 10) && localJobs == 1)
+      val (large, largeJobs) = jobsDuring(Fixpoint.materialize(spark.range(0, 11, 1, 4).toDF("v")))
+      assert(!large.local && large.count == 11 && largeJobs == 1)
+      assert(large.df.count() == 11)
       Fixpoint.release(large)
     } finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }

@@ -123,6 +123,27 @@ class MinhashBroadcastSpec extends AnyFunSuite {
     }
   }
 
+  test("pairs past the driver cap stay in the pair job's checkpoint: still two jobs") {
+    // 60 copies of one 20-character text: 1,770 pairs. At 12,000 bytes the
+    // corpus's ids and grams (8 bytes each, at most 60 * 21 of them) fit
+    // the threshold, but only 500 pairs of 24 bytes fit the driver
+    val text = new scala.util.Random(5).alphanumeric.take(20).mkString
+    withCorpus((0 until 60).map(i => (i.toLong, "s", text))) { dir =>
+      val corpus = Tables.t(spark, dir, "documents")
+      val prev = spark.conf.getOption(threshold)
+      spark.conf.set(threshold, "12000")
+      try {
+        for (pairs <- Seq(Dedup.minhashPairs(corpus, threshold = 0.6),
+            Dedup.ngramJaccardPairs(spark, dir)))
+          assert(!LocalEval.driverLocal(pairs.queryExecution.analyzed),
+            "the pairs were held on the driver")
+        val lsh = bothPaths(Dedup.minhashPairs(corpus, threshold = 0.6))
+        assert(lsh.size == 60 * 59 / 2)
+        assert(bothPaths(Dedup.ngramJaccardPairs(spark, dir)).size == 60 * 59 / 2)
+      } finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    }
+  }
+
   test("an empty corpus: both paths return no pairs, with one schema") {
     withCorpus(Seq((1L, "s", "abc")).filter(_ => false)) { dir =>
       val corpus = Tables.t(spark, dir, "documents")

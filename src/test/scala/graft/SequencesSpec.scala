@@ -165,6 +165,30 @@ class SequencesSpec extends AnyFunSuite {
     }
   }
 
+  test("blocks: a result read after later invocations keeps its values, until releaseAll") {
+    inBlocks {
+      operators.Sequences.create(spark, "held_seq", startWith = 1L, incrementBy = 1L,
+        replace = true)
+      def pinned = spark.sparkContext.getPersistentRDDs.keySet
+      val before = pinned
+      // 2,003 is prime, so id * 7919 % 2003 is a permutation of 0 until 2000
+      val keys = spark.range(0, 2000, 1, 16).select((col("id") * 7919 % 2003).as("k"))
+      val first = operators.Sequences.nextValueFor(keys.repartition(16), "held_seq", "v",
+        Seq(col("k")))
+      // later invocations over new range partitionings, before the first is read
+      val later = (1 to 2).map(_ => operators.Sequences.nextValueFor(keys.repartition(16),
+        "held_seq", "v", Seq(col("k"))))
+      for ((df, i) <- (first +: later).zipWithIndex) {
+        val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+        assert(got.map(_._2) == (1L to 2000L).map(_ + 2000L * i), s"invocation $i")
+      }
+      val held = pinned -- before
+      assert(held.size == 3, "each result holds one pin")
+      Checkpoints.releaseAll(spark)
+      assert((pinned intersect held).isEmpty, "releaseAll left a result's pin")
+    }
+  }
+
   test("reservation is execution-time: parse and EXPLAIN never advance (r6 ADVICE)") {
     spark.sql("DROP SEQUENCE IF EXISTS lazy_seq")
     spark.sql("CREATE SEQUENCE lazy_seq")

@@ -154,12 +154,15 @@ class TableDdlSpec extends AnyFunSuite {
     sql("drop table tvals")
   }
 
-  test("a table under the cap is read, ordered, with no job") {
+  test("a table under the cap is one partition: an ordered read runs one job, no exchange") {
     sql("create table tlocal (i int, j int default i * 10)")
     sql("insert into tlocal (i) values (3), (1), (2)")
-    val (got, jobs) = jobsDuring(rows("select i, j from tlocal order by i desc"))
+    val read = sql("select i, j from tlocal order by i desc")
+    val (got, jobs) = jobsDuring(read.collect().map(_.toSeq).toSeq)
     assert(got == Seq(Seq(3, 30), Seq(2, 20), Seq(1, 10)))
-    assert(jobs == 0)
+    assert(jobs == 1)
+    val plan = read.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
     sql("drop table tlocal")
   }
 

@@ -24,10 +24,12 @@ class TpchCycleSpec extends AnyFunSuite {
     * (SerializeFromObject/LogicalRDD from mapGroups/driver loops), and
     * expressions no dialect renders yet. */
   private val mustCycle = Set(
-    // the fixpoint results held on the driver are LocalRelations, which
-    // render as VALUES
+    // results held on the driver, as LocalRelations or DriverRows scans
+    // (fixpoint results, DDL tables, sequence output, pairs), render as
+    // VALUES
     "dedup_clusters", "recursive_closure", "recursive_series",
-    "ddl_ctas_typed", "ddl_default_virtual",
+    "ddl_ctas_typed", "ddl_default_virtual", "seq_next_value",
+    "dedup_minhash_lsh", "dedup_minhash_portable", "dedup_ngram_jaccard",
     "agg_cube", "agg_distinct_filter", "agg_group_id", "agg_grouping_fn",
     "agg_grouping_sets", "agg_rollup", "agg_tpch_q1", "fn_extract_time",
     "foodmart_allmembers_crossjoin", "foodmart_banding",
